@@ -52,7 +52,7 @@ object BenchStream {
     graft.dedup.UrlFrontier.saveIndex(
       graft.dedup.UrlFrontier.buildIndex(ref, "doc_id", "url"), s"$base/frontier")
     graft.dedup.Incremental.saveIndex(
-      graft.dedup.Incremental.buildIndex(ref, "doc_id", "text", native = true),
+      graft.dedup.Incremental.buildIndex(ref, "doc_id", "text"),
       s"$base/incindex")
 
     /** Writes `waves` arrival waves of `input` and times the twin's

@@ -114,11 +114,7 @@ object EtlBench {
       dedupDefault = DedupConfig(enable = true),
       // GRAFT_ETL_MAX_PER_FILE caps records per output file (file rolling
       // inside hot bins — the production knob for splittable output)
-      maxRecordsPerFile = sys.env.get("GRAFT_ETL_MAX_PER_FILE").map(_.toLong),
-      // GRAFT_ETL_DEDUP_SALTED=1 A/Bs the keep-last strategy (two-phase
-      // max_by aggregation vs the window sort) — see RestructureConfig
-      // .dedupSalted and the BENCHSCALE.md 100M-record rows
-      dedupSalted = sys.env.get("GRAFT_ETL_DEDUP_SALTED").contains("1"))
+      maxRecordsPerFile = sys.env.get("GRAFT_ETL_MAX_PER_FILE").map(_.toLong))
     val job = new Restructure(spark, cfg)
     // task-level memory/spill stats ride the measured pass — the 10x/
     // scale rehearsal question is whether the dynamic-partition write

@@ -1654,11 +1654,11 @@ object Queries {
       .orderBy(col("doc_id"))
 
   def minhashSignature(s: SparkSession, dir: String): DataFrame =
-    MinHash.bands(t(s, dir, "documents"), "doc_id", "text", native = true)
+    MinHash.bands(t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id"))
 
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    MinHash.candidatePairs(t(s, dir, "documents"), "doc_id", "text", native = true)
+    MinHash.candidatePairs(t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("id_1"), col("id_2"))
 
   /** D1 via the skew-tolerant two-phase salted formulation — same semantics
@@ -1673,8 +1673,7 @@ object Queries {
   /** SimHash near-duplicate pairs: pigeonhole half-band blocking + exact
     * Hamming filter. */
   def simhashNearDup(s: SparkSession, dir: String): DataFrame =
-    SimHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text", maxBits = 2,
-      native = true)
+    SimHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text", maxBits = 2)
       .select(col("id_1"), col("id_2"), col("hamming").cast(LongType).as("hamming"))
       .orderBy(col("id_1"), col("id_2"))
 
@@ -1687,14 +1686,13 @@ object Queries {
     * 100 TB run would use. */
   def simhash64NearDup(s: SparkSession, dir: String): DataFrame =
     SimHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text", maxBits = 3,
-      bits = 64, native = true)
+      bits = 64)
       .select(col("id_1"), col("id_2"), col("hamming").cast(LongType).as("hamming"))
       .orderBy(col("id_1"), col("id_2"))
 
   /** MinHash LSH candidates refined by exact shingle-set Jaccard. */
   def minhashNearDup(s: SparkSession, dir: String): DataFrame =
-    MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text", minBp = 5000L,
-      native = true)
+    MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text", minBp = 5000L)
       .orderBy(col("id_1"), col("id_2"))
 
   /** First-occurrence n-gram novelty (the RefinedWeb-style repetition
@@ -1733,7 +1731,7 @@ object Queries {
       when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
         .as("split"))
     MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-        minBp = 5000L, native = true)
+        minBp = 5000L)
       .join(split.select(col("doc_id").as("id_1"), col("split").as("s1")), "id_1")
       .join(split.select(col("doc_id").as("id_2"), col("split").as("s2")), "id_2")
       .select(least(col("s1"), col("s2")).as("split_a"),
@@ -1760,7 +1758,7 @@ object Queries {
     * need no verify pass here. */
   def lshRecall(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val sets = MinHash.withShingles(docs, "doc_id", "text", native = true)
+    val sets = MinHash.withShingles(docs, "doc_id", "text")
       .select(col("doc_id"), array_distinct(col("__sh")).as("sh"))
     val exploded = sets.select(col("doc_id"), explode(col("sh")).as("x"))
       .repartition(col("x"))
@@ -1781,7 +1779,7 @@ object Queries {
         floor(col("inter").cast(DoubleType) * 10000d /
           (col("na.n") + col("nb.n") - col("inter")).cast(DoubleType)).cast(LongType))
       .filter(col("jaccard_bp") >= 1)
-    val caught = MinHash.candidatePairs(docs, "doc_id", "text", native = true)
+    val caught = MinHash.candidatePairs(docs, "doc_id", "text")
       .select(col("id_1"), col("id_2"))
     val bucketed = exact.withColumn("bucket",
       expr("least(jaccard_bp, 9999) div 1000"))
@@ -1821,7 +1819,7 @@ object Queries {
   def neardupBySource(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val src = docs.select(col("doc_id"), col("source"))
-    MinHash.nearDuplicates(docs, "doc_id", "text", minBp = 5000L, native = true)
+    MinHash.nearDuplicates(docs, "doc_id", "text", minBp = 5000L)
       .join(src.as("da"), col("id_1") === col("da.doc_id"))
       .join(src.as("db"), col("id_2") === col("db.doc_id"))
       .select(
@@ -2018,7 +2016,7 @@ object Queries {
     * id over the same pair graph. */
   def neardupComponents(s: SparkSession, dir: String): DataFrame = {
     val pairs = MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-      minBp = 5000L, native = true)
+      minBp = 5000L)
     ConnectedComponents.run(pairs, "id_1", "id_2")
       .select(col("node").as("doc_id"), col("component"))
       .orderBy(col("doc_id"))
@@ -2053,7 +2051,7 @@ object Queries {
     * first round. */
   def kcoreDocs(s: SparkSession, dir: String): DataFrame = {
     val pairs = MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-      minBp = 5000L, native = true)
+      minBp = 5000L)
     val edges = pairs.select(col("id_1").as("u"), col("id_2").as("v"))
       .unionByName(pairs.select(col("id_2").as("u"), col("id_1").as("v")))
     KCore.run(edges, "u", "v", k = 2, rounds = 4)
@@ -2200,7 +2198,7 @@ object Queries {
         col("units_removed"), lit("docs").as("unit"))
     val near = {
       val pairs = MinHash.nearDuplicates(docs, "doc_id", "text",
-        minBp = 5000L, native = true)
+        minBp = 5000L)
       ConnectedComponents.run(pairs, "id_1", "id_2")
         .filter(col("node") =!= col("component"))
         .agg(count(lit(1)).as("docs_affected"), count(lit(1)).as("units_removed"))
@@ -2230,7 +2228,7 @@ object Queries {
     * collapses to O(distinct sizes) rows. */
   def neardupClusterSizes(s: SparkSession, dir: String): DataFrame = {
     val pairs = MinHash.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-      minBp = 5000L, native = true)
+      minBp = 5000L)
     ConnectedComponents.run(pairs, "id_1", "id_2")
       .groupBy(col("component")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
@@ -2270,7 +2268,7 @@ object Queries {
   def clusterBest(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val pairs = MinHash.nearDuplicates(docs, "doc_id", "text",
-      minBp = 5000L, native = true)
+      minBp = 5000L)
     val comp = ConnectedComponents.run(pairs, "id_1", "id_2")
       .select(col("node").as("doc_id"), col("component"))
     val scored = qualityEnsemble(s, dir).select(col("doc_id"), col("score"))
@@ -2295,7 +2293,7 @@ object Queries {
     * the three unrolled iterations bit-for-bit. */
   def docPageRank(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = MinHash.candidatePairs(docs, "doc_id", "text", native = true)
+    val pairs = MinHash.candidatePairs(docs, "doc_id", "text")
       .select(col("id_1"), col("id_2"))
     val edges = pairs.union(pairs.select(col("id_2"), col("id_1")))
       .toDF("src", "dst")
@@ -2313,7 +2311,7 @@ object Queries {
     * unrolled rounds exactly. */
   def labelSpread(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = MinHash.candidatePairs(docs, "doc_id", "text", native = true)
+    val pairs = MinHash.candidatePairs(docs, "doc_id", "text")
       .select(col("id_1"), col("id_2"))
     val edges = pairs.union(pairs.select(col("id_2"), col("id_1")))
       .toDF("src", "dst")
@@ -2335,7 +2333,7 @@ object Queries {
     * Spark plan keeps the skew-proof orientation. */
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = MinHash.candidatePairs(docs, "doc_id", "text", native = true)
+    val pairs = MinHash.candidatePairs(docs, "doc_id", "text")
     Triangles.perNode(docs.select(col("doc_id")), "doc_id", pairs, "id_1", "id_2")
       .select(col("node").as("doc_id"), col("degree"), col("n_triangles"))
       .orderBy(col("doc_id"))
@@ -2378,7 +2376,7 @@ object Queries {
     * semantics "over the df-capped sets" — exact, and identical to
     * unfiltered when the cap exceeds the corpus max df. */
   private def dfCappedPairBackbone(d: DataFrame): (DataFrame, DataFrame) = {
-    val sets = MinHash.withShingles(d, "doc_id", "text", native = true)
+    val sets = MinHash.withShingles(d, "doc_id", "text")
       .select(col("doc_id"), array_distinct(col("__sh")).as("sh"))
     val occ = sets.select(col("doc_id"), explode(col("sh")).as("x"))
       .repartition(col("x"))
@@ -2459,7 +2457,7 @@ object Queries {
     * df cap active so the capped candidate generation is oracle-covered. */
   def jaccardPpjoin(s: SparkSession, dir: String): DataFrame =
     Jaccard.pairs(t(s, dir, "documents"), "doc_id", "text", minBp = 8000L,
-      native = true, maxDf = NgramMaxDf)
+      maxDf = NgramMaxDf)
       .orderBy(col("id_1"), col("id_2"))
 
   /** Prefix-filtered formulation of containment_pairs (the scale path: the
@@ -2482,7 +2480,7 @@ object Queries {
     * fixed combo on BOTH shapes). */
   def containmentPpjoin(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Containment.pairs(t(s, dir, "documents"), "doc_id", "text",
-      minBp = 9000L, native = true, maxDf = NgramMaxDf)
+      minBp = 9000L, maxDf = NgramMaxDf)
       .orderBy(col("id_1"), col("id_2"))
 
   /** Prefix-filtered formulation of subset_docs — same oracle as
@@ -2499,7 +2497,7 @@ object Queries {
     * the C(m,2) hazard it prevents (TemplateRehearsal measures both). */
   def subsetPpjoin(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Containment.subsets(t(s, dir, "documents"), "doc_id", "text",
-      minBp = 9000L, native = true, maxDf = NgramMaxDf, collapseSiblings = false)
+      minBp = 9000L, maxDf = NgramMaxDf, collapseSiblings = false)
       .orderBy(col("doc_id"))
 
   /** IVF ANN top-k at nprobe < nlist — the list-partitioned scale path for
@@ -2575,7 +2573,7 @@ object Queries {
   def cosineTopK(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     Similarity.bruteForceTopK(
-      emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10, native = true)
+      emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id", "dot", "rank")
       .orderBy(col("query_id"), col("rank"))
   }
@@ -2611,8 +2609,7 @@ object Queries {
   }
 
   def embeddingNearDup(s: SparkSession, dir: String): DataFrame =
-    Similarity.lshNearDuplicates(t(s, dir, "embeddings"), "vec_id", "embedding", 400000L,
-      native = true)
+    Similarity.lshNearDuplicates(t(s, dir, "embeddings"), "vec_id", "embedding", 400000L)
       .orderBy(col("id_1"), col("id_2"))
 
   /** Product-quantization ADC top-k — the compressed-corpus scale path for
@@ -3167,7 +3164,7 @@ object Queries {
     val docs = t(s, dir, "documents")
     Incremental.survivors(
       docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
-      "doc_id", "text", minBp = 8000L, native = true)
+      "doc_id", "text", minBp = 8000L)
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
   }

@@ -80,12 +80,11 @@ object TemplateRehearsal {
         // collapsed plan here), then the fixed knobs; the knob-off leg is
         // the documented blowup and runs last
         val auto = run("auto")(graft.dedup.Containment.subsetsAuto(
-          planted, "doc_id", "text", minBp, native = true))
+          planted, "doc_id", "text", minBp))
         val on = run("collapse=on")(graft.dedup.Containment.subsets(
-          planted, "doc_id", "text", minBp, native = true))
+          planted, "doc_id", "text", minBp))
         val off = run("collapse=off")(graft.dedup.Containment.subsets(
-          planted, "doc_id", "text", minBp, native = true,
-          maxDf = Long.MaxValue, collapseSiblings = false))
+          planted, "doc_id", "text", minBp, maxDf = Long.MaxValue, collapseSiblings = false))
         require(auto == on && on == off,
           s"flag sets diverge (rows, checksum): auto=$auto on=$on off=$off")
         println(s"[template] identical flag sets: ${auto._1} flags all three ways")
@@ -96,13 +95,13 @@ object TemplateRehearsal {
         // the fixed knobs; the knob-off leg is the documented blowup
         val auto = run("auto")(graft.dedup.Jaccard.pairsAuto(
           planted, "doc_id", "text", minBp,
-          native = true, maxDf = Long.MaxValue, directMaxDocs = 0L))
+          maxDf = Long.MaxValue, directMaxDocs = 0L))
         val withCollapse = run("collapse=on")(graft.dedup.Jaccard.pairs(
           planted, "doc_id", "text", minBp,
-          native = true, maxDf = Long.MaxValue, collapseSiblings = true))
+          maxDf = Long.MaxValue, collapseSiblings = true))
         val without = run("collapse=off")(graft.dedup.Jaccard.pairs(
           planted, "doc_id", "text", minBp,
-          native = true, maxDf = Long.MaxValue, collapseSiblings = false))
+          maxDf = Long.MaxValue, collapseSiblings = false))
         require(auto == withCollapse && withCollapse == without,
           s"pair sets diverge (rows, checksum): auto=$auto " +
             s"collapse=$withCollapse direct=$without")

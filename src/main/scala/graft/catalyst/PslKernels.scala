@@ -6,9 +6,8 @@ import graft.functions.Psl
 
 /** Single-call Public Suffix List lookup backing `graft_psl_labels`.
   *
-  * Same contract as the columnar form it replaces
-  * ([[graft.functions.Psl.publicSuffixLabelsColumnar]], kept as the
-  * parity reference): exception rules first (longest wins, suffix =
+  * Same contract as the InSet-literal columnar form it replaced (kept as
+  * the test-scope parity reference of PslPropertySpec): exception rules first (longest wins, suffix =
   * rule minus one label), then normal/wildcard rules in descending
   * effective length, then the default rule (1 label).
   *

@@ -180,7 +180,14 @@ case class PslLabels(child: Expression) extends TextHashUnary {
 /** Session extension registering the engine's native functions.
   * `SparkSession.builder.withExtensions(new GraftExtensions)` (done by
   * graft.Sessions.build) or
-  * `--conf spark.sql.extensions=graft.catalyst.GraftExtensions`. */
+  * `--conf spark.sql.extensions=graft.catalyst.GraftExtensions`.
+  *
+  * Every dedup and similarity operator has exactly one implementation,
+  * and it calls these `graft_*` functions: MinHash, SimHash, Jaccard,
+  * Containment, Incremental, Winnow, SpanDedup, ChunkDedup, Similarity,
+  * BQ, PQ and the PSL lookups all need a session built with this
+  * extension. In any other session they fail at analysis with an
+  * unresolved-function error. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     def register(name: String, build: Seq[Expression] => Expression): Unit =

@@ -41,6 +41,10 @@ import org.apache.spark.sql.types._
   * sets and compute the true intersection with array_intersect, so the
   * output is identical to the direct co-occurrence plan — both are pinned
   * by the same DuckDB oracle.
+  *
+  * Shingle sets come from the graft_shingles kernel ([[Jaccard.cappedSets]]),
+  * so every entry point needs a session with
+  * [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`).
   */
 object Containment {
 
@@ -110,7 +114,6 @@ object Containment {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       collapseSiblings: Boolean = true,
       positionalFilter: Boolean = true): DataFrame = {
@@ -118,7 +121,7 @@ object Containment {
     // truncate the multiply-consumed sets lineage — rationale on
     // [[Jaccard.pairs]]; the auto dispatch materializes via its own seam
     pairsFromSets(
-      graft.Lineage.truncate(Jaccard.cappedSets(df, idCol, textCol, native, maxDf)),
+      graft.Lineage.truncate(Jaccard.cappedSets(df, idCol, textCol, maxDf)),
       minBp, collapseSiblings, positionalFilter)
   }
 
@@ -185,7 +188,6 @@ object Containment {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       collapseSiblings: Boolean = true,
       positionalFilter: Boolean = false): DataFrame = {
@@ -196,7 +198,7 @@ object Containment {
     // direction probe + both verification builds — none meet at a
     // reusable exchange); the collapsed body re-plans it per consumer.
     val capped =
-      graft.Lineage.truncate(Jaccard.cappedSets(df, idCol, textCol, native, maxDf))
+      graft.Lineage.truncate(Jaccard.cappedSets(df, idCol, textCol, maxDf))
     if (collapseSiblings) subsetsCollapsed(capped, minBp, positionalFilter)
     else subsetsPlain(capped, minBp, positionalFilter)
   }
@@ -327,12 +329,11 @@ object Containment {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       materialize: Boolean = true,
       positionalMinDocs: Long = PositionalMinDocs): DataFrame = {
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
-    def mk(cap: Long) = Jaccard.cappedSets(df, idCol, textCol, native, cap)
+    def mk(cap: Long) = Jaccard.cappedSets(df, idCol, textCol, cap)
     def run(sets: DataFrame, nDocs: Long, pairMass: Long): DataFrame = {
       val positional = nDocs >= positionalMinDocs
       if (pairMass > nDocs) subsetsCollapsed(sets, minBp, positional)
@@ -363,10 +364,9 @@ object Containment {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue): DataFrame = {
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
-    pairsDirectFromSets(Jaccard.cappedSets(df, idCol, textCol, native, maxDf), minBp)
+    pairsDirectFromSets(Jaccard.cappedSets(df, idCol, textCol, maxDf), minBp)
   }
 
   /** [[pairsDirect]] body over a pre-built capped sets frame (the
@@ -400,7 +400,6 @@ object Containment {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       directMaxDocs: Long = Jaccard.DirectMaxDocs,
       materialize: Boolean = true,
@@ -409,7 +408,7 @@ object Containment {
     // the require-less FromSets seam
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
     Jaccard.autoDispatch(df, directMaxDocs, materialize, maxDf)(
-      mkSets = (input, cap) => Jaccard.cappedSets(input, idCol, textCol, native, cap),
+      mkSets = (input, cap) => Jaccard.cappedSets(input, idCol, textCol, cap),
       directFromSets = sets => pairsDirectFromSets(sets, minBp),
       fromSets = (sets, collapse, nDocs) =>
         pairsFromSets(sets, minBp, collapse,

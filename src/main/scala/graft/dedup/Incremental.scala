@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.text.{Hashing, Text}
+import graft.text.Hashing
 
 /** Incremental (cross-corpus) deduplication: dedup a NEW batch against an
   * existing REFERENCE corpus — the crawl-refresh shape, where the
@@ -24,6 +24,10 @@ import graft.text.{Hashing, Text}
   * collides with. Within-batch duplicates are deliberately untouched —
   * this operator's contract is purely "not already in the reference"; run
   * the normal in-corpus dedup on the batch separately.
+  *
+  * Fingerprints, band keys and shingle sets come from the `graft_*`
+  * kernels, so building an index or computing survivors needs a session
+  * with [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`).
   */
 object Incremental {
 
@@ -36,10 +40,9 @@ object Incremental {
     * are reference-text-free. */
   final case class Index(fps: DataFrame, bands: DataFrame, sets: DataFrame)
 
-  private def fp(d: DataFrame, idCol: String, textCol: String, native: Boolean) =
+  private def fp(d: DataFrame, idCol: String, textCol: String) =
     d.select(col(idCol).as("__id"),
-      (if (native) call_function("graft_fingerprint", col(textCol))
-       else Text.fingerprint(col(textCol))).as("__fp"))
+      call_function("graft_fingerprint", col(textCol)).as("__fp"))
 
   // docs under 3 tokens have EMPTY shingle sets and all share the P-1
   // sentinel signature — without this prefilter every short new doc
@@ -47,31 +50,30 @@ object Incremental {
   // blow-up) only for the Jaccard verify to discard each pair; dropping
   // them from the band legs is semantics-neutral (the exact-fingerprint
   // guard still catches short duplicates)
-  private def bandKeys(d: DataFrame, idCol: String, textCol: String, native: Boolean) = {
+  private def bandKeys(d: DataFrame, idCol: String, textCol: String) = {
     val keys = (0 until Hashing.Bands)
       .map(b => concat_ws("#", lit(b), col(s"band_$b")))
     MinHash.bands(d.filter(size(split(col(textCol), " ")) >= 3),
-        idCol, textCol, native = native)
+        idCol, textCol)
       .select(col(idCol).as("__id"), explode(array(keys: _*)).as("__key"))
   }
 
   // same >=3-token guard as bandKeys: candidates only ever reference docs
   // with band keys, so an empty-shingle doc's set row is dead weight in the
   // persisted index and in every refresh's verify join
-  private def sets(d: DataFrame, idCol: String, textCol: String, native: Boolean) =
+  private def sets(d: DataFrame, idCol: String, textCol: String) =
     MinHash.withShingles(d.filter(size(split(col(textCol), " ")) >= 3),
-        idCol, textCol, native)
+        idCol, textCol)
       .select(col(idCol).as("__sid"), array_distinct(col("__sh")).as("__set"))
 
   /** One pass over the reference text -> the three index projections. */
   def buildIndex(
       refDocs: DataFrame,
       idCol: String,
-      textCol: String,
-      native: Boolean = false): Index = Index(
-    fps = fp(refDocs, idCol, textCol, native),
-    bands = bandKeys(refDocs, idCol, textCol, native),
-    sets = sets(refDocs, idCol, textCol, native))
+      textCol: String): Index = Index(
+    fps = fp(refDocs, idCol, textCol),
+    bands = bandKeys(refDocs, idCol, textCol),
+    sets = sets(refDocs, idCol, textCol))
 
   /** Persist an index as three parquet tables under `path`. `bands` is
     * written partitioned-friendly (plain parquet; a production deployment
@@ -98,18 +100,17 @@ object Incremental {
       index: Index,
       idCol: String,
       textCol: String,
-      minBp: Long,
-      native: Boolean): DataFrame = {
-    val exactDrop = fp(newDocs, idCol, textCol, native)
+      minBp: Long): DataFrame = {
+    val exactDrop = fp(newDocs, idCol, textCol)
       .join(index.fps.select(col("__fp")), Seq("__fp"), "left_semi")
       .select(col("__id"))
 
-    val cand = bandKeys(newDocs, idCol, textCol, native).as("n")
+    val cand = bandKeys(newDocs, idCol, textCol).as("n")
       .join(index.bands.as("r"), col("n.__key") === col("r.__key"))
       .select(col("n.__id").as("nid"), col("r.__id").as("rid"))
       .distinct()
     val nearDrop = cand
-      .join(sets(newDocs, idCol, textCol, native).as("sa"), col("nid") === col("sa.__sid"))
+      .join(sets(newDocs, idCol, textCol).as("sa"), col("nid") === col("sa.__sid"))
       .join(index.sets.as("sb"), col("rid") === col("sb.__sid"))
       .withColumn("inter",
         size(array_intersect(col("sa.__set"), col("sb.__set"))).cast(LongType))
@@ -135,8 +136,7 @@ object Incremental {
       refDocs: DataFrame,
       idCol: String,
       textCol: String,
-      minBp: Long,
-      native: Boolean = false): DataFrame =
-    survivors(newDocs, buildIndex(refDocs, idCol, textCol, native),
-      idCol, textCol, minBp, native)
+      minBp: Long): DataFrame =
+    survivors(newDocs, buildIndex(refDocs, idCol, textCol),
+      idCol, textCol, minBp)
 }

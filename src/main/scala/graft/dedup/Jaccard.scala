@@ -23,6 +23,10 @@ import org.apache.spark.sql.types._
   * hot shingle buckets that drive the quadratic blowup are exactly the
   * ones pruned. At a 0.8 threshold that is a ~5x smaller join input and a
   * candidate set close to the true result size.
+  *
+  * Shingle sets come from the graft_shingles kernel ([[cappedSets]]), so
+  * every entry point needs a session with
+  * [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`).
   */
 object Jaccard {
 
@@ -46,9 +50,8 @@ object Jaccard {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      native: Boolean,
       maxDf: Long): DataFrame = {
-    val raw = MinHash.withShingles(df, idCol, textCol, native)
+    val raw = MinHash.withShingles(df, idCol, textCol)
       .select(col(idCol).as("__id"), array_distinct(col("__sh")).as("__set"))
       .filter(size(col("__set")) > 0)
     if (maxDf == Long.MaxValue) raw
@@ -170,7 +173,6 @@ object Jaccard {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       collapseSiblings: Boolean = true): DataFrame = {
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
@@ -186,7 +188,7 @@ object Jaccard {
     // untouched. Footprint note: this checkpoints a corpus-scale frame —
     // in cluster mode set a checkpoint dir ([[graft.Lineage.truncate]])
     // so it lands on reliable storage rather than executor memory.
-    pairsFromSets(graft.Lineage.truncate(cappedSets(df, idCol, textCol, native, maxDf)),
+    pairsFromSets(graft.Lineage.truncate(cappedSets(df, idCol, textCol, maxDf)),
       minBp, collapseSiblings)
   }
 
@@ -360,10 +362,9 @@ object Jaccard {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue): DataFrame = {
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
-    pairsDirectFromSets(cappedSets(df, idCol, textCol, native, maxDf), minBp)
+    pairsDirectFromSets(cappedSets(df, idCol, textCol, maxDf), minBp)
   }
 
   /** [[pairsDirect]] body over a pre-built capped sets frame — the seam
@@ -433,7 +434,6 @@ object Jaccard {
       idCol: String,
       textCol: String,
       minBp: Long,
-      native: Boolean = false,
       maxDf: Long = Long.MaxValue,
       directMaxDocs: Long = DirectMaxDocs,
       materialize: Boolean = true): DataFrame = {
@@ -442,7 +442,7 @@ object Jaccard {
     // throw rather than silently return an empty (or all-pairs) frame
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
     autoDispatch(df, directMaxDocs, materialize, maxDf)(
-      mkSets = (input, cap) => cappedSets(input, idCol, textCol, native, cap),
+      mkSets = (input, cap) => cappedSets(input, idCol, textCol, cap),
       directFromSets = sets => pairsDirectFromSets(sets, minBp),
       fromSets = (sets, collapse, _) => pairsFromSets(sets, minBp, collapse))
   }

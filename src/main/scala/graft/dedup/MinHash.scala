@@ -1,11 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.text.Hashing._
-import graft.text.Text
 
 /** MinHash + LSH near-duplicate detection over a text column.
   *
@@ -17,56 +16,27 @@ import graft.text.Text
   * At scale the only shuffle is the band-bucket join, whose key cardinality
   * grows with corpus size (good skew behavior: near-dup clusters share
   * buckets, unrelated docs almost never do). Everything upstream is
-  * per-row expression work inside whole-stage codegen.
-  *
-  * Performance note: every stage is materialized as its own projection so
-  * lambda bodies only reference attribute columns. Inlining the `codes` or
-  * shingle expression into a `transform` lambda makes Spark re-evaluate the
-  * whole subtree per array element (O(n^2) per row, x16 minhashes) —
-  * measured 80x slower at sf0.1. Catalyst's CollapseProject keeps these
-  * projections separate because the intermediate arrays are referenced more
-  * than once.
+  * per-row expression work inside whole-stage codegen: the shingle and
+  * signature stages are the codegen'd `graft_*` kernels, so every entry
+  * point needs a session with [[graft.catalyst.GraftExtensions]]
+  * (`graft.Sessions.build`).
   */
 object MinHash {
 
-  /** 3-word shingle hashes over a materialized word-codes array column
-    * (exact arithmetic per graft.text.Hashing; empty for docs < 3 tokens). */
-  def shinglesFromCodes(codes: Column): Column =
-    when(size(codes) >= 3,
-      transform(sequence(lit(1), size(codes) - 2), i =>
-        (element_at(codes, i) * ShingleS1 +
-          element_at(codes, i + 1) * ShingleS2 +
-          element_at(codes, i + 2)) % ShingleM))
-      .otherwise(array().cast(ArrayType(LongType)))
+  /** id + materialized shingle array `__sh` (3-word shingle hashes, exact
+    * arithmetic per graft.text.Hashing; empty for docs < 3 tokens), from
+    * the codegen'd graft_shingles kernel. */
+  def withShingles(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), call_function("graft_shingles", col(textCol)).as("__sh"))
 
-  /** j-th minhash of a shingle array column: min over shingles of
-    * (A(j) * (x mod P) + B(j)) mod P; P-1 sentinel for empty docs. */
-  def minhash(sh: Column, j: Int): Column =
-    coalesce(
-      array_min(transform(sh, x => ((x % P) * A(j) + B(j)) % P)),
-      lit(P - 1))
-
-  /** id + materialized shingle array. `native=true` uses the codegen'd
-    * graft_shingles expression (requires a GraftExtensions session). */
-  def withShingles(df: DataFrame, idCol: String, textCol: String,
-      native: Boolean = false): DataFrame =
-    if (native)
-      df.select(col(idCol), call_function("graft_shingles", col(textCol)).as("__sh"))
-    else
-      df.select(col(idCol), Text.wordCodes(col(textCol)).as("__codes"))
-        .select(col(idCol), shinglesFromCodes(col("__codes")).as("__sh"))
-
-  /** id + k minhash signature columns `__m0..__m{k-1}`. The native path
-    * computes the whole signature in one codegen'd kernel call. */
-  def signatures(df: DataFrame, idCol: String, textCol: String, k: Int = K,
-      native: Boolean = false): DataFrame =
-    if (native) {
-      require(k <= K, s"native path computes K=$K minhashes")
-      df.select(col(idCol), call_function("graft_minhash_sig", col(textCol)).as("__sig"))
-        .select(col(idCol) +: (0 until k).map(j => element_at(col("__sig"), j + 1).as(s"__m$j")): _*)
-    } else
-      withShingles(df, idCol, textCol)
-        .select(col(idCol) +: (0 until k).map(j => minhash(col("__sh"), j).as(s"__m$j")): _*)
+  /** id + k minhash signature columns `__m0..__m{k-1}`: the j-th minhash is
+    * min over shingles of (A(j) * (x mod P) + B(j)) mod P, P-1 for empty
+    * docs. The whole signature comes from one graft_minhash_sig call. */
+  def signatures(df: DataFrame, idCol: String, textCol: String, k: Int = K): DataFrame = {
+    require(k <= K, s"graft_minhash_sig computes K=$K minhashes")
+    df.select(col(idCol), call_function("graft_minhash_sig", col(textCol)).as("__sig"))
+      .select(col(idCol) +: (0 until k).map(j => element_at(col("__sig"), j + 1).as(s"__m$j")): _*)
+  }
 
   /** id + LSH band-key columns `band_0..band_{bands-1}`: each band is the
     * string concatenation of RowsPerBand consecutive minhash values (strings
@@ -76,9 +46,8 @@ object MinHash {
       idCol: String,
       textCol: String,
       bands: Int = Bands,
-      rows: Int = RowsPerBand,
-      native: Boolean = false): DataFrame =
-    signatures(df, idCol, textCol, bands * rows, native)
+      rows: Int = RowsPerBand): DataFrame =
+    signatures(df, idCol, textCol, bands * rows)
       .select(col(idCol) +: (0 until bands).map { b =>
         concat_ws("_", (b * rows until (b + 1) * rows).map(j => col(s"__m$j")): _*)
           .as(s"band_$b")
@@ -99,11 +68,10 @@ object MinHash {
       idCol: String,
       textCol: String,
       nBands: Int = Bands,
-      rows: Int = RowsPerBand,
-      native: Boolean = false): DataFrame = {
+      rows: Int = RowsPerBand): DataFrame = {
     val keys = (0 until nBands).map(b => concat_ws("#", lit(b), col(s"band_$b")))
     val banded = bands(df.filter(size(split(col(textCol), " ")) >= 3),
-        idCol, textCol, nBands, rows, native)
+        idCol, textCol, nBands, rows)
       .select(col(idCol).as("__id"), explode(array(keys: _*)).as("__key"))
     val l = banded.as("l")
     val r = banded.as("r")
@@ -119,10 +87,9 @@ object MinHash {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      minBp: Long,
-      native: Boolean = false): DataFrame = {
-    val pairs = candidatePairs(df, idCol, textCol, native = native)
-    val sets = withShingles(df, idCol, textCol, native)
+      minBp: Long): DataFrame = {
+    val pairs = candidatePairs(df, idCol, textCol)
+    val sets = withShingles(df, idCol, textCol)
       .select(col(idCol).as("__sid"), array_distinct(col("__sh")).as("__set"))
     pairs
       .join(sets.as("sa"), col("id_1") === col("sa.__sid"))

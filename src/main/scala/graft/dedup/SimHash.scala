@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.text.Hashing._
-import graft.text.Text
 
 /** SimHash near-duplicate fingerprinting.
   *
@@ -14,45 +13,17 @@ import graft.text.Text
   * sum yields one fingerprint bit. Near-duplicate docs differ in few bits
   * (Hamming distance).
   *
-  * The `SimHashBits`-bit variant below is exact-integer and SQL-expressible
-  * (it is what the DuckDB oracle checks); `simhash64` is the
-  * production-width variant of the same construction.
+  * Both widths are exact-integer and run as codegen'd kernels: the
+  * `SimHashBits`-bit graft_simhash16 (the form the DuckDB oracle checks)
+  * and the production-width graft_simhash64. Every entry point needs a
+  * session with [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`).
   */
 object SimHash {
 
-  /** Token bit source: (code * TokenHashA) mod P. */
-  private def tokenHash(c: Column): Column = (c * TokenHashA) % P
-
-  /** Vote sum for bit `i`: sum over tokens of 2*bit_i - 1. */
-  private def bitVote(codes: Column, i: Int): Column =
-    aggregate(codes, lit(0L), (acc, c) =>
-      acc + (shiftright(tokenHash(c), i).bitwiseAND(lit(1L)) * 2L - 1L))
-
-  /** SQL-width simhash: bit i set iff its vote sum is strictly positive. */
-  def simhash(text: Column, bits: Int = SimHashBits): Column = {
-    val codes = Text.wordCodes(text)
-    (0 until bits)
-      .map(i => when(bitVote(codes, i) > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-  }
-
-  /** 64-bit simhash: same construction with two 32-bit halves drawn from
-    * independent multipliers to fill 64 bits with exact arithmetic.
-    * `native=true` uses the codegen'd kernel (graft_simhash64) — the HOF
-    * form runs 64 interpreted array aggregates per row and exists as the
-    * semantics reference. */
-  def simhash64(text: Column, native: Boolean = false): Column =
-    if (native) call_function("graft_simhash64", text)
-    else {
-      val codes = Text.wordCodes(text)
-      def half(mult: Long, base: Int): Column =
-        (0 until 32).map { i =>
-          val vote = aggregate(codes, lit(0L), (acc, c) =>
-            acc + (shiftright((c * mult) % P, i).bitwiseAND(lit(1L)) * 2L - 1L))
-          when(vote > 0, lit(1L << (base + i))).otherwise(lit(0L))
-        }.reduce(_ + _)
-      half(TokenHashA, 0) + half(TokenHashB, 32)
-    }
+  /** 64-bit simhash: the same construction with two 32-bit halves drawn
+    * from independent multipliers (TokenHashA, TokenHashB), computed by
+    * the codegen'd graft_simhash64 kernel. */
+  def simhash64(text: Column): Column = call_function("graft_simhash64", text)
 
   /** Hamming distance between two simhash columns. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -75,21 +46,16 @@ object SimHash {
       idCol: String,
       textCol: String,
       maxBits: Int = 2,
-      bits: Int = SimHashBits,
-      native: Boolean = false): DataFrame = {
+      bits: Int = SimHashBits): DataFrame = {
     require(maxBits + 1 <= bits, s"need at least one bit per block: $maxBits+1 blocks over $bits bits")
     // repartition materializes the signature computation once as a shuffle
-    // stage all join branches ((maxBits+1) blocks x 2 sides) reuse — the
-    // interpreted bit-vote aggregates are the dominant cost here
-    val sigExpr =
-      if (native) bits match {
-        case SimHashBits => call_function("graft_simhash16", col(textCol))
-        case 64          => call_function("graft_simhash64", col(textCol))
-        case other => throw new IllegalArgumentException(
-          s"no native kernel for $other-bit simhash (have $SimHashBits and 64)")
-      }
-      else if (bits == 64) simhash64(col(textCol))
-      else simhash(col(textCol), bits)
+    // stage all join branches ((maxBits+1) blocks x 2 sides) reuse
+    val sigExpr = bits match {
+      case SimHashBits => call_function("graft_simhash16", col(textCol))
+      case 64          => simhash64(col(textCol))
+      case other => throw new IllegalArgumentException(
+        s"no simhash kernel for $other bits (have $SimHashBits and 64)")
+    }
     val bounds = blockBounds(bits, maxBits)
     val withSig = bounds.zipWithIndex
       .foldLeft(df.select(col(idCol).as("__id"), sigExpr.as("__sig"))) {

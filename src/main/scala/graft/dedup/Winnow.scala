@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * globally small hash values, so a document-frequency cap on the
   * fingerprint (same guard as the shingle joins' stop-shingle cap) keeps
   * any one key from concentrating the shuffle.
+  *
+  * Fingerprints and shingles come from the graft_winnow/graft_shingles
+  * kernels, so every entry point needs a session with
+  * [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`).
   */
 object Winnow {
 
@@ -37,36 +41,12 @@ object Winnow {
     // r19: one codegen'd O(n) kernel call (graft_winnow — monotonic-deque
     // window minima) in place of the interpreted HOF window pipeline
     // (transform/slice/array_min per window, measured 0.65 s single-task
-    // at sf0.1 vs ~0.1 s for the kernel). Output identical by
-    // construction; WinnowKernelPropertySpec pins kernel == HOF form.
+    // at sf0.1 vs ~0.1 s for the kernel). WinnowKernelPropertySpec pins
+    // the kernel against a test-scope HOF reference.
     docs
       .select(col(idCol).as("__id"),
         call_function("graft_winnow", col(textCol), lit(w)).as("__z"))
       .select(col("__id"), explode(col("__z")).as("__f"))
-      .select(col("__id").as(idCol),
-        col("__f.pos").as("pos"), col("__f.fp").as("fp"))
-  }
-
-  /** The pre-r19 higher-order-function formulation of [[fingerprints]] —
-    * kept as the independent REFERENCE implementation the property spec
-    * pins the kernel against (same device as the dedup/winnow
-    * sequential-reference suites). Not on any query path. */
-  private[dedup] def fingerprintsHof(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      w: Int): DataFrame = {
-    require(w > 0, s"window must be positive, got $w")
-    MinHash.withShingles(docs.select(col(idCol).as("__id"), col(textCol)),
-        "__id", textCol, native = true)
-      .filter(size(col("__sh")) > 0)
-      .select(col("__id"), expr(
-        s"""transform(sequence(0, greatest(size(__sh) - $w, 0)),
-           | j -> slice(__sh, j + 1, $w))""".stripMargin).as("__wins"))
-      .select(col("__id"), explode(expr(
-        """array_distinct(transform(__wins, (wd, j) ->
-          | struct(j + array_position(wd, array_min(wd)) AS pos,
-          |        array_min(wd) AS fp)))""".stripMargin)).as("__f"))
       .select(col("__id").as(idCol),
         col("__f.pos").as("pos"), col("__f.fp").as("fp"))
   }
@@ -94,7 +74,7 @@ object Winnow {
       w: Int = 4): DataFrame = {
     require(w > 0, s"window must be positive, got $w")
     MinHash.withShingles(docs.select(col(idCol).as("__id"), col(textCol)),
-        "__id", textCol, native = true)
+        "__id", textCol)
       .filter(size(col("__sh")) >= w)
       // per-window (start, min, rightmost-min-pos) computed ONCE, then a
       // single stateful fold over those structs — the naive form re-slices

@@ -13,14 +13,12 @@ import org.apache.spark.sql.functions._
   * of the Mozilla PSL in the upstream format — swap in the full file and
   * nothing here changes).
   *
-  * Scale shape: the rule sets become `InSet` literals inside a narrow
-  * codegen'd projection — no broadcast variable, no UDF, no shuffle, no
-  * driver round-trip. Membership tests are grouped by label count
-  * (a k-label suffix string can only ever equal a k-label rule), and the
-  * candidate suffixes come from `substring_index(host, ".", -k)`, which
-  * never throws — no ANSI out-of-bounds hazard. Even the full ~9k-rule
-  * upstream list is ~200 KB of plan literals, shipped once per stage with
-  * the serialized plan.
+  * Scale shape: the lookup is the graft_psl_labels kernel
+  * ([[graft.catalyst.PslKernels]]) over process-static rule sets, inside a
+  * narrow codegen'd projection — no broadcast variable, no UDF, no
+  * shuffle, no driver round-trip. The candidate suffixes come from
+  * `substring_index(host, ".", -k)`, which never throws — no ANSI
+  * out-of-bounds hazard.
   */
 object Psl {
 
@@ -66,27 +64,11 @@ object Psl {
     finally in.close()
   }
 
-  private def labelCount(s: String): Int = s.count(_ == '.') + 1
-
-  private val normalByLen: Map[Int, Seq[String]] =
-    rules.normal.groupBy(labelCount).map { case (k, v) => k -> v.toSeq.sorted }
-  private val wildByLen: Map[Int, Seq[String]] =
-    rules.wildcards.groupBy(labelCount).map { case (k, v) => k -> v.toSeq.sorted }
-  private val excByLen: Map[Int, Seq[String]] =
-    rules.exceptions.groupBy(labelCount).map { case (k, v) => k -> v.toSeq.sorted }
-
-  /** Last `k` labels of `host` ("a.b.c", k=2 -> "b.c"). Total-function:
-    * fewer than `k` labels returns the whole host, so every use is
-    * guarded by a label-count predicate. */
-  private def lastLabels(host: Column, k: Int): Column =
-    if (k <= 0) lit("") else substring_index(host, ".", -k)
-
-  /** `lastLabels` with a per-row count — `substring_index` via
-    * `call_function`, whose count operand (unlike the Scala helper's
-    * `Int`) may be any expression. Keeps [[publicSuffix]] and
-    * [[registeredDomain]] to ONE copy of the rule-set literals instead
-    * of one per possible suffix length. */
-  private def lastLabelsDyn(host: Column, k: Column): Column =
+  /** Last `k` labels of `host` ("a.b.c", k=2 -> "b.c") for a per-row
+    * count — `substring_index` via `call_function`, whose count operand
+    * may be any expression. Fewer than `k` labels returns the whole host,
+    * so every use is guarded by a label-count predicate. */
+  private def lastLabels(host: Column, k: Column): Column =
     call_function("substring_index", host, lit("."), -k)
 
   private def nLabels(host: Column): Column = size(split(host, "\\."))
@@ -97,37 +79,17 @@ object Psl {
     * process-static hash sets instead of plan literals, so the generated
     * projection is one static call — eliminating the ~4-5 s first-use
     * janino compile the former InSet chain cost on every fresh JVM,
-    * with identical results (parity-pinned against the columnar form). */
+    * with identical results (PslPropertySpec pins it against a
+    * test-scope InSet-chain reference). Needs a session with
+    * [[graft.catalyst.GraftExtensions]] (`graft.Sessions.build`), as do
+    * the functions below that build on it. */
   def publicSuffixLabels(host: Column): Column =
     call_function("graft_psl_labels", host)
-
-  /** The original InSet-literal evaluation of the same algorithm — one
-    * coalesce chain: exception rules first (longest wins, public suffix
-    * = exception minus one label), then normal/wildcard matches in
-    * descending effective length, then the default rule (1). Kept as the
-    * independent parity reference for the kernel (PslSpec); not used on
-    * any hot path because its ~200 KB of generated code pays seconds of
-    * janino compilation at first use. */
-  private[graft] def publicSuffixLabelsColumnar(host: Column): Column = {
-    val n = nLabels(host)
-    val excArms = excByLen.keys.toSeq.sorted.reverse.map { k =>
-      when(n >= k, when(lastLabels(host, k).isInCollection(excByLen(k)), lit(k - 1)))
-    }
-    val maxEff = ((normalByLen.keys ++ wildByLen.keys.map(_ + 1)) ++ Seq(1)).max
-    val bodyArms = (maxEff to 2 by -1).flatMap { e =>
-      val hits =
-        normalByLen.get(e).map(s => lastLabels(host, e).isInCollection(s)).toSeq ++
-          wildByLen.get(e - 1).map(s => lastLabels(host, e - 1).isInCollection(s))
-      if (hits.isEmpty) None
-      else Some(when(n >= e, when(hits.reduce(_ || _), lit(e))))
-    }
-    when(host.isNotNull, coalesce((excArms ++ bodyArms :+ lit(1)): _*))
-  }
 
   /** The public suffix itself (e.g. "co.uk", "web.ck" under `*.ck`);
     * null for a null host. */
   def publicSuffix(host: Column): Column =
-    lastLabelsDyn(host, publicSuffixLabels(host))
+    lastLabels(host, publicSuffixLabels(host))
 
   /** True when `host` IS a public suffix (no registrable part) — the
     * guard [[Urls.dedupKey]] uses before stripping a leading `www.`. */
@@ -141,6 +103,6 @@ object Psl {
     * report by. */
   def registeredDomain(host: Column): Column = {
     val psn = publicSuffixLabels(host)
-    when(nLabels(host) > psn, lastLabelsDyn(host, psn + lit(1)))
+    when(nLabels(host) > psn, lastLabels(host, psn + lit(1)))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Deduplication operators (SURVEY §2.5).
   *
@@ -22,16 +23,49 @@ object Dedup {
     * preserve order, so it is not semantics-equivalent.
     */
   def keepLast(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).desc)
+    val w = Window.partitionBy(windowKeys(df, keys): _*).orderBy(col(orderCol).desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
 
+  /** Window partition columns for `keys`. A key whose type contains a map
+    * (an Avro map field, or a payload struct holding one) is replaced by
+    * its [[orderable]] form: the window sorts on its partition keys and
+    * Spark cannot order maps. Map-free keys pass through unchanged. */
+  private def windowKeys(df: DataFrame, keys: Seq[String]): Seq[Column] = {
+    val types = df.select(keys.map(col): _*).schema.map(_.dataType)
+    keys.zip(types).map { case (k, t) => orderable(col(k), t) }
+  }
+
+  /** An orderable value equal for two rows exactly when `c` is: each map
+    * becomes its entries as an array of (key, value) structs sorted by
+    * key, recursively through structs and arrays, so maps holding the same
+    * entries in a different insertion order compare equal. Null stays
+    * null; a map-free `c` is returned as is. */
+  private def orderable(c: Column, t: DataType): Column = t match {
+    case _ if !hasMap(t) => c
+    case MapType(kt, vt, _) =>
+      array_sort(transform(map_entries(c), e =>
+        struct(orderable(e.getField("key"), kt).as("key"),
+          orderable(e.getField("value"), vt).as("value"))))
+    case StructType(fields) =>
+      when(c.isNotNull, struct(fields.toSeq.map(f =>
+        orderable(c.getField(f.name), f.dataType).as(f.name)): _*))
+    case ArrayType(et, _) => transform(c, orderable(_, et))
+    case _ => c
+  }
+
+  private def hasMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case StructType(fields) => fields.exists(f => hasMap(f.dataType))
+    case ArrayType(et, _) => hasMap(et)
+    case _ => false
+  }
+
   /** The ONE owner of `ignoreFields` key derivation: all columns minus the
     * ignored ones minus the order column — shared by [[keepLastIgnoring]]
-    * and the restructure job's strategy dispatch so the windowed and
-    * salted paths can never drift. */
+    * and the restructure job's dedup so the two can never drift. */
   def keysIgnoring(df: DataFrame, ignore: Seq[String], orderCol: String): Seq[String] =
     df.columns.filterNot(c => ignore.contains(c) || c == orderCol).toSeq
 
@@ -47,7 +81,7 @@ object Dedup {
     * per distinct content survives. */
   def keepFirstDistinct(df: DataFrame, orderCol: String): DataFrame = {
     val keys = df.columns.filterNot(_ == orderCol).toSeq
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).asc)
+    val w = Window.partitionBy(windowKeys(df, keys): _*).orderBy(col(orderCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -71,7 +105,10 @@ object Dedup {
     *
     * Use when a dedup key is pathologically hot (boilerplate documents,
     * null-ish keys). The window formulation is one shuffle + sort; this is
-    * two light shuffles with partial aggregation and no sort.
+    * two light shuffles with partial aggregation and no sort. On the
+    * restructure pass it lost to [[keepLast]] in both measured regimes
+    * (all-unique and 75% duplicate keys, BENCHSCALE.md), so that pass
+    * uses [[keepLast]].
     */
   def keepLastSalted(
       df: DataFrame,

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.LongType
   * shuffle-hash join against a metadata-sized build side, all hanging
   * off ONE data exchange (runtime-reused — see the join-side comment
   * below); at a planted 90%-one-source rehearsal the skewed window's
-  * max/p50 task-time ratio drops from 48.6x to 2.5x
-  * (PrefixSkewRehearsal, BENCHSCALE.md).
+  * max/p50 task-time ratio drops from 48.6x to 2.5x (BENCHSCALE.md,
+  * "Round-9 — the window-skew sweep", planted mega-stratum A/B).
   */
 object ShardedPrefix {
 

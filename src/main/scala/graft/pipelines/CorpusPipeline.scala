@@ -231,11 +231,11 @@ object CorpusPipeline {
       // materialize mode exists for; the cache is released before the
       // call returns)
       graft.dedup.Jaccard.pairsAuto(df, idCol, textCol, cfg.nearDupMinBp,
-          native = true, maxDf = graft.Queries.NgramMaxDf,
+          maxDf = graft.Queries.NgramMaxDf,
           directMaxDocs = cfg.directJoinMaxDocs, materialize = true)
         .select(col("id_1"), col("id_2"))
     else
-      MinHash.nearDuplicates(df, idCol, textCol, cfg.nearDupMinBp, native = true)
+      MinHash.nearDuplicates(df, idCol, textCol, cfg.nearDupMinBp)
         .select(col("id_1"), col("id_2"))
 
   /** Near dedup with exact clustering: near-dup pairs become an edge

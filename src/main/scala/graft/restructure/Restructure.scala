@@ -70,21 +70,7 @@ final case class RestructureConfig(
     // splittable) — the writer rolls to part-...-c001 etc. at the cap.
     // None = Spark's session default (spark.sql.files.maxRecordsPerFile,
     // 0 = unlimited).
-    maxRecordsPerFile: Option[Long] = None,
-    // keep-last dedup strategy: false (default) = one exchange on the key
-    // columns + per-partition sort (window row_number) — spills the sort
-    // gracefully when a task's groups exceed memory; true = two-phase
-    // max_by aggregation (Dedup.keepLastSalted) — map-side partial
-    // combine, no full sort. Results are identical (DedupSpec pins it).
-    // MEASURED to lose in BOTH regimes on this pipeline (BENCHSCALE.md):
-    // 100M all-unique keys 156.5k -> 110.5k rec/s with 5.2x the spill,
-    // and 20M at 75% planted duplicate mass — the shape the aggregation
-    // was hypothesized to win — 157k -> 94k input rec/s with 50x the
-    // spill (the object-hash aggregate's full-row struct state costs
-    // more than the 4:1 combine saves). The window sort is the default
-    // everywhere; the knob stays as the measurement instrument that
-    // settled it.
-    dedupSalted: Boolean = false)
+    maxRecordsPerFile: Option[Long] = None)
 
 /** One source file of one topic: a contiguous offset range of a
   * topic-partition, metadata parsed from the filename
@@ -293,13 +279,12 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     // keep-last needs a TOTAL order unique per record: _offset alone is
     // only unique within a Kafka partition, so equal-key records at the
     // same offset of different partitions would tie and the surviving
-    // row would be strategy/partitioning-dependent. (_offset, _partition)
-    // is globally unique — both strategies order by the struct and pick
-    // the same winner deterministically.
+    // row would be partitioning-dependent. (_offset, _partition) is
+    // globally unique, so ordering by the struct picks the same winner
+    // deterministically.
     val ordered = df.withColumn("__ord", struct(col("_offset"), col("_partition")))
     def last(keys: Seq[String]): DataFrame =
-      (if (config.dedupSalted) Dedup.keepLastSalted(ordered, keys, "__ord")
-       else Dedup.keepLast(ordered, keys, "__ord")).drop("__ord")
+      Dedup.keepLast(ordered, keys, "__ord").drop("__ord")
     def ignoring(ignore: Seq[String]): Seq[String] =
       Dedup.keysIgnoring(ordered, ignore :+ "__ord", "__ord")
     if (!cfg.enable) df

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.text.Hashing._
-
 /** Similarity search over an embedding column (Array[Float]).
   *
   * Two paths:
@@ -20,18 +18,12 @@ import graft.text.Hashing._
   *    near-duplicate detection.
   *
   * All scoring used by the DuckDB-checked queries is exact integer math on
-  * quantized vectors (round(x*QuantScale) as long); float cosine is also
-  * provided for library use.
+  * quantized vectors (round(x*QuantScale) as long), computed by the
+  * codegen'd graft_quantize/graft_qdot/graft_srp kernels, so the scoring
+  * entry points need a session with [[graft.catalyst.GraftExtensions]]
+  * (`graft.Sessions.build`); float cosine is also provided for library use.
   */
 object Similarity {
-
-  /** Quantized copy of an embedding: Array[Long] of round(x * QuantScale). */
-  def quantize(v: Column): Column =
-    transform(v, x => round(x.cast(DoubleType) * QuantScale).cast(LongType))
-
-  /** Exact integer dot product of two quantized vectors. */
-  def intDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   /** Float cosine similarity (library path; not oracle-checked because float
     * summation order is engine-specific). */
@@ -247,69 +239,43 @@ object Similarity {
     * broadcast; ranking ties break on neighbor id for determinism; the
     * ranking itself is [[topKPerQuery]]'s bounded `graft_topk` aggregate,
     * so the scored corpus is never sorted — each map task prunes to k
-    * per query before the exchange.
-    * `native=true` scores with the codegen'd graft_quantize/graft_qdot
-    * kernels (same integer math, no interpreted lambdas) — requires a
-    * GraftExtensions session. */
+    * per query before the exchange. Scoring is the codegen'd
+    * graft_quantize/graft_qdot kernels. */
   def bruteForceTopK(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      native: Boolean = false,
       shards: Int = 32): DataFrame = {
-    def quant(c: Column): Column =
-      if (native) call_function("graft_quantize", c) else quantize(c)
-    def dotOf(a: Column, b: Column): Column =
-      if (native) call_function("graft_qdot", a, b) else intDot(a, b)
+    def quant(c: Column): Column = call_function("graft_quantize", c)
     val q = queries.select(col(idCol).as("query_id"), quant(col(vecCol)).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), quant(col(vecCol)).as("__cv"))
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        dotOf(col("__qv"), col("__cv")).as("dot"))
+        call_function("graft_qdot", col("__qv"), col("__cv")).as("dot"))
     topKPerQuery(scored, "dot", k, shards = shards)
   }
 
-  /** Signed-random-projection bucket id in [0, 2^SrpPlanes) over an already
-    * quantized vector column: bit p is set iff dot(vec, hyperplane_p) > 0.
-    * Deterministic (Hashing.SrpMatrix). Pass a materialized attribute column
-    * so the quantization isn't re-evaluated per plane. */
-  def srpBucketFromQuant(q: Column): Column =
-    SrpMatrix.zipWithIndex.map { case (plane, p) =>
-      val planeCol = array(plane.map(x => lit(x.toLong)): _*)
-      when(intDot(q, planeCol) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** SRP bucket id from a raw (float) embedding column. */
-  def srpBucket(v: Column): Column = srpBucketFromQuant(quantize(v))
-
-  /** LSH near-duplicate pairs: same SRP bucket AND integer dot product above
-    * `minDot` (for unit vectors, cosine ~= dot / QuantScale^2).
-    * `native=true` uses the codegen'd vector kernels. */
+  /** LSH near-duplicate pairs: same signed-random-projection bucket
+    * (graft_srp: bit p set iff dot(vec, hyperplane_p) > 0 over the
+    * deterministic Hashing.SrpMatrix) AND integer dot product above
+    * `minDot` (for unit vectors, cosine ~= dot / QuantScale^2). */
   def lshNearDuplicates(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      minDot: Long,
-      native: Boolean = false): DataFrame = {
-    val b =
-      if (native)
-        df.select(col(idCol).as("__id"), call_function("graft_quantize", col(vecCol)).as("__v"))
-          .select(col("__id"), col("__v"), call_function("graft_srp", col("__v")).as("__bucket"))
-      else
-        df.select(col(idCol).as("__id"), quantize(col(vecCol)).as("__v"))
-          .select(col("__id"), col("__v"), srpBucketFromQuant(col("__v")).as("__bucket"))
+      minDot: Long): DataFrame = {
+    val b = df
+      .select(col(idCol).as("__id"), call_function("graft_quantize", col(vecCol)).as("__v"))
+      .select(col("__id"), col("__v"), call_function("graft_srp", col("__v")).as("__bucket"))
     val l = b.as("l")
     val r = b.as("r")
-    val pairDot =
-      if (native) call_function("graft_qdot", col("l.__v"), col("r.__v"))
-      else intDot(col("l.__v"), col("r.__v"))
     l.join(r, col("l.__bucket") === col("r.__bucket") && col("l.__id") < col("r.__id"))
       .select(
         col("l.__id").as("id_1"),
         col("r.__id").as("id_2"),
-        pairDot.as("dot"))
+        call_function("graft_qdot", col("l.__v"), col("r.__v")).as("dot"))
       .filter(col("dot") >= minDot)
   }
 }

@@ -283,7 +283,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           graft.dedup.Incremental
-            .survivors(batch, index, idCol, textCol, minBp, native = true)
+            .survivors(batch, index, idCol, textCol, minBp)
             .write.mode("overwrite").parquet(s"$outputDir/batch=$batchId")
         }
       }

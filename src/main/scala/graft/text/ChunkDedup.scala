@@ -21,6 +21,10 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   * before the exchange, and the join build side holds only repeated
   * chunks), one exchange back on doc id for re-assembly — shuffle linear
   * in corpus token count, nothing driver-side.
+  *
+  * [[dedupChunks]] cuts chunks with the graft_token_chunks kernel, so it
+  * needs a session with [[graft.catalyst.GraftExtensions]]
+  * (`graft.Sessions.build`).
   */
 object ChunkDedup {
 
@@ -67,10 +71,9 @@ object ChunkDedup {
       textCol: String,
       chunkTokens: Int = 32): DataFrame = {
     require(chunkTokens > 0, s"chunkTokens must be positive, got $chunkTokens")
-    // r20: chunk extraction is the native graft_token_chunks kernel (one
-    // boundary scan + shared-byte substrings) in place of the interpreted
-    // transform/slice/array_join pipeline, retained as [[chunksOfHof]]
-    // for the TokenGramsPropertySpec pin
+    // chunk extraction is the codegen'd graft_token_chunks kernel (one
+    // boundary scan + shared-byte substrings; TokenGramsPropertySpec pins
+    // it against a test-scope transform/slice/array_join reference)
     val chunks = docs
       .select(col(idCol).as("__id"),
         posexplode(call_function("graft_token_chunks", col(textCol), lit(chunkTokens)))
@@ -85,16 +88,6 @@ object ChunkDedup {
             "x -> x.keep)), x -> x.chunk)"),
           " ").as("dedup_text"))
   }
-
-  /** The higher-order-function twin of [[dedupChunks]]' chunk array — the
-    * reference implementation TokenGramsPropertySpec pins the kernel
-    * against (kept verbatim from the pre-r20 pipeline). */
-  private[graft] def chunksOfHof(docs: DataFrame, textCol: String, w: Int): DataFrame =
-    docs.select(split(col(textCol), " ").as("__tk"))
-      .select(expr(
-        s"""transform(sequence(0, (size(__tk) - 1) div $w),
-           | i -> array_join(slice(__tk, i * $w + 1, $w), ' '))""".stripMargin)
-        .as("__gr"))
 
   /** Content-defined chunking dedup: chunk boundaries fall AFTER any token
     * whose word code divides `divisor` (a rolling-content condition, not a

@@ -42,6 +42,10 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   * production setting; a 64-bit collision at web scale is vanishingly rare
   * and costs one extra dropped span, not a wrong pipeline). The catalog
   * path keeps the exact gram text so the DuckDB oracle is bit-identical.
+  *
+  * Gram extraction is the graft_token_grams kernel, so every entry point
+  * needs a session with [[graft.catalyst.GraftExtensions]]
+  * (`graft.Sessions.build`).
   */
 object SpanDedup {
 
@@ -49,24 +53,13 @@ object SpanDedup {
     * start position. Documents shorter than k contribute nothing (the
     * kernel returns an empty array; posexplode then yields no rows).
     *
-    * r20: the anchor extraction is the native graft_token_grams kernel —
-    * one boundary scan plus shared-byte substrings — in place of the
-    * interpreted transform/slice/array_join window pipeline retained
-    * below as [[gramsOfHof]] (the property-spec reference). */
+    * The anchor extraction is the codegen'd graft_token_grams kernel —
+    * one boundary scan plus shared-byte substrings (TokenGramsPropertySpec
+    * pins it against a test-scope transform/slice/array_join reference). */
   private def gramsOf(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol).as("__id"),
         call_function("graft_token_grams", col(textCol), lit(k)).as("__gr"))
       .select(col("__id"), posexplode(col("__gr")).as(Seq("__p", "__gram")))
-
-  /** The higher-order-function twin of [[gramsOf]]'s gram array — the
-    * reference implementation TokenGramsPropertySpec pins the kernel
-    * against (kept verbatim from the pre-r20 pipeline). */
-  private[graft] def gramsOfHof(df: DataFrame, textCol: String, k: Int): DataFrame =
-    df.select(split(col(textCol), " ").as("__tk"))
-      .select(when(size(col("__tk")) >= k, expr(
-        s"""transform(sequence(0, size(__tk) - $k),
-           | p -> array_join(slice(__tk, p + 1, $k), ' '))""".stripMargin))
-        .otherwise(expr("CAST(array() AS array<string>)")).as("__gr"))
 
   /** Remove the spans the redundant gram starts cover: per-document
     * summary (idCol, n_tokens, n_removed, dedup_text) with the survivors

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 import Hashing._
 
 /** Text-analysis scalar pack for large-scale training-data pipelines:
-  * tokenization, quality counters, language-ID heuristic, and document
-  * fingerprinting. Pure `org.apache.spark.sql.functions` compositions —
+  * tokenization, quality counters, language-ID heuristic, and cleanup
+  * (the document fingerprint is the graft_fingerprint kernel). Pure `org.apache.spark.sql.functions` compositions —
   * everything stays inside whole-stage codegen; no UDFs, no shuffles.
   */
 object Text {
@@ -22,9 +22,6 @@ object Text {
     * length(w) * WordBase + ascii(first char). */
   def wordCode(w: Column): Column =
     (length(w).cast(LongType) * WordBase + ascii(w).cast(LongType))
-
-  /** Array[Long] of word codes for a document. */
-  def wordCodes(text: Column): Column = transform(tokens(text), wordCode(_))
 
   /** Count of tokens found in `stopwords`. */
   def stopwordCount(text: Column, stopwords: Seq[String]): Column =
@@ -67,11 +64,6 @@ object Text {
     }
     best._1
   }
-
-  /** Rolling-hash document fingerprint: fold over word codes,
-    * h <- (h * FpB + code) mod FpM. Order-sensitive, exact. */
-  def fingerprint(text: Column): Column =
-    aggregate(wordCodes(text), lit(0L), (h, c) => (h * FpB + c) % FpM)
 
   /** BPE-ish subword regex shared with the SQL oracle: letter runs, single
     * digits, or single non-alphanumeric marks — the shape of a byte-pair

@@ -203,7 +203,7 @@ class PlanMarkersSpec extends SparkSpec {
     // the (now checkpoint-rooted) full query plans.
     val docs = Tables.load(engineSpark, dir, "documents")
     val p = graft.dedup.Jaccard
-      .cappedSets(docs, "doc_id", "text", native = true, maxDf = 2000L)
+      .cappedSets(docs, "doc_id", "text", maxDf = 2000L)
       .queryExecution.executedPlan.toString
     assert(p.contains("array_except"),
       "capped sets must rebuild via array_except of the heavy members")

@@ -1,13 +1,13 @@
 package graft.catalyst
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.dedup.{MinHash, SimHash}
-import graft.text.Text
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd expressions must be bit-identical to the
-  * higher-order-function formulations (both are pinned by the DuckDB
-  * oracles; this spec checks them against each other on real text).
+  * higher-order-function formulations in [[HofReference]] (both are
+  * pinned by the DuckDB oracles; this spec checks them against each other
+  * on real text).
   */
 class TextHashExpressionsSpec extends SparkSpec {
 
@@ -16,17 +16,17 @@ class TextHashExpressionsSpec extends SparkSpec {
     .select("doc_id", "text")
 
   test("native minhash signature == HOF signature") {
-    val a = MinHash.signatures(docs, "doc_id", "text", native = true)
+    val a = MinHash.signatures(docs, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = MinHash.signatures(docs, "doc_id", "text")
+    val b = HofReference.signatures(docs, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(a == b)
   }
 
   test("native shingles == HOF shingles") {
-    val a = MinHash.withShingles(docs, "doc_id", "text", native = true)
+    val a = MinHash.withShingles(docs, "doc_id", "text")
       .orderBy("doc_id").select("__sh").collect().map(_.getSeq[Long](0)).toSeq
-    val b = MinHash.withShingles(docs, "doc_id", "text")
+    val b = HofReference.withShingles(docs, "doc_id", "text")
       .orderBy("doc_id").select("__sh").collect().map(_.getSeq[Long](0)).toSeq
     assert(a == b)
   }
@@ -35,16 +35,16 @@ class TextHashExpressionsSpec extends SparkSpec {
     val both = docs.select(
       col("doc_id"),
       call_function("graft_simhash16", col("text")).as("ns"),
-      SimHash.simhash(col("text")).as("hs"),
+      HofReference.simhash(col("text")).as("hs"),
       call_function("graft_fingerprint", col("text")).as("nf"),
-      Text.fingerprint(col("text")).as("hf"))
+      HofReference.fingerprint(col("text")).as("hf"))
     assert(both.filter(col("ns") =!= col("hs") || col("nf") =!= col("hf")).count() == 0)
   }
 
   test("native simhash64 == HOF simhash64") {
     val both = docs.limit(50).select(
-      SimHash.simhash64(col("text"), native = true).as("n"),
-      SimHash.simhash64(col("text")).as("h"))
+      SimHash.simhash64(col("text")).as("n"),
+      HofReference.simhash64(col("text")).as("h"))
     assert(both.filter(col("n") =!= col("h")).count() == 0)
   }
 
@@ -62,13 +62,13 @@ class TextHashExpressionsSpec extends SparkSpec {
       .toDF("id", "text")
     val both = d.select(
       call_function("graft_simhash16", col("text")).as("ns"),
-      SimHash.simhash(col("text")).as("hs"),
+      HofReference.simhash(col("text")).as("hs"),
       call_function("graft_fingerprint", col("text")).as("nf"),
-      Text.fingerprint(col("text")).as("hf"))
+      HofReference.fingerprint(col("text")).as("hf"))
     assert(both.filter(col("ns") =!= col("hs") || col("nf") =!= col("hf")).count() == 0)
-    val a = MinHash.signatures(d, "id", "text", native = true)
+    val a = MinHash.signatures(d, "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val b = MinHash.signatures(d, "id", "text")
+    val b = HofReference.signatures(d, "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(a == b)
   }
@@ -77,9 +77,9 @@ class TextHashExpressionsSpec extends SparkSpec {
     import spark.implicits._
     val d = Seq((1L, ""), (2L, "one"), (3L, "a  b c"), (4L, null.asInstanceOf[String]))
       .toDF("id", "text")
-    val a = MinHash.signatures(d.filter(col("text").isNotNull), "id", "text", native = true)
+    val a = MinHash.signatures(d.filter(col("text").isNotNull), "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val b = MinHash.signatures(d.filter(col("text").isNotNull), "id", "text")
+    val b = HofReference.signatures(d.filter(col("text").isNotNull), "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(a == b)
     val n = d.filter(col("id") === 4)

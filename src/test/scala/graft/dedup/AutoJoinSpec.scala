@@ -30,9 +30,9 @@ class AutoJoinSpec extends SparkSpec {
   test("jaccard: direct, ppjoin, and auto produce identical pairs") {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
-    val direct = key(Jaccard.pairsDirect(docs, "doc_id", "text", 6000L, native = true))
-    val pp = key(Jaccard.pairs(docs, "doc_id", "text", 6000L, native = true))
-    val auto = key(Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, native = true))
+    val direct = key(Jaccard.pairsDirect(docs, "doc_id", "text", 6000L))
+    val pp = key(Jaccard.pairs(docs, "doc_id", "text", 6000L))
+    val auto = key(Jaccard.pairsAuto(docs, "doc_id", "text", 6000L))
     assert(direct.nonEmpty) // the planted near-copies must actually pair
     assert(direct == pp && direct == auto)
   }
@@ -40,9 +40,9 @@ class AutoJoinSpec extends SparkSpec {
   test("containment: direct, ppjoin, and auto produce identical pairs") {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Long, Long)].collect().toSet
-    val direct = key(Containment.pairsDirect(docs, "doc_id", "text", 8000L, native = true))
-    val pp = key(Containment.pairs(docs, "doc_id", "text", 8000L, native = true))
-    val auto = key(Containment.pairsAuto(docs, "doc_id", "text", 8000L, native = true))
+    val direct = key(Containment.pairsDirect(docs, "doc_id", "text", 8000L))
+    val pp = key(Containment.pairs(docs, "doc_id", "text", 8000L))
+    val auto = key(Containment.pairsAuto(docs, "doc_id", "text", 8000L))
     assert(direct.nonEmpty)
     assert(direct == pp && direct == auto)
   }
@@ -52,17 +52,13 @@ class AutoJoinSpec extends SparkSpec {
     // direct self-join has no window at all (df cap inert here).
     // materialize = false keeps the lazy plan inspectable (the default
     // localCheckpoints the pairs, collapsing the plan to a LogicalRDD)
-    val below = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, native = true,
-      directMaxDocs = Long.MaxValue, materialize = false)
+    val below = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, directMaxDocs = Long.MaxValue, materialize = false)
     assert(!below.queryExecution.optimizedPlan.toString.contains("row_number"))
-    val above = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, native = true,
-      directMaxDocs = 0L, materialize = false)
+    val above = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, directMaxDocs = 0L, materialize = false)
     assert(above.queryExecution.optimizedPlan.toString.contains("row_number"))
-    val cBelow = Containment.pairsAuto(docs, "doc_id", "text", 8000L, native = true,
-      directMaxDocs = Long.MaxValue, materialize = false)
+    val cBelow = Containment.pairsAuto(docs, "doc_id", "text", 8000L, directMaxDocs = Long.MaxValue, materialize = false)
     assert(!cBelow.queryExecution.optimizedPlan.toString.contains("row_number"))
-    val cAbove = Containment.pairsAuto(docs, "doc_id", "text", 8000L, native = true,
-      directMaxDocs = 0L, materialize = false)
+    val cAbove = Containment.pairsAuto(docs, "doc_id", "text", 8000L, directMaxDocs = 0L, materialize = false)
     assert(cAbove.queryExecution.optimizedPlan.toString.contains("row_number"))
   }
 
@@ -75,25 +71,23 @@ class AutoJoinSpec extends SparkSpec {
     // to PPJoin here while materialize mode went direct.
     val padded = docs.unionAll(
       (0 until 15).map(i => (500L + i, "tiny doc")).toDF("doc_id", "text"))
-    val lean = Jaccard.pairsAuto(padded, "doc_id", "text", 6000L, native = true,
-      directMaxDocs = 30L, materialize = false)
+    val lean = Jaccard.pairsAuto(padded, "doc_id", "text", 6000L, directMaxDocs = 30L, materialize = false)
     assert(!lean.queryExecution.optimizedPlan.toString.contains("row_number"),
       "lean mode must dispatch on non-empty sets, not raw rows")
     // materialize mode's plan collapses to a LogicalRDD, so its pick is
     // pinned by result identity against the lean direct plan instead
     def key(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
-    val mat = Jaccard.pairsAuto(padded, "doc_id", "text", 6000L, native = true,
-      directMaxDocs = 30L)
+    val mat = Jaccard.pairsAuto(padded, "doc_id", "text", 6000L, directMaxDocs = 30L)
     assert(key(mat) == key(lean) && key(lean).nonEmpty)
   }
 
   test("pairsAuto releases its input cache (no corpus-sized blocks accumulate)") {
     import org.apache.spark.storage.StorageLevel
-    Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, native = true).count()
+    Jaccard.pairsAuto(docs, "doc_id", "text", 6000L).count()
     assert(docs.storageLevel == StorageLevel.NONE,
       "Jaccard.pairsAuto must unpersist its input before returning")
-    Containment.pairsAuto(docs, "doc_id", "text", 8000L, native = true).count()
+    Containment.pairsAuto(docs, "doc_id", "text", 8000L).count()
     assert(docs.storageLevel == StorageLevel.NONE,
       "Containment.pairsAuto must unpersist its input before returning")
   }
@@ -107,10 +101,8 @@ class AutoJoinSpec extends SparkSpec {
     // storage, reclaimed by the ContextCleaner when the frame goes out
     // of scope — so only non-checkpoint survivors count as leaks.
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, native = true,
-      directMaxDocs = 0L).count()
-    Containment.pairsAuto(docs, "doc_id", "text", 8000L, native = true,
-      directMaxDocs = 0L).count()
+    Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, directMaxDocs = 0L).count()
+    Containment.pairsAuto(docs, "doc_id", "text", 8000L, directMaxDocs = 0L).count()
     val leaked = (spark.sparkContext.getPersistentRDDs -- before)
       .filterNot(_._2.isCheckpointed)
     assert(leaked.isEmpty,
@@ -121,11 +113,11 @@ class AutoJoinSpec extends SparkSpec {
     import org.apache.spark.storage.StorageLevel
     val mine = docs.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val j = Jaccard.pairsAuto(mine, "doc_id", "text", 6000L, native = true)
+      val j = Jaccard.pairsAuto(mine, "doc_id", "text", 6000L)
       assert(j.count() > 0)
       assert(mine.storageLevel == StorageLevel.MEMORY_AND_DISK,
         "a caller-persisted input must keep its cache across Jaccard.pairsAuto")
-      val c = Containment.pairsAuto(mine, "doc_id", "text", 8000L, native = true)
+      val c = Containment.pairsAuto(mine, "doc_id", "text", 8000L)
       assert(c.count() > 0)
       assert(mine.storageLevel == StorageLevel.MEMORY_AND_DISK,
         "a caller-persisted input must keep its cache across Containment.pairsAuto")

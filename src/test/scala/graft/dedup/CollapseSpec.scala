@@ -52,9 +52,9 @@ class CollapseSpec extends SparkSpec {
     test(s"jaccard collapse == direct on identical-set groups ($label)") {
       val df = corpus(seed, nGroups = 4, mPerGroup = 6, nLoners = 12)
       val viaCollapse = collect3(
-        Jaccard.pairs(df, "doc_id", "text", minBp, native = false, maxDf))
+        Jaccard.pairs(df, "doc_id", "text", minBp, maxDf))
       val direct = collect3(
-        Jaccard.pairsDirect(df, "doc_id", "text", minBp, native = false, maxDf))
+        Jaccard.pairsDirect(df, "doc_id", "text", minBp, maxDf))
       assert(viaCollapse == direct)
       // every within-group pair is present at 10000 bp: 4 groups x C(6,2)
       val within = viaCollapse.filter(_._3 == 10000L)
@@ -64,15 +64,15 @@ class CollapseSpec extends SparkSpec {
     test(s"containment collapse == direct on identical-set groups ($label)") {
       val df = corpus(seed, nGroups = 4, mPerGroup = 6, nLoners = 12)
       val viaCollapse = collect5(
-        Containment.pairs(df, "doc_id", "text", minBp, native = false, maxDf))
+        Containment.pairs(df, "doc_id", "text", minBp, maxDf))
       val direct = collect5(
-        Containment.pairsDirect(df, "doc_id", "text", minBp, native = false, maxDf))
+        Containment.pairsDirect(df, "doc_id", "text", minBp, maxDf))
       assert(viaCollapse == direct)
     }
 
     test(s"subsets collapse == brute force on identical-set groups ($label)") {
       val df = corpus(seed, nGroups = 4, mPerGroup = 6, nLoners = 12)
-      val ss = Jaccard.cappedSets(df, "doc_id", "text", native = false, maxDf)
+      val ss = Jaccard.cappedSets(df, "doc_id", "text", maxDf)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
       val want = {
         val flagged = for {
@@ -86,7 +86,7 @@ class CollapseSpec extends SparkSpec {
         }.toSet
       }
       val got = collect4(
-        Containment.subsets(df, "doc_id", "text", minBp, native = false, maxDf))
+        Containment.subsets(df, "doc_id", "text", minBp, maxDf))
       assert(got == want)
       // every non-first sibling is flagged (contained 10000 bp somewhere)
       assert(got.size >= 4 * 5, s"expected >= 20 flagged siblings, got ${got.size}")
@@ -97,11 +97,11 @@ class CollapseSpec extends SparkSpec {
     val df = corpus(9, nGroups = 3, mPerGroup = 5, nLoners = 10)
     val on = collect3(Jaccard.pairs(df, "doc_id", "text", 8000L))
     val off = collect3(Jaccard.pairs(df, "doc_id", "text", 8000L,
-      native = false, maxDf = Long.MaxValue, collapseSiblings = false))
+      maxDf = Long.MaxValue, collapseSiblings = false))
     assert(on == off)
     val cOn = collect5(Containment.pairs(df, "doc_id", "text", 9000L))
     val cOff = collect5(Containment.pairs(df, "doc_id", "text", 9000L,
-      native = false, maxDf = Long.MaxValue, collapseSiblings = false))
+      maxDf = Long.MaxValue, collapseSiblings = false))
     assert(cOn == cOff)
   }
 
@@ -110,7 +110,7 @@ class CollapseSpec extends SparkSpec {
     for (minBp <- Seq(8000L, 9500L)) {
       val on = collect4(Containment.subsets(df, "doc_id", "text", minBp))
       val off = collect4(Containment.subsets(df, "doc_id", "text", minBp,
-        native = false, maxDf = Long.MaxValue, collapseSiblings = false))
+        maxDf = Long.MaxValue, collapseSiblings = false))
       assert(on == off, s"minBp=$minBp")
     }
   }
@@ -119,16 +119,16 @@ class CollapseSpec extends SparkSpec {
     val df = corpus(10, nGroups = 3, mPerGroup = 4, nLoners = 12)
     for (minBp <- Seq(8000L, 9500L); collapse <- Seq(true, false)) {
       val want = collect4(Containment.subsets(df, "doc_id", "text", minBp,
-        native = false, maxDf = Long.MaxValue, collapseSiblings = collapse))
+        maxDf = Long.MaxValue, collapseSiblings = collapse))
       val pos = collect4(Containment.subsets(df, "doc_id", "text", minBp,
-        native = false, maxDf = Long.MaxValue, collapseSiblings = collapse,
+        maxDf = Long.MaxValue, collapseSiblings = collapse,
         positionalFilter = true))
       assert(pos == want, s"subsets minBp=$minBp collapse=$collapse")
     }
     for (minBp <- Seq(8000L, 9500L)) {
       val want = collect5(Containment.pairs(df, "doc_id", "text", minBp))
       val noPos = collect5(Containment.pairs(df, "doc_id", "text", minBp,
-        native = false, maxDf = Long.MaxValue, collapseSiblings = true,
+        maxDf = Long.MaxValue, collapseSiblings = true,
         positionalFilter = false))
       assert(noPos == want, s"pairs minBp=$minBp")
     }
@@ -146,7 +146,7 @@ class CollapseSpec extends SparkSpec {
       == collect4(Containment.subsets(free, "doc_id", "text", 8000L)))
     // materialize = false probes the raw lineage, same answer
     assert(collect4(Containment.subsetsAuto(heavy, "doc_id", "text", 9000L,
-      native = false, maxDf = Long.MaxValue, materialize = false))
+      maxDf = Long.MaxValue, materialize = false))
       == collect4(Containment.subsets(heavy, "doc_id", "text", 9000L)))
   }
 
@@ -158,15 +158,15 @@ class CollapseSpec extends SparkSpec {
     val free = corpus(14, nGroups = 0, mPerGroup = 0, nLoners = 25)
     for (df <- Seq(heavy, free)) {
       assert(collect3(Jaccard.pairsAuto(df, "doc_id", "text", 8000L,
-        native = false, maxDf = Long.MaxValue, directMaxDocs = 0L))
+        maxDf = Long.MaxValue, directMaxDocs = 0L))
         == collect3(Jaccard.pairs(df, "doc_id", "text", 8000L)))
       assert(collect5(Containment.pairsAuto(df, "doc_id", "text", 9000L,
-        native = false, maxDf = Long.MaxValue, directMaxDocs = 0L))
+        maxDf = Long.MaxValue, directMaxDocs = 0L))
         == collect5(Containment.pairs(df, "doc_id", "text", 9000L)))
     }
     // materialize = false probes the raw lineage, same answer
     assert(collect3(Jaccard.pairsAuto(heavy, "doc_id", "text", 8000L,
-      native = false, maxDf = Long.MaxValue, directMaxDocs = 0L,
+      maxDf = Long.MaxValue, directMaxDocs = 0L,
       materialize = false))
       == collect3(Jaccard.pairs(heavy, "doc_id", "text", 8000L)))
   }
@@ -180,7 +180,7 @@ class CollapseSpec extends SparkSpec {
     // least() anywhere)
     val df = corpus(15, nGroups = 0, mPerGroup = 0, nLoners = 25)
     def auto(minDocs: Long) = Containment.subsetsAuto(df, "doc_id", "text", 8000L,
-      native = false, maxDf = Long.MaxValue, materialize = false,
+      maxDf = Long.MaxValue, materialize = false,
       positionalMinDocs = minDocs)
     val off = auto(Long.MaxValue)
     val on = auto(0L)
@@ -192,10 +192,10 @@ class CollapseSpec extends SparkSpec {
     // so identity is the assertion here; CollapseSpec's knob-combo test
     // above pins the fixed positionalFilter knob's plan-onlyness)
     val pOff = collect5(Containment.pairsAuto(df, "doc_id", "text", 9000L,
-      native = false, maxDf = Long.MaxValue, directMaxDocs = 0L,
+      maxDf = Long.MaxValue, directMaxDocs = 0L,
       materialize = false, positionalMinDocs = Long.MaxValue))
     val pOn = collect5(Containment.pairsAuto(df, "doc_id", "text", 9000L,
-      native = false, maxDf = Long.MaxValue, directMaxDocs = 0L,
+      maxDf = Long.MaxValue, directMaxDocs = 0L,
       materialize = false, positionalMinDocs = 0L))
     assert(pOn == pOff)
   }
@@ -203,7 +203,7 @@ class CollapseSpec extends SparkSpec {
   test("collapse emits one rep per distinct set and a full membership map") {
     val df = corpus(7, nGroups = 3, mPerGroup = 4, nLoners = 5)
     val (reps, membership) =
-      Jaccard.collapse(Jaccard.cappedSets(df, "doc_id", "text", native = false, Long.MaxValue))
+      Jaccard.collapse(Jaccard.cappedSets(df, "doc_id", "text", Long.MaxValue))
     val repRows = reps.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet)
     // reps are distinct sets, keyed by their group's smallest member
     assert(repRows.map(_._2).distinct.length == repRows.length)

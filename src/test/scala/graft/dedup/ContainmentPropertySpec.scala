@@ -38,7 +38,7 @@ class ContainmentPropertySpec extends SparkSpec {
   private def cappedSets(
       docs: List[(Long, String)], maxDf: Long): Map[Long, Set[Long]] =
     Jaccard.cappedSets(docs.toDF("doc_id", "text"), "doc_id", "text",
-      native = true, maxDf)
+      maxDf)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
 
   test("Containment.pairs == brute force over the capped sets (all knob combos)") {
@@ -57,7 +57,7 @@ class ContainmentPropertySpec extends SparkSpec {
       } yield (i, j, inter, minN, bp)).toSet
       val got = Containment
         .pairs(docs.toDF("doc_id", "text"), "doc_id", "text", minBp,
-          native = true, maxDf, collapseSiblings = collapse,
+          maxDf, collapseSiblings = collapse,
           positionalFilter = positional)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       if (got != want)
@@ -89,7 +89,7 @@ class ContainmentPropertySpec extends SparkSpec {
       }.toSet
       val got = Containment
         .subsets(docs.toDF("doc_id", "text"), "doc_id", "text", minBp,
-          native = true, maxDf, collapseSiblings = collapse,
+          maxDf, collapseSiblings = collapse,
           positionalFilter = positional)
         .as[(Long, Long, Long, Long)].collect().toSet
       if (got != want)

@@ -37,7 +37,7 @@ class ContainmentSpec extends SparkSpec {
   }
 
   private def sets(df: DataFrame, maxDf: Long): Map[Long, Set[Long]] =
-    Jaccard.cappedSets(df, "doc_id", "text", native = false, maxDf)
+    Jaccard.cappedSets(df, "doc_id", "text", maxDf)
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet)
       .toMap
@@ -68,7 +68,7 @@ class ContainmentSpec extends SparkSpec {
 
     test(s"pairs equals brute force over the capped sets ($label)") {
       val df = corpus(seed, 24).toDF("doc_id", "text")
-      val got = Containment.pairs(df, "doc_id", "text", minBp, native = false, maxDf)
+      val got = Containment.pairs(df, "doc_id", "text", minBp, maxDf)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toSet
@@ -79,7 +79,7 @@ class ContainmentSpec extends SparkSpec {
 
     test(s"subsets equals brute force over the capped sets ($label)") {
       val df = corpus(seed, 24).toDF("doc_id", "text")
-      val got = Containment.subsets(df, "doc_id", "text", minBp, native = false, maxDf)
+      val got = Containment.subsets(df, "doc_id", "text", minBp, maxDf)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet

@@ -54,7 +54,7 @@ class IncrementalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-index").toFile
     val ref = Seq((1L, refText1), (2L, refText2)).toDF("doc_id", "text")
     Incremental.saveIndex(
-      Incremental.buildIndex(ref, "doc_id", "text", native = true), dir.toString)
+      Incremental.buildIndex(ref, "doc_id", "text"), dir.toString)
     // the refresh side: loadIndex is pure parquet scans — the reference
     // TEXT is not an input anywhere on this path, so nothing reference-side
     // can be recomputed
@@ -66,7 +66,7 @@ class IncrementalSpec extends SparkSpec {
       (12L, "totally different words only")) // clean
       .toDF("doc_id", "text")
     val fromIndex = Incremental
-      .survivors(fresh, idx, "doc_id", "text", 8000L, native = true)
+      .survivors(fresh, idx, "doc_id", "text", 8000L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     val inline = Incremental.survivors(fresh, ref, "doc_id", "text", minBp = 8000L)
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -76,7 +76,7 @@ class IncrementalSpec extends SparkSpec {
     val batch2 = Seq((20L, refText2), (21L, "yet another clean document text"))
       .toDF("doc_id", "text")
     val out2 = Incremental
-      .survivors(batch2, idx, "doc_id", "text", 8000L, native = true)
+      .survivors(batch2, idx, "doc_id", "text", 8000L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(out2 == Seq(21L))
   }

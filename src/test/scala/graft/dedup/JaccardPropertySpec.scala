@@ -59,10 +59,10 @@ class JaccardPropertySpec extends SparkSpec {
         // the contract is relative to the CAPPED sets — brute force reads
         // them from the same seam the join consumes
         val sets = Jaccard
-          .cappedSets(df, "doc_id", "text", native = true, maxDf)
+          .cappedSets(df, "doc_id", "text", maxDf)
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
         val got = Jaccard
-          .pairs(df, "doc_id", "text", minBp, native = true, maxDf,
+          .pairs(df, "doc_id", "text", minBp, maxDf,
             collapseSiblings = collapse)
           .as[(Long, Long, Long)].collect().toSet
         val want = bruteForce(sets, minBp)
@@ -87,13 +87,11 @@ class JaccardPropertySpec extends SparkSpec {
     .toDF("doc_id", "text")
     for (collapse <- Seq(true, false)) {
       val at10000 = Jaccard
-        .pairs(docs, "doc_id", "text", 10000L, native = true,
-          collapseSiblings = collapse)
+        .pairs(docs, "doc_id", "text", 10000L, collapseSiblings = collapse)
         .as[(Long, Long, Long)].collect().toSet
       assert(at10000 == Set((1L, 2L, 10000L)), s"collapse=$collapse: $at10000")
       val at5000 = Jaccard
-        .pairs(docs, "doc_id", "text", 5000L, native = true,
-          collapseSiblings = collapse)
+        .pairs(docs, "doc_id", "text", 5000L, collapseSiblings = collapse)
         .as[(Long, Long, Long)].collect().toSet
       // the J=1/2 pairs enter exactly AT the 5000 boundary
       assert(at5000 == Set((1L, 2L, 10000L),

@@ -29,7 +29,7 @@ class ProbeSpec extends SparkSpec {
     // naturally, including across docs with different word multisets
     val prop = Prop.forAll(genCorpus) { docs =>
       val sets = Jaccard.cappedSets(docs.toDF("doc_id", "text"),
-        "doc_id", "text", native = false, Long.MaxValue)
+        "doc_id", "text", Long.MaxValue)
       val (gotDocs, gotMass) = Jaccard.probeSets(sets)
       val bySet = sets.collect()
         .map(r => r.getSeq[Long](1).toVector)
@@ -43,7 +43,7 @@ class ProbeSpec extends SparkSpec {
 
   test("probeSets on an empty corpus reads (0, 0), not null") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val sets = Jaccard.cappedSets(empty, "doc_id", "text", native = false, Long.MaxValue)
+    val sets = Jaccard.cappedSets(empty, "doc_id", "text", Long.MaxValue)
     assert(Jaccard.probeSets(sets) == ((0L, 0L)))
   }
 

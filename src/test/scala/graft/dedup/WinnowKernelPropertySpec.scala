@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.catalyst.TextHashKernels
 
 /** r19: the native graft_winnow kernel (monotonic-deque window minima)
@@ -16,7 +16,7 @@ import graft.catalyst.TextHashKernels
   *     distinct) over tie-heavy token streams (tiny alphabet => constant
   *     shingle runs, the winnowing degenerate case);
   *  2. a DataFrame equality test of Winnow.fingerprints (kernel path) vs
-  *     Winnow.fingerprintsHof (the retained HOF form) on generated docs.
+  *     HofReference.winnowFingerprints (the HOF form) on generated docs.
   */
 class WinnowKernelPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -73,7 +73,7 @@ class WinnowKernelPropertySpec extends SparkSpec {
     for (w <- Seq(1, 4, 8)) {
       val kernel = Winnow.fingerprints(docs, "doc_id", "text", w)
         .as[(Long, Long, Long)].collect().toSet
-      val hof = Winnow.fingerprintsHof(docs, "doc_id", "text", w)
+      val hof = HofReference.winnowFingerprints(docs, "doc_id", "text", w)
         .as[(Long, Long, Long)].collect().toSet
       assert(kernel == hof, s"kernel/HOF divergence at w=$w")
     }

@@ -51,9 +51,7 @@ class WinnowSpec extends SparkSpec {
     val docs = Seq((1L, uniqueTokens("t", 40))).toDF("doc_id", "text")
     val fps = Winnow.fingerprints(docs, "doc_id", "text", w = 4)
       .select("pos", "fp").as[(Long, Long)].collect()
-    val sh = docs.select(
-      MinHash.shinglesFromCodes(
-        graft.text.Text.wordCodes(col("text"))).as("sh"))
+    val sh = docs.select(call_function("graft_shingles", col("text")).as("sh"))
       .as[Seq[Long]].collect().head
     fps.foreach { case (pos, fp) =>
       assert(sh(pos.toInt - 1) == fp, s"pos $pos does not hold fp $fp")

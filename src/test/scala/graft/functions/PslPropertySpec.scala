@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 
 /** Property pin for the PSL column expressions: a sequential Scala
   * reference implementation of the publicsuffix.org algorithm (written
@@ -77,11 +77,11 @@ class PslPropertySpec extends SparkSpec {
 
   test("native graft_psl_labels kernel equals the columnar InSet chain") {
     // the kernel replaced the InSet literals on the hot path (first-use
-    // janino cost); the columnar form stays as this parity reference
+    // janino cost); the columnar form is this spec's test-scope reference
     val prop = Prop.forAll(Gen.listOfN(80, hostGen)) { hosts =>
       val got = hosts.toDF("h")
         .select(Psl.publicSuffixLabels(col("h")).as("k"),
-          Psl.publicSuffixLabelsColumnar(col("h")).as("c"))
+          HofReference.publicSuffixLabels(col("h")).as("c"))
         .collect()
       hosts.zip(got).forall { case (h, row) =>
         val ok = row.getInt(0) == row.getInt(1)

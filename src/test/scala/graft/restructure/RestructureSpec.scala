@@ -305,48 +305,104 @@ class RestructureSpec extends SparkSpec {
     assert(rolled == want)
   }
 
-  test("cross-partition keep-last ties break deterministically, same row both strategies") {
+  test("cross-partition keep-last ties break deterministically") {
     // equal dedup key (value.time) at the SAME offset in two partitions:
     // _offset alone cannot order them — the (offset, partition) struct
-    // must pick the partition-1 row under BOTH strategies
-    def mk(salted: Boolean) = {
-      val dir = Files.createTempDirectory("graft-tie").toFile
-      writeAvro(
-        new File(dir, "in/application_server_status/partition=0/application_server_status+0+0000000005.avro"),
-        Seq(record(t1, "FROM_P0")))
-      writeAvro(
-        new File(dir, "in/application_server_status/partition=1/application_server_status+1+0000000005.avro"),
-        Seq(record(t1, "FROM_P1")))
-      val cfg = RestructureConfig(
-        inputDir = new File(dir, "in").toString,
-        outputDir = new File(dir, "out").toString,
-        stateFile = new File(dir, "state/offsets.json").toString,
-        compression = None,
-        minimumFileAgeMs = 0L,
-        dedupDefault = DedupConfig(enable = true, distinctFields = Seq("value.time")),
-        dedupSalted = salted)
-      val job = new Restructure(spark, cfg)
-      job.run()
-      job.readOutput("application_server_status")
-        .select("`value.serverStatus`").collect().map(_.getString(0)).toSeq
-    }
-    assert(mk(salted = false) == Seq("FROM_P1"))
-    assert(mk(salted = true) == Seq("FROM_P1"))
+    // must pick the partition-1 row
+    val dir = Files.createTempDirectory("graft-tie").toFile
+    writeAvro(
+      new File(dir, "in/application_server_status/partition=0/application_server_status+0+0000000005.avro"),
+      Seq(record(t1, "FROM_P0")))
+    writeAvro(
+      new File(dir, "in/application_server_status/partition=1/application_server_status+1+0000000005.avro"),
+      Seq(record(t1, "FROM_P1")))
+    val cfg = RestructureConfig(
+      inputDir = new File(dir, "in").toString,
+      outputDir = new File(dir, "out").toString,
+      stateFile = new File(dir, "state/offsets.json").toString,
+      compression = None,
+      minimumFileAgeMs = 0L,
+      dedupDefault = DedupConfig(enable = true, distinctFields = Seq("value.time")))
+    val job = new Restructure(spark, cfg)
+    job.run()
+    assert(job.readOutput("application_server_status")
+      .select("`value.serverStatus`").collect().map(_.getString(0)).toSeq == Seq("FROM_P1"))
   }
 
-  test("dedupSalted strategy writes the identical output (plan-only knob)") {
-    // the fixture carries a real duplicate (two CONNECTED records at t1),
-    // so the salted path's combine has actual work to do
-    val (_, cfgW) = setup()
-    new Restructure(spark, cfgW).run()
-    val windowed = new Restructure(spark, cfgW).readOutput("application_server_status")
-      .orderBy("`value.time`", "`value.serverStatus`").collect().map(_.toSeq).toSeq
-    val (_, cfg0) = setup()
-    val cfgS = cfg0.copy(dedupSalted = true)
-    new Restructure(spark, cfgS).run()
-    val salted = new Restructure(spark, cfgS).readOutput("application_server_status")
-      .orderBy("`value.time`", "`value.serverStatus`").collect().map(_.toSeq).toSeq
-    assert(salted == windowed && windowed.size == 3)
+  test("keep-last dedup with default keys on a payload holding a map") {
+    // default keys are the whole payload, here a value struct holding an
+    // Avro map (the questionnaire-answer shape): Spark cannot sort maps, so
+    // the dedup window must key on an orderable form of it
+    val schema = new Schema.Parser().parse(
+      """{"type":"record","name":"Envelope","fields":[
+        | {"name":"key","type":{"type":"record","name":"ObservationKey","fields":[
+        |   {"name":"projectId","type":"string"},
+        |   {"name":"userId","type":"string"},
+        |   {"name":"sourceId","type":"string"}]}},
+        | {"name":"value","type":{"type":"record","name":"Answers","fields":[
+        |   {"name":"time","type":"double"},
+        |   {"name":"answers","type":{"type":"map","values":"string"}}]}}
+        |]}""".stripMargin)
+    def rec(answers: (String, String)*): GenericRecord = {
+      val key = new GenericData.Record(schema.getField("key").schema())
+      key.put("projectId", "p"); key.put("userId", "u"); key.put("sourceId", "s")
+      val m = new java.util.LinkedHashMap[String, String]()
+      answers.foreach { case (k, v) => m.put(k, v) }
+      val value = new GenericData.Record(schema.getField("value").schema())
+      value.put("time", t1); value.put("answers", m)
+      val r = new GenericData.Record(schema)
+      r.put("key", key); r.put("value", value)
+      r
+    }
+    def write(file: File, records: GenericRecord*): Unit = {
+      file.getParentFile.mkdirs()
+      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+      w.create(schema, file)
+      records.foreach(w.append)
+      w.close()
+    }
+    val dir = Files.createTempDirectory("graft-map-dedup").toFile
+    val topic = new File(dir, "in/questionnaire")
+    write(new File(topic, "partition=1/questionnaire+1+0000000006+0000000007.avro"),
+      rec("a" -> "1", "b" -> "2"), rec("b" -> "2", "a" -> "1"))
+    write(new File(topic, "partition=0/questionnaire+0+0000000007+0000000008.avro"),
+      rec("a" -> "1", "b" -> "2"), rec("a" -> "3"))
+    val cfg = RestructureConfig(
+      inputDir = new File(dir, "in").toString,
+      outputDir = new File(dir, "out").toString,
+      stateFile = new File(dir, "state/offsets.json").toString,
+      compression = None,
+      minimumFileAgeMs = 0L,
+      csvDataHeaders = false, // one JSON-encoded map column
+      dedupDefault = DedupConfig(enable = true))
+    val job = new Restructure(spark, cfg)
+    assert(job.run().records == 2)
+    assert(job.readOutput("questionnaire", dedup = false)
+      .select("`value.answers`").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("""{"a":"1","b":"2"}""", """{"a":"3"}"""))
+
+    // which record survives: the dedup step itself over flat records that
+    // keep their metadata. The same entries in another insertion order are
+    // the same key; per key the last by (offset, partition) wins.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val flatSchema = StructType(Seq(
+      StructField("value", StructType(Seq(
+        StructField("time", DoubleType),
+        StructField("answers", MapType(StringType, StringType))))),
+      StructField("_offset", LongType),
+      StructField("_partition", IntegerType)))
+    def flat(offset: Long, partition: Int, answers: (String, String)*): Row =
+      Row(Row(t1, scala.collection.immutable.ListMap(answers: _*)), offset, partition)
+    val records = spark.createDataFrame(java.util.Arrays.asList(
+      flat(6, 1, "a" -> "1", "b" -> "2"),
+      flat(7, 1, "b" -> "2", "a" -> "1"),
+      flat(7, 0, "a" -> "1", "b" -> "2"),
+      flat(5, 1, "a" -> "3"),
+      flat(8, 0, "a" -> "3")), flatSchema)
+    val kept = job.dedup("questionnaire", records)
+      .select("_offset", "_partition").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(kept == Set((7L, 1), (8L, 0)))
   }
 
   test("restructure: parquet sink keeps the flattened layout and round-trips") {

@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
     val nearText = (toks.dropRight(1) :+ "ZZZZ").mkString(" ")
     val ref = Seq((1L, refText)).toDF("doc_id", "text")
     graft.dedup.Incremental.saveIndex(
-      graft.dedup.Incremental.buildIndex(ref, "doc_id", "text", native = true), ix)
+      graft.dedup.Incremental.buildIndex(ref, "doc_id", "text"), ix)
     // batch 1: an exact dup of the reference + a clean doc
     Seq((10L, refText), (11L, "totally different words only"))
       .toDF("doc_id", "text").write.parquet(in)

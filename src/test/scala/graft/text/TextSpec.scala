@@ -26,7 +26,7 @@ class TextSpec extends SparkSpec {
 
   test("fingerprint is order-sensitive and deterministic") {
     val d = Seq("a b c", "c b a", "a b c").toDF("text")
-    val out = d.select(Text.fingerprint(col("text"))).as[Long].collect().toSeq
+    val out = d.select(call_function("graft_fingerprint", col("text"))).as[Long].collect().toSeq
     assert(out(0) == out(2))
     assert(out(0) != out(1))
   }
@@ -34,7 +34,7 @@ class TextSpec extends SparkSpec {
   test("identical docs share simhash; hamming(identical)=0") {
     val d = Seq(("x", "spark query engine test"), ("y", "spark query engine test"))
       .toDF("id", "text")
-    val sigs = d.select(SimHash.simhash(col("text"))).as[Long].collect()
+    val sigs = d.select(call_function("graft_simhash16", col("text"))).as[Long].collect()
     assert(sigs(0) == sigs(1))
     val h = Seq((sigs(0), sigs(1)), (sigs(0), sigs(0) ^ 5L)).toDF("a", "b")
       .select(SimHash.hamming(col("a"), col("b")).cast("long")).as[Long].collect().toSeq
@@ -49,7 +49,7 @@ class TextSpec extends SparkSpec {
     val docs = (0 until 40).map { i =>
       (i.toLong, s"the quick brown fox jumps over the lazy dog variant$i tail words")
     }.toDF("doc_id", "text")
-    val sigs = docs.select(col("doc_id"), SimHash.simhash(col("text")).as("sig"))
+    val sigs = docs.select(col("doc_id"), call_function("graft_simhash16", col("text")).as("sig"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = (for {
       (i, si) <- sigs; (j, sj) <- sigs if i < j
@@ -66,14 +66,13 @@ class TextSpec extends SparkSpec {
     val docs = (0 until 40).map { i =>
       (i.toLong, s"the quick brown fox jumps over the lazy dog variant$i tail words")
     }.toDF("doc_id", "text")
-    val sigs = docs.select(col("doc_id"), SimHash.simhash64(col("text"), native = true).as("sig"))
+    val sigs = docs.select(col("doc_id"), SimHash.simhash64(col("text")).as("sig"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = (for {
       (i, si) <- sigs; (j, sj) <- sigs if i < j
       h = java.lang.Long.bitCount(si ^ sj) if h <= 3
     } yield (i, j, h.toLong)).toSet
-    val got = SimHash.nearDuplicates(docs, "doc_id", "text", maxBits = 3, bits = 64,
-      native = true)
+    val got = SimHash.nearDuplicates(docs, "doc_id", "text", maxBits = 3, bits = 64)
       .select(col("id_1"), col("id_2"), col("hamming").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
@@ -87,10 +86,10 @@ class TextSpec extends SparkSpec {
       (1L, base), (2L, base + " tail"),
       (3L, "ok"), (4L, "hi"), (5L, "yo there")) // <3 tokens: empty shingles
       .toDF("doc_id", "text")
-    val cand = MinHash.candidatePairs(docs, "doc_id", "text", native = true)
+    val cand = MinHash.candidatePairs(docs, "doc_id", "text")
       .select(col("id_1"), col("id_2")).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(cand.forall { case (a, b) => a <= 2 && b <= 2 }) // no short-doc pairs
-    val nd = MinHash.nearDuplicates(docs, "doc_id", "text", minBp = 5000L, native = true)
+    val nd = MinHash.nearDuplicates(docs, "doc_id", "text", minBp = 5000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(nd.toSeq == Seq((1L, 2L))) // and the verify never sees a 0/0
   }

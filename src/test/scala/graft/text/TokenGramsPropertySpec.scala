@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.catalyst.TextHashKernels
 
 /** r20: the native graft_token_grams / graft_token_chunks kernels must
@@ -17,7 +17,7 @@ import graft.catalyst.TextHashKernels
   *     unicode tokens (a space byte never occurs inside a multi-byte
   *     UTF-8 sequence; these verify it);
   *  2. DataFrame equality of the kernel call vs the retained HOF twins
-  *     ([[SpanDedup.gramsOfHof]], [[ChunkDedup.chunksOfHof]]).
+  *     ([[HofReference.tokenGrams]], [[HofReference.tokenChunks]]).
   */
 class TokenGramsPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -77,13 +77,13 @@ class TokenGramsPropertySpec extends SparkSpec {
       val kernelG = docs
         .select(call_function("graft_token_grams", col("text"), lit(k)).as("__gr"))
         .as[Seq[String]].collect().toSeq
-      val hofG = SpanDedup.gramsOfHof(docs, "text", k)
+      val hofG = HofReference.tokenGrams(docs, "text", k)
         .as[Seq[String]].collect().toSeq
       assert(kernelG == hofG, s"token-grams kernel/HOF divergence at k=$k")
       val kernelC = docs
         .select(call_function("graft_token_chunks", col("text"), lit(k)).as("__gr"))
         .as[Seq[String]].collect().toSeq
-      val hofC = ChunkDedup.chunksOfHof(docs, "text", k)
+      val hofC = HofReference.tokenChunks(docs, "text", k)
         .as[Seq[String]].collect().toSeq
       assert(kernelC == hofC, s"token-chunks kernel/HOF divergence at w=$k")
     }

@@ -21,21 +21,19 @@ object Dedup {
     *
     * Note `dropDuplicates` keeps an arbitrary FIRST row and does not
     * preserve order, so it is not semantics-equivalent.
+    *
+    * A key whose type contains a map (an Avro map field, or a payload
+    * struct holding one) is partitioned on its [[orderable]] form: the
+    * window sorts on its partition keys and Spark cannot order maps.
+    * Map-free keys pass through unchanged.
     */
   def keepLast(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(windowKeys(df, keys): _*).orderBy(col(orderCol).desc)
+    val types = df.select(keys.map(col): _*).schema.map(_.dataType)
+    val partition = keys.zip(types).map { case (k, t) => orderable(col(k), t) }
+    val w = Window.partitionBy(partition: _*).orderBy(col(orderCol).desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Window partition columns for `keys`. A key whose type contains a map
-    * (an Avro map field, or a payload struct holding one) is replaced by
-    * its [[orderable]] form: the window sorts on its partition keys and
-    * Spark cannot order maps. Map-free keys pass through unchanged. */
-  private def windowKeys(df: DataFrame, keys: Seq[String]): Seq[Column] = {
-    val types = df.select(keys.map(col): _*).schema.map(_.dataType)
-    keys.zip(types).map { case (k, t) => orderable(col(k), t) }
   }
 
   /** An orderable value equal for two rows exactly when `c` is: each map
@@ -81,7 +79,7 @@ object Dedup {
     * per distinct content survives. */
   def keepFirstDistinct(df: DataFrame, orderCol: String): DataFrame = {
     val keys = df.columns.filterNot(_ == orderCol).toSeq
-    val w = Window.partitionBy(windowKeys(df, keys): _*).orderBy(col(orderCol).asc)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

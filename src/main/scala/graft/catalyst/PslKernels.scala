@@ -7,9 +7,10 @@ import graft.functions.Psl
 /** Single-call Public Suffix List lookup backing `graft_psl_labels`.
   *
   * Same contract as the InSet-literal columnar form it replaced (kept as
-  * the test-scope parity reference of PslPropertySpec): exception rules first (longest wins, suffix =
-  * rule minus one label), then normal/wildcard rules in descending
-  * effective length, then the default rule (1 label).
+  * the test-scope parity reference of PslPropertySpec): exception rules
+  * first (longest wins, suffix = rule minus one label), then
+  * normal/wildcard rules in descending effective length, then the
+  * default rule (1 label).
   *
   * Why a kernel and not plan literals: the InSet form inlined the whole
   * rule list into the generated projection — correct and fast once warm,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.dedup.MinHash
 import graft.functions.Psl
 import graft.similarity.Similarity
 import graft.text.Hashing._
@@ -22,7 +21,7 @@ object HofReference {
   // ------------------------------------------------------------ text hashes
 
   /** Array[Long] of word codes for a document. */
-  def wordCodes(text: Column): Column = transform(Text.tokens(text), Text.wordCode(_))
+  private def wordCodes(text: Column): Column = transform(Text.tokens(text), Text.wordCode(_))
 
   /** Rolling-hash document fingerprint: fold over word codes,
     * h <- (h * FpB + code) mod FpM. Twin of graft_fingerprint. */
@@ -31,7 +30,7 @@ object HofReference {
 
   /** 3-word shingle hashes over a materialized word-codes array column
     * (empty for docs < 3 tokens). */
-  def shinglesFromCodes(codes: Column): Column =
+  private def shinglesFromCodes(codes: Column): Column =
     when(size(codes) >= 3,
       transform(sequence(lit(1), size(codes) - 2), i =>
         (element_at(codes, i) * ShingleS1 +
@@ -41,22 +40,23 @@ object HofReference {
 
   /** j-th minhash of a shingle array column: min over shingles of
     * (A(j) * (x mod P) + B(j)) mod P; P-1 sentinel for empty docs. */
-  def minhash(sh: Column, j: Int): Column =
+  private def minhash(sh: Column, j: Int): Column =
     coalesce(
       array_min(transform(sh, x => ((x % P) * A(j) + B(j)) % P)),
       lit(P - 1))
 
-  /** id + shingle array `__sh`: twin of [[MinHash.withShingles]]. Each
-    * array stage is its own projection so lambda bodies reference only
-    * attributes (an inlined subtree is re-evaluated per element). */
+  /** id + shingle array `__sh`: twin of
+    * [[graft.dedup.MinHash.withShingles]]. Each array stage is its own
+    * projection so lambda bodies reference only attributes (an inlined
+    * subtree is re-evaluated per element). */
   def withShingles(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), wordCodes(col(textCol)).as("__codes"))
       .select(col(idCol), shinglesFromCodes(col("__codes")).as("__sh"))
 
-  /** id + `__m0..__m{k-1}`: twin of [[MinHash.signatures]]. */
-  def signatures(df: DataFrame, idCol: String, textCol: String, k: Int = K): DataFrame =
+  /** id + `__m0..__m{K-1}`: twin of [[graft.dedup.MinHash.signatures]]. */
+  def signatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     withShingles(df, idCol, textCol)
-      .select(col(idCol) +: (0 until k).map(j => minhash(col("__sh"), j).as(s"__m$j")): _*)
+      .select(col(idCol) +: (0 until K).map(j => minhash(col("__sh"), j).as(s"__m$j")): _*)
 
   /** Vote sum for bit `i` under multiplier `mult`: sum over tokens of
     * 2*bit_i((code * mult) mod P) - 1. */
@@ -64,11 +64,11 @@ object HofReference {
     aggregate(codes, lit(0L), (acc, c) =>
       acc + (shiftright((c * mult) % P, i).bitwiseAND(lit(1L)) * 2L - 1L))
 
-  /** `bits`-wide simhash: bit i set iff its vote sum is strictly positive.
-    * Twin of graft_simhash16 at the default width. */
-  def simhash(text: Column, bits: Int = SimHashBits): Column = {
+  /** `SimHashBits`-wide simhash: bit i set iff its vote sum is strictly
+    * positive. Twin of graft_simhash16. */
+  def simhash(text: Column): Column = {
     val codes = wordCodes(text)
-    (0 until bits)
+    (0 until SimHashBits)
       .map(i => when(bitVote(codes, TokenHashA, i) > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ + _)
   }

@@ -24,32 +24,6 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Materialize a SMALL frame whose lineage is expensive and which the
-    * downstream plan consumes more than once (r19; guide §3.3/§5 —
-    * materializing an intermediate truncates the plan). Use SPARINGLY:
-    * AQE's runtime exchange reuse already deduplicates consumers whose
-    * subtrees are identical up to their last exchange, so truncation only
-    * pays when the consumers re-execute REAL compute below that point —
-    * measured on the r19 A/B: the recall gates' shared exact baseline and
-    * lsh_recall's bucketed pairs got SLOWER with truncation (the reused
-    * exchange already carried the expensive work; the checkpoint just
-    * added an eager job), while dsir_resample (histogram + admission join
-    * both re-scoring the corpus, −0.24 s) and ppl_buckets (3 consumers
-    * re-running the bigram pipeline, −0.27 s) got faster. Only for frames
-    * that are provably bounded (per-doc scalars, score slivers) — the
-    * corpus itself is never checkpointed here. Runs eagerly at
-    * DataFrame-construction time, inside the same run that consumes it:
-    * nothing persists across runs. `-Dgraft.reuse=off` is the measurement
-    * escape hatch (A/B inside one JVM; production default is ON). */
-  private def reuse(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.reuse").contains("off")) df
-    // r20 (r19 advisory): route through Lineage.truncate so cluster
-    // sessions with a checkpoint dir take a RELIABLE checkpoint —
-    // localCheckpoint's executor-pinned blocks would otherwise make an
-    // executor loss unrecoverable for the truncated lineage. Local mode
-    // behavior (localCheckpoint) is unchanged.
-    else Lineage.truncate(df)
-
   /** Stopword set shared with the oracle SQL. */
   val Stopwords: Seq[String] = Seq("the", "a")
 
@@ -2903,9 +2877,9 @@ object Queries {
     * in one task; same `cum <= budget` convention as token_budget_mix. */
   def dsirResample(s: SparkSession, dir: String): DataFrame = {
     val B = 8000L
-    // reuse: the histogram and the admission join both consume the DSIR
+    // truncate: the histogram and the admission join both consume the DSIR
     // scores — without truncation the scoring pipeline executes twice
-    val w = reuse(dsirWeights(s, dir)
+    val w = Lineage.truncate(dsirWeights(s, dir)
       .select(col("doc_id"), col("n_tokens"), col("millis_per_token").as("wgt")))
     val hist = w.groupBy(col("wgt")).agg(sum(col("n_tokens")).as("bt"))
     // histogram window: unpartitioned but over distinct weight VALUES only
@@ -2985,9 +2959,10 @@ object Queries {
     * bucket by construction (threshold semantics, the CCNet form), so
     * the split is deterministic on any partitioning. */
   def pplBuckets(s: SparkSession, dir: String): DataFrame = {
-    // reuse: the histogram, the total, and the final bucketing all consume
-    // the surprisal scores — without truncation the pipeline executes 3x
-    val scores = reuse(bigramSurprisal(s, dir)
+    // truncate: the histogram, the total, and the final bucketing all
+    // consume the surprisal scores — without truncation the pipeline
+    // executes 3x
+    val scores = Lineage.truncate(bigramSurprisal(s, dir)
       .select(col("doc_id"), col("millibits_per_bigram").as("mbpb")))
     val hist = scores.groupBy(col("mbpb")).agg(count(lit(1)).as("__c"))
     // the window input is the histogram (O(distinct scores)), not the corpus
@@ -3281,13 +3256,13 @@ object Queries {
     * equi-join, never a quadratic interval compare. Each pair is emitted
     * exactly once from the later start's bucket. */
   def intervalOverlapSessions(s: SparkSession, dir: String): DataFrame = {
-    // reuse(): the session table (a bounded per-user rollup, ~9.5k rows at
+    // truncate: the session table (a bounded per-user rollup, ~9.5k rows at
     // sf0.1) is BOTH sides of the self-join, and the two sides only share
     // the user_id exchange — the window + rollup + bucket-explode above it
     // re-ran once per side, and the final orderBy's range-partition
     // sampling pass re-ran them again (guide §5: materialize a
     // multiply-consumed sliver; measured −0.4 s warm at sf0.1)
-    val sess = reuse(Sessionize.sessions(
+    val sess = Lineage.truncate(Sessionize.sessions(
       t(s, dir, "events").filter(col("event_type") === "click"),
       Seq("user_id"), "ts", "event_id", 172800L))
     val a = sess.select(col("user_id").as("user_1"), col("session_id").as("session_1"),

@@ -66,9 +66,9 @@ object Sessions {
     // the plan-shaping SQLConfs (rationale on [[planConf]])
     val spark = planConf(pinnedCpus)
       .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      // reliable-checkpoint janitor: when a graft-owned session runs the
-      // curate pipeline in checkpointDir mode (CorpusPipeline
-      // .truncateLineage), the ContextCleaner deletes a checkpoint's
+      // reliable-checkpoint janitor: when a graft-owned session has a
+      // checkpoint dir (Lineage.truncate's reliable mode, e.g. curate's
+      // cfg.checkpointDir), the ContextCleaner deletes a checkpoint's
       // rdd-N directory once its RDD is garbage-collected — off by
       // default in Spark, which silently accumulates checkpoint data
       // batch after batch in a long-lived service. GC-driven cleanup is

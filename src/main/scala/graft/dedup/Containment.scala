@@ -108,7 +108,13 @@ object Containment {
   /** All pairs with floor(10000*|A∩B| / min(|A|,|B|)) >= minBp over
     * df-capped 3-gram shingle sets. Output (id_1, id_2, inter, min_n,
     * containment_bp), id_1 < id_2 — same result as the direct
-    * co-occurrence containment plan. */
+    * co-occurrence containment plan.
+    *
+    * Eager, like [[Jaccard.pairs]]: building this DataFrame runs one
+    * corpus-scale Spark job through [[graft.Lineage.truncate]],
+    * predicates applied to the result do not push below the sets build
+    * (it is rooted at that checkpoint), and cluster callers should set a
+    * checkpoint dir. */
   def pairs(
       df: DataFrame,
       idCol: String,
@@ -118,8 +124,7 @@ object Containment {
       collapseSiblings: Boolean = true,
       positionalFilter: Boolean = true): DataFrame = {
     require(minBp >= 1 && minBp <= 10000, "minBp in [1, 10000]")
-    // truncate the multiply-consumed sets lineage — rationale on
-    // [[Jaccard.pairs]]; the auto dispatch materializes via its own seam
+    // truncate the multiply-consumed sets lineage — rationale on [[Jaccard.pairs]]
     pairsFromSets(
       graft.Lineage.truncate(Jaccard.cappedSets(df, idCol, textCol, maxDf)),
       minBp, collapseSiblings, positionalFilter)
@@ -182,7 +187,12 @@ object Containment {
     * the cost of ranking the full probe side (100x blowup: -13% wall,
     * -31% spill; sf0.1 warm: ~+0.7 s — off by default here, unlike
     * [[pairs]]). Results are identical under every knob combination
-    * (CollapseSpec pins them). */
+    * (CollapseSpec pins them).
+    *
+    * Eager, like [[pairs]]: building this DataFrame runs one corpus-scale
+    * Spark job through [[graft.Lineage.truncate]], predicates applied to
+    * the result do not push below the sets build (it is rooted at that
+    * checkpoint), and cluster callers should set a checkpoint dir. */
   def subsets(
       df: DataFrame,
       idCol: String,
@@ -315,8 +325,8 @@ object Containment {
     * plan — and the probe's corpus size places the positional-filter
     * crossover ([[PositionalMinDocs]]). The default materialize mode
     * persists the capped sets frame across the exact probe + plan,
-    * localCheckpoints the result, and releases the cache before
-    * returning — measured at or below the fixed plans' own times on
+    * materializes the result through [[graft.Lineage.truncate]], and
+    * releases the cache before returning — measured at or below the fixed plans' own times on
     * both corpora (sf0.1 warm 1.43 s vs the plain plan's 1.52; 100x
     * 33.0 s vs 32.2/42.9 fixed — see [[Jaccard.pairsAuto]]).
     * `materialize = false` returns the lazy plan instead: one `count()`
@@ -351,7 +361,7 @@ object Containment {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val (nDocs, pairMass) = Jaccard.probeSets(cached)
-        run(cached, nDocs, pairMass).localCheckpoint()
+        graft.Lineage.truncate(run(cached, nDocs, pairMass))
       } finally cached.unpersist(blocking = false)
     }
   }

@@ -30,15 +30,6 @@ import org.apache.spark.sql.types._
   */
 object Jaccard {
 
-  /** All pairs with floor(10000*|A∩B|/|A∪B|) >= minBp over 3-gram shingle
-    * sets of `textCol`. Output: (id_1, id_2, jaccard_bp), id_1 < id_2.
-    *
-    * `maxDf` caps shingle document frequency: shingles present in more than
-    * `maxDf` documents are dropped from the sets before anything else runs
-    * (the standard stop-shingle guard — a single corpus-wide boilerplate
-    * shingle otherwise turns the equi-join into a full quadratic shuffle on
-    * one key). With the cap above the corpus max df the filter passes
-    * everything and the result is the unfiltered exact answer. */
   /** Distinct 3-gram shingle sets per id, optionally redefined as
     * {x : df(x) <= maxDf} (the stop-shingle guard). Shared by the
     * prefix-filtered Jaccard and containment joins: (__id, __set) with
@@ -168,6 +159,21 @@ object Jaccard {
     cross.unionAll(within)
   }
 
+  /** All pairs with floor(10000*|A∩B|/|A∪B|) >= minBp over 3-gram shingle
+    * sets of `textCol`. Output: (id_1, id_2, jaccard_bp), id_1 < id_2.
+    *
+    * `maxDf` caps shingle document frequency: shingles present in more than
+    * `maxDf` documents are dropped from the sets before anything else runs
+    * (the standard stop-shingle guard — a single corpus-wide boilerplate
+    * shingle otherwise turns the equi-join into a full quadratic shuffle on
+    * one key). With the cap above the corpus max df the filter passes
+    * everything and the result is the unfiltered exact answer.
+    *
+    * Eager: building this DataFrame runs one corpus-scale Spark job that
+    * checkpoints the capped sets through [[graft.Lineage.truncate]], so
+    * predicates applied to the result do not push below the sets build
+    * (filter the input instead). Cluster callers should set a checkpoint
+    * dir so the sets land on reliable storage, not executor memory. */
   def pairs(
       df: DataFrame,
       idCol: String,
@@ -183,11 +189,7 @@ object Jaccard {
     // cap chain (measured: 2-5 full kernel passes per query at sf0.1, plus
     // the optimizer re-planning the replicated lineage each time). One
     // eager materialization makes every consumer read the (compact:
-    // id + shingle array) sets frame instead. The auto dispatches
-    // ([[pairsAuto]]) already materialize through their probe seam and are
-    // untouched. Footprint note: this checkpoints a corpus-scale frame —
-    // in cluster mode set a checkpoint dir ([[graft.Lineage.truncate]])
-    // so it lands on reliable storage rather than executor memory.
+    // id + shingle array) sets frame instead.
     pairsFromSets(graft.Lineage.truncate(cappedSets(df, idCol, textCol, maxDf)),
       minBp, collapseSiblings)
   }
@@ -423,7 +425,8 @@ object Jaccard {
     * shingling lineage per traversal. Materialize doubles as the
     * expensive-upstream discipline (the curate pipeline's cleaned/gated
     * frame): probe and plan compute the upstream ONCE, the result is
-    * materialized via localCheckpoint while the cache is live, and the
+    * materialized via [[graft.Lineage.truncate]] while the cache is
+    * live (reliably when the session has a checkpoint dir), and the
     * cache is RELEASED before returning — in a long-lived session the
     * corpus-sized blocks never accumulate. Callers who KNOW their corpus
     * shape should call [[pairs]] with the collapse knob directly. A
@@ -454,12 +457,13 @@ object Jaccard {
     * (`fromSets(sets, collapse, nDocs)` — nDocs lets the containment
     * bodies place their positional crossover). In materialize mode (the
     * default) the capped sets frame is persisted so the exact probe and
-    * the chosen plan compute the lineage once, the result
-    * localCheckpoints while the cache is live, and the cache is released
-    * before returning. The lean mode runs the staged [[hazardProbe]]
-    * against the raw lineage — ONE cheap extra traversal per call — and
-    * returns the lazy plan, persisting nothing. Caller-persisted inputs
-    * are never touched. BOTH modes key the dispatch on the probe's
+    * the chosen plan compute the lineage once, the result is
+    * materialized through [[graft.Lineage.truncate]] (a reliable
+    * checkpoint when the session has a checkpoint dir) while the cache
+    * is live, and the cache is released before returning. The lean mode
+    * runs the staged [[hazardProbe]] against the raw lineage — ONE cheap
+    * extra traversal per call — and returns the lazy plan, persisting
+    * nothing. Caller-persisted inputs are never touched. BOTH modes key the dispatch on the probe's
     * non-empty-set count (docs with an empty set can pair with nothing);
     * lean mode's raw `count()` only stages the probe target, so near
     * `directMaxDocs` the two modes pick the same plan for corpora whose
@@ -497,7 +501,7 @@ object Jaccard {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val (nDocs, pairMass) = probeSets(sets)
-        choose(sets, nDocs, pairMass).localCheckpoint()
+        graft.Lineage.truncate(choose(sets, nDocs, pairMass))
       } finally sets.unpersist(blocking = false)
     }
   }

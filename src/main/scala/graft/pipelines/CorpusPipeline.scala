@@ -36,30 +36,16 @@ object CorpusPipeline {
       keepBestInCluster: Boolean = false, // near-dup keeps max-quality, not min-id
       spanDedupGrams: Option[Int] = None, // position-level span dedup anchor width
       urlCol: Option[String] = None, // canonical-URL keep-min pre-dedup column
-      checkpointDir: Option[String] = None, // reliable-checkpoint dir for cluster runs (None = localCheckpoint)
+      checkpointDir: Option[String] = None, // reliable-checkpoint dir for cluster runs (None = the session's)
       trainPct: Int = 80,
       valPct: Int = 10)
 
-  /** Lineage truncation for the frames the pipeline re-consumes (the
-    * near-dup cluster membership sliver, and — since r19 — the exact-dedup
-    * survivor corpus): `localCheckpoint` by default —
-    * right for local mode and single-JVM services, where its
-    * executor-pinned, NON-replicated blocks are the same process — or a
-    * reliable `checkpoint` into `cfg.checkpointDir` for cluster runs,
-    * where losing an executor holding localCheckpoint blocks would fail
-    * the job because lineage was truncated.
+  /** Points the session at `cfg.checkpointDir`, so the pipeline's
+    * [[graft.Lineage.truncate]] seams (the cluster membership sliver and
+    * the exact-dedup survivors) take RELIABLE checkpoints there. With
+    * `None` the session decides, as at every other seam.
     *
-    * Both are EAGER deliberately, and that eagerness is load-bearing:
-    * the sliver must be MATERIALIZED before the downstream job runs,
-    * because its consumers (the scalar-gate leg, ensembleScore's
-    * token-explode leg, the final anti-join) execute concurrently in one
-    * job — a lazy checkpoint lets each concurrently re-run the full
-    * corpus lineage, which is the 2.1 GiB-spill shape the truncation
-    * exists to prevent (re-measured: lazy cost +34% warm wall on
-    * corpus_curate_best even at sf0.1). The cost is that BUILDING the
-    * curate plan executes the upstream pipeline once at
-    * DataFrame-construction time. */
-  /** Reliable-mode operational notes: (1) Spark deletes non-streaming
+    * Reliable-mode operational notes: (1) Spark deletes non-streaming
     * checkpoint data on context cleanup ONLY when
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (off by
     * default, must be set at session build) — a long-lived service that
@@ -71,32 +57,31 @@ object CorpusPipeline {
     * one keeps theirs — loudly (warning log), because checkpoint data
     * then lands somewhere other than `cfg.checkpointDir` and a janitor
     * watching the configured dir would never see it. */
-  private def truncateLineage(df: DataFrame, cfg: Config): DataFrame =
-    cfg.checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        sc.getCheckpointDir match {
-          case None => sc.setCheckpointDir(dir)
-          case Some(existing) =>
-            // the effective dir is setCheckpointDir's UUID subdirectory:
-            // ours iff its PARENT's path equals cfg.checkpointDir. Both
-            // sides are FS-qualified before comparing — sc stores a
-            // fully-qualified URI, so a relative (or scheme-less)
-            // cfg.checkpointDir spelling must not fake a divergence,
-            // and substrings must not hide one
-            val hconf = sc.hadoopConfiguration
-            val parent = new org.apache.hadoop.fs.Path(existing).getParent
-            def qualified(p: org.apache.hadoop.fs.Path) =
-              p.getFileSystem(hconf).makeQualified(p)
-            if (parent == null ||
-                qualified(parent) != qualified(new org.apache.hadoop.fs.Path(dir)))
-              org.slf4j.LoggerFactory.getLogger(getClass)
-                .warn(s"checkpointDir already set to $existing; " +
-                  s"ignoring cfg.checkpointDir=$dir — checkpoint data lands " +
-                  "in the existing location")
-        }
-        df.checkpoint()
-      case None => df.localCheckpoint()
+  private def useCheckpointDir(
+      spark: org.apache.spark.sql.SparkSession,
+      cfg: Config): Unit =
+    cfg.checkpointDir.foreach { dir =>
+      val sc = spark.sparkContext
+      sc.getCheckpointDir match {
+        case None => sc.setCheckpointDir(dir)
+        case Some(existing) =>
+          // the effective dir is setCheckpointDir's UUID subdirectory:
+          // ours iff its PARENT's path equals cfg.checkpointDir. Both
+          // sides are FS-qualified before comparing — sc stores a
+          // fully-qualified URI, so a relative (or scheme-less)
+          // cfg.checkpointDir spelling must not fake a divergence,
+          // and substrings must not hide one
+          val hconf = sc.hadoopConfiguration
+          val parent = new org.apache.hadoop.fs.Path(existing).getParent
+          def qualified(p: org.apache.hadoop.fs.Path) =
+            p.getFileSystem(hconf).makeQualified(p)
+          if (parent == null ||
+              qualified(parent) != qualified(new org.apache.hadoop.fs.Path(dir)))
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn(s"checkpointDir already set to $existing; " +
+                s"ignoring cfg.checkpointDir=$dir — checkpoint data lands " +
+                "in the existing location")
+      }
     }
 
   /** Deterministic reliable-checkpoint janitor for service loops: deletes
@@ -297,13 +282,11 @@ object CorpusPipeline {
     // turned into 2.1 GiB of aggregate spill at the 100x rehearsal.
     // truncating lineage (a KB-MB sliver) runs the chain once for both
     // member consumers; text-carrying joins stay sort-free shuffle-hash
-    // probes (AQE upgrades to broadcast when sizes allow). Local mode
-    // uses localCheckpoint; cluster runs set cfg.checkpointDir for a
-    // reliable checkpoint instead (see truncateLineage).
-    val members = truncateLineage(
+    // probes (AQE upgrades to broadcast when sizes allow). The session
+    // picks local vs reliable checkpoint (see useCheckpointDir).
+    val members = graft.Lineage.truncate(
       df.join(comp.hint("shuffle_hash"), Seq(idCol))
-        .select(col(idCol), col("component"), col(textCol)),
-      cfg)
+        .select(col(idCol), col("component"), col(textCol)))
     val scored = members
       .join(ensembleScore(members, idCol, textCol).hint("shuffle_hash"), Seq(idCol))
     val w = Window.partitionBy(col("component"))
@@ -341,6 +324,7 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       cfg: Config = Config()): DataFrame = {
+    useCheckpointDir(df.sparkSession, cfg)
     val urlGated = cfg.urlCol match {
       case Some(u) => urlDedup(df, idCol, u)
       case None => df
@@ -363,8 +347,8 @@ object CorpusPipeline {
     // at sf0.1, identical outputs. At cluster scale the same trade holds
     // harder — the chain is 2 joins + a full-text group-by per pass — and
     // cfg.checkpointDir swaps in the reliable checkpoint exactly as for
-    // the member sliver (see truncateLineage's fault-tolerance notes).
-    val exact = truncateLineage(exactDedup(filtered, idCol), cfg)
+    // the member sliver (see useCheckpointDir's fault-tolerance notes).
+    val exact = graft.Lineage.truncate(exactDedup(filtered, idCol))
     // Jaccard is capped at 10000bp, so a threshold above it disables
     // doc-level near-dedup; skip the whole LSH pipeline rather than
     // building signatures and bands whose pairs all fail verification

@@ -1,22 +1,9 @@
 package graft
 
 import org.apache.spark.CheckpointDirs
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, udf}
 
-import graft.dedup.{Containment, Jaccard}
-
-/** The materialization seam in reliable mode (a session with a checkpoint
-  * dir): the upstream runs once, and the dedup auto dispatches land their
-  * results on reliable storage. */
 class LineageSpec extends SparkSpec {
-  import spark.implicits._
-
-  /** The checkpoint file behind a truncated frame's root, if reliable. */
-  private def checkpointFile(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
-      .flatMap(_.getCheckpointFile)
 
   test("reliable truncate executes the upstream once") {
     CheckpointDirs.withTempDir(spark.sparkContext) {
@@ -24,37 +11,9 @@ class LineageSpec extends SparkSpec {
       val tick = udf { (x: Long) => evals.add(1L); x }
       val df = spark.range(0, 200, 1, 4).select(tick(col("id")).as("id"))
       val t = Lineage.truncate(df)
-      assert(checkpointFile(t).isDefined, "truncate must checkpoint reliably")
+      assert(CheckpointDirs.checkpointFile(t).isDefined, "truncate must checkpoint reliably")
       assert(evals.value == 200L, "the eager job and the checkpoint write must share one upstream pass")
       assert(t.count() == 200L && evals.value == 200L)
-    }
-  }
-
-  private val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta",
-    "eta", "theta", "iota", "kappa", "lam", "mu", "nu", "xi", "omi", "pi")
-
-  /** Seeded docs plus near-copies, so the set joins have real pairs. */
-  private lazy val docs = {
-    val rnd = new scala.util.Random(11)
-    val base = (0 until 16).map { i =>
-      (i.toLong, Seq.fill(8 + rnd.nextInt(16))(words(rnd.nextInt(words.size))).mkString(" "))
-    }
-    (base ++ base.take(6).map { case (id, t) => (100L + id, t + " tail") })
-      .toDF("doc_id", "text")
-  }
-
-  test("dedup auto dispatches checkpoint reliably in a session with a checkpoint dir") {
-    CheckpointDirs.withTempDir(spark.sparkContext) {
-      // Long.MaxValue forces the direct branch, 0 the prefix branch
-      for (direct <- Seq(Long.MaxValue, 0L)) {
-        val j = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, directMaxDocs = direct)
-        assert(checkpointFile(j).isDefined, s"Jaccard.pairsAuto(directMaxDocs = $direct)")
-        assert(j.count() > 0)
-        val c = Containment.pairsAuto(docs, "doc_id", "text", 8000L, directMaxDocs = direct)
-        assert(checkpointFile(c).isDefined, s"Containment.pairsAuto(directMaxDocs = $direct)")
-      }
-      val s = Containment.subsetsAuto(docs, "doc_id", "text", 8000L)
-      assert(checkpointFile(s).isDefined, "Containment.subsetsAuto")
     }
   }
 }

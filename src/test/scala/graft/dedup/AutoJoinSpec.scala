@@ -124,6 +124,22 @@ class AutoJoinSpec extends SparkSpec {
     } finally mine.unpersist(blocking = false)
   }
 
+  test("materialize mode checkpoints reliably in a session with a checkpoint dir") {
+    import org.apache.spark.CheckpointDirs.{checkpointFile, withTempDir}
+    withTempDir(spark.sparkContext) {
+      // Long.MaxValue forces the direct branch, 0 the prefix branch
+      for (direct <- Seq(Long.MaxValue, 0L)) {
+        val j = Jaccard.pairsAuto(docs, "doc_id", "text", 6000L, directMaxDocs = direct)
+        assert(checkpointFile(j).isDefined, s"Jaccard.pairsAuto(directMaxDocs = $direct)")
+        assert(j.count() > 0)
+        val c = Containment.pairsAuto(docs, "doc_id", "text", 8000L, directMaxDocs = direct)
+        assert(checkpointFile(c).isDefined, s"Containment.pairsAuto(directMaxDocs = $direct)")
+      }
+      assert(checkpointFile(Containment.subsetsAuto(docs, "doc_id", "text", 8000L)).isDefined,
+        "Containment.subsetsAuto")
+    }
+  }
+
   test("the pipeline's exactNearDup knob curates identically through either plan") {
     val cfg = CorpusPipeline.Config(minTokens = 1L, maxTopTokenBp = 10000L,
       nearDupMinBp = 6000L, exactNearDup = true)

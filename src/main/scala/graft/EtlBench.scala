@@ -233,13 +233,14 @@ object EtlBench {
     }
     val state = job2.loadState()
     val files = phase("plan")(job2.plan("sensor_topic", state))
-    val dfs = phase("readTopic (lazy)")(job2.readTopic("sensor_topic", files))
-    dfs.foreach { df =>
-      val unseen = job2.filterSeen(df, state)
+    val batches = phase("readTopic (lazy)")(job2.readBatches("sensor_topic", files))
+    batches.foreach { batch =>
+      val unseen = job2.filterSeen(batch.df, state)
       val deduped = job2.dedup("sensor_topic", unseen)
       phase("write (read+derive+dedup+write)")(job2.write("sensor_topic", deduped))
-      phase("ranges (second read pass)")(
-        graft.operators.Intervals.collectRanges(job2.processedRanges(unseen)))
+      // the offset ledger run() commits: driver arithmetic over the row
+      // counts the write job's scan reported
+      phase("ledger (driver-side, from the write's read)")(job2.ledger(batch, state))
       phase("read+derive only (count)")(unseen.count())
       val noDedup = new Restructure(spark,
         cfg2.copy(outputDir = s"$dir/out3", dedupDefault = DedupConfig()))

@@ -176,6 +176,19 @@ object ServiceSoak {
     }
   }
 
+  /** Give a rewritten file an mtime strictly newer than `origMtime` (2 s
+    * past it, so coarse-grained filesystem clocks still see it newer), then
+    * wait until the clock has passed that mtime. The planner skips files
+    * whose mtime is in the future, so without the wait a soak whose waves
+    * run faster than 2 s would move on before the rewrite can be planned,
+    * and the rewrite would be reprocessed after the planted miss instead
+    * of in its own wave. */
+  private def touchNewer(f: File, origMtime: Long): Unit = {
+    val mtime = math.max(System.currentTimeMillis(), origMtime + 2000L)
+    require(f.setLastModified(mtime), "mtime rewrite failed")
+    while (System.currentTimeMillis() <= mtime) Thread.sleep(25L)
+  }
+
   private[graft] def rmRf(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmRf)
     require(f.delete(), s"could not delete $f")
@@ -302,9 +315,7 @@ object ServiceSoak {
       // output merge discipline (J4) absorbs them
       val origMtime = waveA0.lastModified()
       corpus.writeFile(0, 0L, perFile + 1)
-      val rewritten = new File(dir, s"in/soak_topic/partition=0/${waveA0.getName}")
-      require(rewritten.setLastModified(math.max(System.currentTimeMillis(), origMtime + 2000L)),
-        "mtime rewrite failed")
+      touchNewer(new File(dir, s"in/soak_topic/partition=0/${waveA0.getName}"), origMtime)
       awaitPasses(svc1, svc1.restructurePasses, 2)
       // wave D: one more partition-0 file, offset-disjoint and OUTSIDE
       // the head hour bin — phase 2's first cleaner pass must find a
@@ -435,8 +446,7 @@ object ServiceSoak {
       // have deleted waveA0 out from under the in-place rewrite
       val origMtime = waveA0.lastModified()
       corpus.writeFile(0, 0L, perFile + 1)
-      require(waveA0.setLastModified(math.max(System.currentTimeMillis(), origMtime + 2000L)),
-        "mtime rewrite failed")
+      touchNewer(waveA0, origMtime)
       awaitPasses(svc, svc.restructurePasses, 2)
       fD = corpus.writeFile(0, 2L * perFile + 500L, perFile)
       awaitPasses(svc, svc.restructurePasses, 2)
@@ -636,8 +646,7 @@ object ServiceSoak {
       // waveA0 out from under the in-place rewrite
       val origMtime = waveA0.lastModified()
       corpus.writeFile(0, 0L, perFile + 1)
-      require(waveA0.setLastModified(math.max(System.currentTimeMillis(), origMtime + 2000L)),
-        "mtime rewrite failed")
+      touchNewer(waveA0, origMtime)
       awaitNoPlan(both)
       fD = corpus.writeFile(0, 2L * perFile + 500L, perFile)
       awaitNoPlan(both)

@@ -5,6 +5,7 @@ import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.CollectionAccumulator
 
 import scala.jdk.CollectionConverters._
 
@@ -274,7 +275,19 @@ object AvroSource {
     * are bounded by the upstream flush policy; the non-tolerant path
     * streams. */
   def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
-           tolerant: Boolean = false, backoffMs: Long = 1000L): DataFrame = {
+           tolerant: Boolean = false, backoffMs: Long = 1000L): DataFrame =
+    read(spark, paths, avroSchema, tolerant, backoffMs, None)
+
+  /** [[read]] that also reports `(path, rows emitted)` into `rowsEmitted`
+    * once per file a task reads to the end: the buffered row count on the
+    * tolerant path, the count at exhaustion on the streaming path (never
+    * from the task-completion close, which also runs after an early stop).
+    * Quarantined, vanished and zero-length files report nothing. Rows carry
+    * `_row_index` 0..n-1, so a reported n is exactly the rows the file
+    * contributed to the job that read it. */
+  private[graft] def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
+      tolerant: Boolean, backoffMs: Long,
+      rowsEmitted: Option[CollectionAccumulator[(String, Long)]]): DataFrame = {
     val sparkType = AvroSchemas.toSparkType(avroSchema).asInstanceOf[StructType]
     val fullSchema = StructType(
       StructField("_file", StringType, nullable = false) +:
@@ -291,18 +304,16 @@ object AvroSource {
         val schema = new Schema.Parser().parse(schemaJson)
         val hp = new org.apache.hadoop.fs.Path(path)
         val fs = hp.getFileSystem(serConf.value)
-        def openRows(): (DataFileStream[GenericRecord], java.io.InputStream, Iterator[Row]) = {
-          val in = fs.open(hp)
-          val stream = new DataFileStream(in, new GenericDatumReader[GenericRecord](schema))
+        def report(n: Long): Unit = rowsEmitted.foreach(_.add((path, n)))
+        def rows(stream: DataFileStream[GenericRecord]): Iterator[Row] = {
           var i = -1L
-          val it = stream.iterator.asScala.map { rec =>
+          stream.iterator.asScala.map { rec =>
             i += 1
             Row.fromSeq(
               path +: i +: sparkType.fields.indices.map { f =>
                 AvroSchemas.toSparkValue(rec.get(f), avroFieldSchema(schema, f))
               })
           }
-          (stream, in, it)
         }
         // zero-length guard (P8); in tolerant mode a vanished file (races
         // with quarantine when the plan executes more than once) reads as
@@ -312,7 +323,8 @@ object AvroSource {
           catch { case _: java.io.FileNotFoundException if tolerant => -1L }
         if (len <= 0) Iterator.empty
         else if (!tolerant) {
-          val (stream, in, it) = openRows()
+          val in = fs.open(hp)
+          val stream = new DataFileStream(in, new GenericDatumReader[GenericRecord](schema))
           val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
           val close = () =>
             if (closed.compareAndSet(false, true)) { stream.close(); in.close() }
@@ -324,7 +336,7 @@ object AvroSource {
           Option(org.apache.spark.TaskContext.get()).foreach(
             _.addTaskCompletionListener[Unit](_ =>
               try close() catch { case _: Exception => () }))
-          new AutoCloseIterator(it, close)
+          new AutoCloseIterator(rows(stream), close, report)
         } else {
           try {
             // FETCH-then-decode: transient IO is confined to the byte
@@ -345,25 +357,20 @@ object AvroSource {
             // so the decode below cannot be driven into huge allocations
             if (!validateContainer(() => new java.io.ByteArrayInputStream(bytes), bytes.length))
               throw new CorruptContainerException(s"invalid avro container: $path")
-            try {
-              val stream = new DataFileStream(new java.io.ByteArrayInputStream(bytes),
-                new GenericDatumReader[GenericRecord](schema))
+            val buffered =
               try {
-                var i = -1L
-                stream.iterator.asScala.map { rec =>
-                  i += 1
-                  Row.fromSeq(
-                    path +: i +: sparkType.fields.indices.map { f =>
-                      AvroSchemas.toSparkValue(rec.get(f), avroFieldSchema(schema, f))
-                    })
-                }.toVector.iterator // all-or-nothing: buffer before emitting
-              } finally stream.close()
-            } catch {
-              case e if isCorruption(e) => throw e
-              case scala.util.control.NonFatal(e) =>
-                throw new CorruptContainerException(
-                  s"undecodable avro container: $path (${e.getMessage})")
-            }
+                val stream = new DataFileStream(new java.io.ByteArrayInputStream(bytes),
+                  new GenericDatumReader[GenericRecord](schema))
+                try rows(stream).toVector // all-or-nothing: buffer before emitting
+                finally stream.close()
+              } catch {
+                case e if isCorruption(e) => throw e
+                case scala.util.control.NonFatal(e) =>
+                  throw new CorruptContainerException(
+                    s"undecodable avro container: $path (${e.getMessage})")
+              }
+            report(buffered.size.toLong)
+            buffered.iterator
           } catch {
             case _: java.io.FileNotFoundException => Iterator.empty // raced deletion
             case e if isCorruption(e) =>
@@ -381,15 +388,17 @@ object AvroSource {
   private def avroFieldSchema(schema: Schema, pos: Int): Schema =
     schema.getFields.get(pos).schema()
 
-  /** Iterator that closes its resource when exhausted. */
-  private final class AutoCloseIterator(it: Iterator[Row], close: () => Unit)
-      extends Iterator[Row] {
+  /** Iterator that closes its resource when exhausted, then hands the
+    * number of rows it emitted to `onEnd`. */
+  private final class AutoCloseIterator(it: Iterator[Row], close: () => Unit,
+      onEnd: Long => Unit) extends Iterator[Row] {
     private var closed = false
+    private var emitted = 0L
     override def hasNext: Boolean = {
       val h = it.hasNext
-      if (!h && !closed) { closed = true; close() }
+      if (!h && !closed) { closed = true; close(); onEnd(emitted) }
       h
     }
-    override def next(): Row = it.next()
+    override def next(): Row = { val r = it.next(); emitted += 1; r }
   }
 }

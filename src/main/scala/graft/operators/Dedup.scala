@@ -28,12 +28,17 @@ object Dedup {
     * Map-free keys pass through unchanged.
     */
   def keepLast(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val types = df.select(keys.map(col): _*).schema.map(_.dataType)
-    val partition = keys.zip(types).map { case (k, t) => orderable(col(k), t) }
-    val w = Window.partitionBy(partition: _*).orderBy(col(orderCol).desc)
+    val w = Window.partitionBy(orderableKeys(df, keys): _*).orderBy(col(orderCol).desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
+  }
+
+  /** The window partition columns for `keys`: each in its [[orderable]]
+    * form, so a map-free key is the bare column. */
+  private def orderableKeys(df: DataFrame, keys: Seq[String]): Seq[Column] = {
+    val types = df.select(keys.map(col): _*).schema.map(_.dataType)
+    keys.zip(types).map { case (k, t) => orderable(col(k), t) }
   }
 
   /** An orderable value equal for two rows exactly when `c` is: each map
@@ -76,10 +81,11 @@ object Dedup {
   /** D2 — keep-FIRST whole-row distinct, preserving first-occurrence order
     * (reference: format/RecordConverterFactory.kt:62-84; JSON format).
     * Key = all columns except `orderCol`; the row with the least `orderCol`
-    * per distinct content survives. */
+    * per distinct content survives. Map-bearing keys partition on their
+    * [[orderable]] form, as in [[keepLast]]. */
   def keepFirstDistinct(df: DataFrame, orderCol: String): DataFrame = {
     val keys = df.columns.filterNot(_ == orderCol).toSeq
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).asc)
+    val w = Window.partitionBy(orderableKeys(df, keys): _*).orderBy(col(orderCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

@@ -10,7 +10,10 @@ import graft.functions.{Strings, Times}
 import graft.operators.{Dedup, Flatten, Intervals}
 import graft.state.{OffsetRangeSet, TopicPartition}
 
+import org.apache.spark.util.CollectionAccumulator
+
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 
 /** Per-topic deduplication settings (reference: config/RestructureConfig.kt:233-265). */
 final case class DedupConfig(
@@ -84,6 +87,17 @@ final case class TopicFile(
     lastModified: Long,
     length: Long)
 
+/** One writer-schema group of a topic batch as [[Restructure.run]] reads
+  * it: the derived frame, the planned files it reads, and the
+  * `(path, rows emitted)` its Avro scan reports (see
+  * [[graft.avro.AvroSource.read]]), from which [[Restructure.ledger]]
+  * builds the batch's offset ranges. */
+private[graft] final case class TopicBatch(
+    topic: String,
+    df: DataFrame,
+    files: Seq[TopicFile],
+    rowsRead: CollectionAccumulator[(String, Long)])
+
 /** The restructure job: incremental Avro -> partitioned flat CSV/JSON with
   * offset-range accounting (SURVEY §3.1 end to end, re-expressed
   * Spark-first).
@@ -97,7 +111,7 @@ final case class TopicFile(
 final class Restructure(spark: SparkSession, config: RestructureConfig) {
 
   /** W3 crash-window test seam (CrashRecoverySpec): invoked once per topic
-    * AFTER its output write (and ledger-range computation) succeeded and
+    * batch AFTER its output write succeeded and its ledger was built, and
     * BEFORE its state commit — the write-then-commit ordering makes a crash
     * here the design's worst case: part files are on disk with no ledger
     * entry, so the rerun must reprocess the batch and the read-time dedup
@@ -208,12 +222,18 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * derive the standard columns:
     * `_topic _partition _offset _mtime _project _user _source _time _bin`.
     */
-  def readTopic(topic: String, files: Seq[TopicFile]): Seq[DataFrame] = {
+  def readTopic(topic: String, files: Seq[TopicFile]): Seq[DataFrame] =
+    readBatches(topic, files).map(_.df)
+
+  /** [[readTopic]] with each group's planned files and the row counts its
+    * scan reports — what [[run]] builds the offset ledger from. */
+  private[graft] def readBatches(topic: String, files: Seq[TopicFile]): Seq[TopicBatch] = {
     val byPath = files.map(f => f.path -> f).toMap
     AvroSource.schemaGroups(spark, files.map(_.path),
       tolerant = config.faultTolerance, backoffMs = config.retryBackoffMs).map { case (schema, paths) =>
+      val rowsRead = spark.sparkContext.collectionAccumulator[(String, Long)]
       val df = AvroSource.read(spark, paths, schema,
-        tolerant = config.faultTolerance, backoffMs = config.retryBackoffMs)
+        config.faultTolerance, config.retryBackoffMs, Some(rowsRead))
       val meta = spark.createDataFrame(
         paths.map { p =>
           val f = byPath(p)
@@ -222,7 +242,7 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         .toDF("_file", "_partition", "_start_offset", "_mtime")
       val withMeta = df.join(broadcast(meta), "_file")
       val time = Times.eventTime(withMeta)
-      withMeta
+      val derived = withMeta
         .withColumn("_topic", lit(topic))
         .withColumn("_offset", col("_start_offset") + col("_row_index"))
         .withColumn("_project", sanitized(withMeta, "key.projectId", "unknown-project"))
@@ -231,6 +251,7 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         .withColumn("_time", time)
         .withColumn("_bin", Times.timeBin(col("_time"), config.timeBinFormat))
         .drop("_start_offset")
+      TopicBatch(topic, derived, paths.map(byPath), rowsRead)
     }
   }
 
@@ -298,10 +319,13 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     "_project", "_user", "_source", "_time", "_bin")
 
   /** S7/S9 — write one topic batch: flatten the payload, partition by
-    * (project, user, bin), CSV-with-header or JSON lines, optional gzip;
-    * schema sidecar once per topic. Returns the offset ranges written.
+    * (project, user, bin), CSV-with-header or JSON lines, optional gzip.
     */
-  def write(topic: String, df: DataFrame): Unit = {
+  def write(topic: String, df: DataFrame): Unit = write(topic, df, () => ())
+
+  /** [[write]] that calls `beforeJob` after the CSV header pre-pass and
+    * immediately before the write job itself. */
+  private def write(topic: String, df: DataFrame, beforeJob: () => Unit): Unit = {
     val payload = df.schema.fields.map(_.name).filterNot(metaCols.contains)
     val payloadStruct = StructType(df.schema.fields.filter(f => payload.contains(f.name)))
     val flatCols =
@@ -343,6 +367,7 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
       case Some(c) => writer.option("compression", c)
       case None    => writer
     }
+    beforeJob()
     config.format match {
       case "csv"  => withCompression.option("header", "true").csv(dir)
       case "json" => withCompression.json(dir)
@@ -357,9 +382,30 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     }
   }
 
-  /** A2 — offset ranges of a processed batch (computed over the PRE-dedup
-    * records: the reference ledgers every record it read, including ones the
-    * dedup pass later drops — worker/RestructureWorker.kt:127-135). */
+  /** A2 — the offset ledger of one batch, built on the driver from the row
+    * counts its write job's own scan reported: the reference ledgers every
+    * record as it reads it, including ones the dedup pass later drops
+    * (worker/RestructureWorker.kt:116,127-135). A file that emitted n rows
+    * holds offsets `[start, start+n-1]` (`_offset = start + _row_index`);
+    * the ledger is those ranges at the file's mtime, minus what `seen` —
+    * the state [[filterSeen]] dropped rows by — covers, coalesced as
+    * [[graft.operators.Intervals.collectRanges]] does. O(files) arithmetic,
+    * no Spark job. A file reported with two different counts changed
+    * under the job and stays out: the next pass re-plans it and read-time
+    * dedup absorbs the repeated rows (W3). */
+  private[graft] def ledger(batch: TopicBatch, seen: OffsetRangeSet): OffsetRangeSet = {
+    val counts = batch.rowsRead.value.asScala
+      .groupMapReduce(_._1)(c => Option(c._2))((a, b) => a.filter(b.contains))
+    val out = new OffsetRangeSet
+    for (f <- batch.files; n <- counts.get(f.path).flatten if n > 0)
+      out.addUnseen(TopicPartition(batch.topic, f.partition),
+        f.startOffset, f.startOffset + n - 1, Instant.ofEpochMilli(f.lastModified), seen)
+    out
+  }
+
+  /** A2 — offset ranges of a processed batch as a distributed job over its
+    * records (computed over the PRE-dedup records). The reference form of
+    * [[ledger]], which [[run]] uses instead: this re-reads the source. */
   def processedRanges(df: DataFrame): DataFrame =
     Intervals.toRanges(
       df.select(col("_topic").as("topic"), col("_partition").as("partition"),
@@ -426,11 +472,16 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         if (files.nonEmpty) {
           filesProcessed += files.size
           // DataFrames are lazy: "read" times the driver-side work only
-          // (header scans, schema grouping); the distributed scan/decode
-          // executes inside the write job, so its task time lands under
-          // "restructure.write" — the phase that RUNS the plan
-          Timers.time(spark, "restructure.read")(readTopic(topic, files)).foreach { df =>
-            val unseen = filterSeen(df, state)
+          // (header scans, schema grouping); the one distributed
+          // scan/decode executes inside the write job, so its task time
+          // lands under "restructure.write" — the phase that RUNS the plan
+          // — and the same scan reports the row counts the ledger is
+          // built from
+          Timers.time(spark, "restructure.read")(readBatches(topic, files)).foreach { batch =>
+            // `state` is not touched between here and the ledger: the
+            // ledger subtracts exactly the state filterSeen broadcasts
+            // (batch 2 of a two-schema topic sees batch 1's commit in both)
+            val unseen = filterSeen(batch.df, state)
             // A3 counters ride the write job itself — no extra pass. The
             // listener-based Observation is required here: DataFrameWriter
             // plans its own QueryExecution over the logical plan, so reading
@@ -440,11 +491,13 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
             val observed = dedup(topic, unseen)
               .observe(obs, count(lit(1)).as("records"))
             Timers.time(spark, "restructure.write") {
-              writeSidecar(topic, df)
-              write(topic, observed)
+              writeSidecar(topic, batch.df)
+              // reset after the CSV header pre-pass, which reads the source
+              // too: the ledger counts the write job's read alone
+              write(topic, observed, () => batch.rowsRead.reset())
             }
             recordsWritten += obs.get.get("records").map(_.asInstanceOf[Long]).getOrElse(0L)
-            val added = Intervals.collectRanges(processedRanges(unseen))
+            val added = ledger(batch, state)
             beforeCommit(topic) // W3 crash-window seam — no-op in production
             Timers.time(spark, "restructure.commit") {
               commitState(state, added, lockMgr) // S10 — commit after write

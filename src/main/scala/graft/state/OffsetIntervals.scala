@@ -62,6 +62,28 @@ final class OffsetIntervals private (
     i >= 0 && tos(i) >= to && !mtimes(i).isBefore(mtime)
   }
 
+  /** The maximal sub-ranges of `[from, to]` that [[contains]]`(_, mtime)`
+    * rejects: the range minus every interval processed no earlier than
+    * `mtime`. Ascending; a binary search plus a walk over the overlapping
+    * intervals. */
+  def uncovered(from: Long, to: Long, mtime: Instant): Seq[(Long, Long)] = {
+    require(from <= to, s"invalid range [$from,$to]")
+    val out = ArrayBuffer.empty[(Long, Long)]
+    var i = search(from)
+    if (i < 0) i = -i - 1
+    var next = from // first offset not yet decided
+    var open = true // offsets next..to remain (false once an interval reaches to)
+    while (open && i < froms.length && froms(i) <= to) {
+      if (!mtimes(i).isBefore(mtime)) {
+        if (froms(i) > next) out += ((next, froms(i) - 1))
+        if (tos(i) >= to) open = false else next = tos(i) + 1
+      }
+      i += 1
+    }
+    if (open) out += ((next, to))
+    out.toSeq
+  }
+
   def add(offset: Long, mtime: Instant): Unit = add(offset, offset, mtime)
 
   /** Insert a closed range, coalescing with any overlapping or adjacent

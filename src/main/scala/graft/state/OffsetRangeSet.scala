@@ -28,6 +28,14 @@ final class OffsetRangeSet {
   def contains(tp: TopicPartition, from: Long, to: Long, mtime: Instant): Boolean =
     map.get(tp).exists(_.contains(from, to, mtime))
 
+  /** Add `[from, to]` at `mtime` minus every offset `seen` covers with
+    * `lastProcessed >= mtime` — per offset, the predicate
+    * [[graft.operators.Intervals.unseenByState]] filters records with. */
+  def addUnseen(tp: TopicPartition, from: Long, to: Long, mtime: Instant,
+      seen: OffsetRangeSet): Unit =
+    seen.map.get(tp).fold(Seq(from -> to))(_.uncovered(from, to, mtime))
+      .foreach { case (f, t) => add(tp, f, t, mtime) }
+
   def remove(tp: TopicPartition, from: Long, to: Long): Unit =
     map.get(tp).foreach(_.remove(from, to))
 

@@ -37,6 +37,19 @@ class DedupSpec extends SparkSpec {
       Seq(("1", "2"), ("3", "4"), ("1", "3"), ("a", "a"), ("3", "3")))
   }
 
+  test("keep-first distinct keys a map column on its entries, not their order") {
+    import org.apache.spark.sql.functions.{array, col, lit, map_from_arrays, when}
+    // rows 1 and 2 hold the same entries in a different insertion order
+    val df = Seq((1, "x", 0), (2, "x", 1), (3, "y", 0)).toDF("i", "a", "flip")
+      .withColumn("m", when(col("flip") === 0,
+        map_from_arrays(array(lit("k1"), lit("k2")), array(lit(1), lit(2))))
+        .otherwise(map_from_arrays(array(lit("k2"), lit("k1")), array(lit(2), lit(1)))))
+      .drop("flip")
+    val out = Dedup.keepFirstDistinct(df, "i").orderBy("i").collect()
+    assert(out.map(_.getInt(0)).toSeq == Seq(1, 3))
+    assert(out.head.getMap[String, Int](2) == Map("k1" -> 1, "k2" -> 2))
+  }
+
   test("keepLastSalted equals keepLast (skew-tolerant two-phase)") {
     import org.apache.spark.sql.functions.col
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -92,6 +92,30 @@ class OffsetIntervalsPropertySpec extends AnyFunSuite {
     })
   }
 
+  test("uncovered is the range minus the offsets contains accepts at that mtime") {
+    // the restructure ledger subtracts seen state with this: it must agree
+    // offset by offset with the row filter's predicate, and be maximal runs
+    val gen = for {
+      ranges <- Gen.listOfN(8, for {
+        r <- genRange
+        dt <- Gen.chooseNum(0L, 10L)
+      } yield (r._1, r._2, t0.plusSeconds(dt)))
+      q <- genRange
+      dt <- Gen.chooseNum(0L, 10L)
+    } yield (ranges, q, t0.plusSeconds(dt))
+    check("uncovered", Prop.forAll(gen) { case (ranges, (qf, qt), m) =>
+      val iv = new OffsetIntervals
+      ranges.foreach { case (f, t, lp) => iv.add(f, t, lp) }
+      val out = iv.uncovered(qf, qt, m)
+      val expected = (qf to qt).filterNot(o => iv.contains(o, m))
+      out.flatMap { case (f, t) => f to t } == expected &&
+        out.sliding(2).forall {
+          case Seq(a, b) => a._2 + 1 < b._1
+          case _         => true
+        }
+    })
+  }
+
   test("persistence round-trips: JSON and legacy CSV preserve every entry") {
     // the on-disk contract crash recovery rides on (write -> crash ->
     // reload must see the committed truth): arbitrary multi-topic states

@@ -7,10 +7,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Deduplication operators (SURVEY §2.5).
   *
-  * The reference dedups within one output file; here each is a distributed
-  * operator over an arbitrary DataFrame. Both are single-shuffle window
-  * formulations (hash exchange on the key, no sort of the full data), so they
-  * scale with the number of distinct keys rather than file sizes.
+  * The reference dedups the lines of one output file when it closes. Each
+  * operator here is a distributed window over an arbitrary DataFrame; a
+  * caller scopes it by putting the scope's columns first in the key, as
+  * [[graft.restructure.Restructure.dedup]] does with the output file
+  * `(_project, _user, _bin)`. The window formulations are single-shuffle
+  * (hash exchange on the key, no sort of the full data), so they scale
+  * with the number of distinct keys rather than file sizes.
   */
 object Dedup {
 
@@ -68,9 +71,22 @@ object Dedup {
 
   /** The ONE owner of `ignoreFields` key derivation: all columns minus the
     * ignored ones minus the order column — shared by [[keepLastIgnoring]]
-    * and the restructure job's dedup so the two can never drift. */
-  def keysIgnoring(df: DataFrame, ignore: Seq[String], orderCol: String): Seq[String] =
-    df.columns.filterNot(c => ignore.contains(c) || c == orderCol).toSeq
+    * and the restructure job's dedup so the two can never drift.
+    *
+    * Ignored names are flat header names: `value.serverStatus` is that
+    * leaf of the `value` struct. A struct some ignored name points inside
+    * is replaced by its fields (recursively along that path), each a
+    * dotted key, minus the ignored ones; every other column stays whole.
+    * A flat frame therefore keeps exactly its column names. */
+  def keysIgnoring(df: DataFrame, ignore: Seq[String], orderCol: String): Seq[String] = {
+    def keys(name: String, t: DataType): Seq[String] = t match {
+      case _ if ignore.contains(name) => Seq.empty
+      case StructType(fields) if ignore.exists(_.startsWith(s"$name.")) =>
+        fields.toSeq.flatMap(f => keys(s"$name.${f.name}", f.dataType))
+      case _ => Seq(name)
+    }
+    df.schema.fields.toSeq.filterNot(_.name == orderCol).flatMap(f => keys(f.name, f.dataType))
+  }
 
   /** D1 with `ignoreFields` semantics: key = all columns minus the ignored
     * ones (reference: format/CsvAvroConverterFactory.kt:158-171 —

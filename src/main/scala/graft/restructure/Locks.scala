@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import java.io.FileNotFoundException
+import java.nio.file.StandardOpenOption
 import java.util.UUID
 
 /** Multi-instance coordination (SURVEY §1.4): per-topic remote locks shaped
@@ -62,6 +63,13 @@ final class FileRemoteLockManager(
       Some(java.nio.file.Paths.get(dir.toUri.getPath))
     else None
 
+  /** Fault-injection seam (LocksSpec): invoked with `"write"` just before
+    * the owner uuid is written into a lock file this instance created, and
+    * with `"read"` just before a lock file's owner is read, so a spec can
+    * fail either IO deterministically. Production never sets it; the
+    * default is a no-op. */
+  private[restructure] var beforeOwnerIo: String => Unit = _ => ()
+
   override def acquireLock(name: String): Option[AutoCloseable] = {
     val p = new Path(dir, s"$name.lock")
     if (tryCreate(p)) Some(releaser(p))
@@ -108,24 +116,29 @@ final class FileRemoteLockManager(
     }
   }
 
-  private def tryCreate(p: Path): Boolean =
+  /** Create `p` holding our uuid; false if it already exists. Once the
+    * create succeeded the file is ours: a failed owner write deletes it
+    * again and rethrows, so no unowned lock file outlives the failure. */
+  private def tryCreate(p: Path): Boolean = {
+    val out =
+      try localRoot match {
+        case Some(root) => // O_CREAT|O_EXCL — atomic NX
+          java.nio.file.Files.newOutputStream(root.resolve(p.getName), StandardOpenOption.CREATE_NEW)
+        case None => fs.create(p, false)
+      } catch { case _: java.io.IOException => return false } // exists, or not created
     try {
-      localRoot match {
-        case Some(root) =>
-          val f = root.resolve(s"${p.getName}")
-          java.nio.file.Files.createFile(f) // O_CREAT|O_EXCL — atomic NX
-          java.nio.file.Files.write(f, uuid.getBytes("UTF-8"))
-          true
-        case None =>
-          val os = fs.create(p, false)
-          try os.write(uuid.getBytes("UTF-8")) finally os.close()
-          true
-      }
-    } catch { case _: java.nio.file.FileAlreadyExistsException |
-                   _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                   _: java.io.IOException => false }
+      beforeOwnerIo("write")
+      try out.write(uuid.getBytes("UTF-8")) finally out.close()
+    } catch {
+      case e: Exception =>
+        try fs.delete(p, false) catch { case d: Exception => e.addSuppressed(d) }
+        throw e
+    }
+    true
+  }
 
   private def readOwner(p: Path): String = {
+    beforeOwnerIo("read")
     val in = fs.open(p)
     try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
     finally in.close()
@@ -136,16 +149,24 @@ final class FileRemoteLockManager(
     * common case reads the owner first and never touches a lock that is
     * no longer ours; when it IS ours, the delete goes through a rename so
     * a break that replaces the file between the read and the delete is
-    * detected on the renamed copy and restored rather than deleted. */
-  private def releaser(p: Path): AutoCloseable = () =>
-    try {
-      val owner0 = try readOwner(p) catch { case _: Exception => null }
-      if (owner0 == uuid) {
-        val yanked = new Path(dir, s".${p.getName}.release-$uuid")
-        if (fs.rename(p, yanked)) {
-          if (readOwner(yanked) == uuid) fs.delete(yanked, false)
-          else if (!fs.rename(yanked, p)) fs.delete(yanked, false) // not ours: restore
-        }
+    * detected on the renamed copy and restored rather than deleted. A
+    * failed first read cannot tell, so it takes the renamed-copy path too
+    * rather than leave our own lock behind; a failure there propagates. */
+  private def releaser(p: Path): AutoCloseable = () => {
+    val mine =
+      try readOwner(p) == uuid
+      catch {
+        case _: FileNotFoundException => false // gone: broken after the TTL
+        case _: java.io.IOException   => true  // unknown: the renamed copy decides
       }
-    } catch { case _: Exception => () }
+    if (mine) {
+      // one name per release: threads sharing this manager share its
+      // uuid, and a release must never read or delete another's copy
+      val yanked = new Path(dir, s".${p.getName}.release-$uuid-${UUID.randomUUID()}")
+      if (fs.rename(p, yanked)) {
+        if (readOwner(yanked) == uuid) fs.delete(yanked, false)
+        else if (!fs.rename(yanked, p)) fs.delete(yanked, false) // not ours: restore
+      }
+    }
+  }
 }

@@ -2,6 +2,7 @@ package graft.restructure
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -293,25 +294,55 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     else Intervals.unseenByState(
       spark, df, state, "_topic", "_partition", "_offset", Some("_mtime"))
 
-  /** D1/D2/D3 — per-topic dedup config applied over the flat record,
-    * ordered by offset. */
+  /** D1/D3 — per-topic keep-last dedup, scoped per output file as the
+    * reference scopes it: the reference dedups the lines of one
+    * `project/user/topic/hour` file when that file closes
+    * (format/CsvAvroConverterFactory.kt:22-56, worker/FileCache.kt:132-150),
+    * so the key is `(_project, _user, _bin)` followed by the configured
+    * fields. Two records of different users or hours never collapse.
+    *
+    * Field names are the flat header names: `value.time` is that leaf.
+    * `distinctFields` are the fields; otherwise the fields are every
+    * payload column minus `ignoreFields`, as [[Dedup.keysIgnoring]]
+    * resolves them (a struct an ignored name points inside is replaced
+    * by its leaves). Per key the last record by `(_offset, _partition)`
+    * survives.
+    *
+    * The frame is partitioned by output file ([[byOutputFile]]) before the
+    * window, so that one exchange serves both the window and [[write]]. */
   def dedup(topic: String, df: DataFrame): DataFrame = {
     val cfg = config.dedup.getOrElse(topic, config.dedupDefault)
+    if (!cfg.enable) return df
     // keep-last needs a TOTAL order unique per record: _offset alone is
     // only unique within a Kafka partition, so equal-key records at the
     // same offset of different partitions would tie and the surviving
     // row would be partitioning-dependent. (_offset, _partition) is
     // globally unique, so ordering by the struct picks the same winner
     // deterministically.
-    val ordered = df.withColumn("__ord", struct(col("_offset"), col("_partition")))
-    def last(keys: Seq[String]): DataFrame =
-      Dedup.keepLast(ordered, keys, "__ord").drop("__ord")
-    def ignoring(ignore: Seq[String]): Seq[String] =
-      Dedup.keysIgnoring(ordered, ignore :+ "__ord", "__ord")
-    if (!cfg.enable) df
-    else if (cfg.distinctFields.nonEmpty) last(cfg.distinctFields)
-    else if (cfg.ignoreFields.nonEmpty) last(ignoring(cfg.ignoreFields ++ metaCols))
-    else last(ignoring(metaCols))
+    val ordered = byOutputFile(df).withColumn("__ord", struct(col("_offset"), col("_partition")))
+    val fields =
+      if (cfg.distinctFields.nonEmpty) cfg.distinctFields
+      else Dedup.keysIgnoring(ordered, cfg.ignoreFields ++ metaCols :+ "__ord", "__ord")
+    Dedup.keepLast(ordered, outputFileCols ++ fields, "__ord").drop("__ord")
+  }
+
+  /** The columns naming a row's output file, `project/user/topic/hour`. */
+  private val outputFileCols = Seq("_project", "_user", "_bin")
+
+  /** The one partitioning decision of a batch: every row of one output
+    * file in one task. [[dedup]] and [[write]] both apply it; when the
+    * dedup already did, Spark drops the write's repartition as redundant,
+    * so a batch shuffles once. A constant column (a key schema without
+    * `projectId` makes `_project` a literal) is left out of the hash: the
+    * optimizer drops it from the window's keys, and a hash that kept it
+    * would satisfy neither the window nor the write. */
+  private def byOutputFile(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val constant = plan.flatMap(_.expressions).collect {
+      case a: Alias if a.child.foldable => a.exprId
+    }.toSet
+    val hashed = outputFileCols.filterNot(c => plan.output.exists(a => a.name == c && constant(a.exprId)))
+    df.repartition(hashed.map(col): _*)
   }
 
   private val metaCols = Seq(
@@ -320,6 +351,17 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
 
   /** S7/S9 — write one topic batch: flatten the payload, partition by
     * (project, user, bin), CSV-with-header or JSON lines, optional gzip.
+    *
+    * The rows are first partitioned by output file ([[byOutputFile]]), so
+    * each `(project, user, bin)` dir is written by one task holding one
+    * open writer; without it every task holds a writer (and a gzip
+    * stream) for every dir it meets, tasks x dirs tiny files (measured
+    * 8x slower at 200k records / 1440 bins). A bin is never split across
+    * tasks: the per-file [[dedup]] needs all of a file's rows in one
+    * place, and the reference too writes each file from one writer.
+    * `maxRecordsPerFile` still caps the size of each part file. After a
+    * dedup the rows already arrive partitioned this way, and the write
+    * adds no exchange and no sort of its own.
     */
   def write(topic: String, df: DataFrame): Unit = write(topic, df, () => ())
 
@@ -345,21 +387,11 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         // JSON-encoded container columns for this batch
         if (expanded.nonEmpty) expanded else Flatten.flattenColumns(payloadStruct)
       } else Flatten.flattenColumns(payloadStruct)
-    val out = df.select(
-      (Seq(col("_project"), col("_user"), col("_bin"), col("_offset"), col("_partition"), col("_mtime")) ++
-        flatCols): _*)
+    val out = df.select(outputFileCols.map(col) ++ flatCols: _*)
     val dir = s"${config.outputDir}/$topic"
-    // rebalance on the partition columns before the dynamic-partition
-    // write: without it EVERY task holds a writer (and a gzip stream) for
-    // EVERY (project, user, bin) dir it encounters — tasks x dirs tiny
-    // files and an open-file explosion (measured 8x slower at 200k
-    // records / 1440 bins). The AQE rebalance hint both co-locates each
-    // dir into one task and splits skewed bins.
-    val writer0 = out
-      .drop("_offset", "_partition", "_mtime")
-      .hint("rebalance", col("_project"), col("_user"), col("_bin"))
+    val writer0 = byOutputFile(out)
       .write
-      .partitionBy("_project", "_user", "_bin")
+      .partitionBy(outputFileCols: _*)
       .mode(SaveMode.Append)
     val writer = config.maxRecordsPerFile
       .fold(writer0)(n => writer0.option("maxRecordsPerFile", n))

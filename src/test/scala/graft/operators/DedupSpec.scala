@@ -32,6 +32,17 @@ class DedupSpec extends SparkSpec {
       Seq(("3", "4"), ("1", "2"), ("a", "a"), ("3", "3")))
   }
 
+  test("a dotted ignored name replaces its struct by the other leaves on its path") {
+    import org.apache.spark.sql.functions.{col, struct}
+    val nested = corpus.select(col("i"),
+      struct(col("a"), col("b"), struct(col("a").as("x"), col("b").as("y")).as("c")).as("value"))
+    assert(Dedup.keysIgnoring(nested, Seq("value.c.x"), "i") ==
+      Seq("value.a", "value.b", "value.c.y"))
+    assert(Dedup.keysIgnoring(nested, Seq("value.b"), "i") == Seq("value.a", "value.c"))
+    // a flat frame keeps its column names
+    assert(Dedup.keysIgnoring(corpus, Seq("a"), "i") == Seq("b"))
+  }
+
   test("JSON keep-first line-set distinct preserves first-occurrence order") {
     assert(kept(Dedup.keepFirstDistinct(corpus, "i")) ==
       Seq(("1", "2"), ("3", "4"), ("1", "3"), ("a", "a"), ("3", "3")))

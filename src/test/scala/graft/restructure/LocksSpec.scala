@@ -58,6 +58,37 @@ class LocksSpec extends SparkSpec {
     assert(Await.result(f, 15.seconds) == 42)
   }
 
+  /** A manager whose first owner IO of kind `step` ("write" or "read")
+    * fails. */
+  private def failingOnce(dir: Path, step: String): FileRemoteLockManager = {
+    val m = new FileRemoteLockManager(conf, dir)
+    var armed = true
+    m.beforeOwnerIo = s => if (s == step && armed) {
+      armed = false
+      throw new java.io.IOException(s"injected owner $s failure")
+    }
+    m
+  }
+
+  private def lockFiles(dir: Path): Seq[String] =
+    new File(dir.toUri.getPath).list().toSeq
+
+  test("a failed owner write fails the acquire and leaves no lock file") {
+    val dir = new Path(Files.createTempDirectory("graft-locks-write").toString)
+    intercept[java.io.IOException](failingOnce(dir, "write").acquireLock("w"))
+    assert(lockFiles(dir).isEmpty)
+    val held = new FileRemoteLockManager(conf, dir).acquireLock("w")
+    assert(held.isDefined)
+    held.get.close()
+  }
+
+  test("a failed owner read on release still removes our own lock") {
+    val dir = new Path(Files.createTempDirectory("graft-locks-read").toString)
+    failingOnce(dir, "read").acquireLock("r").get.close()
+    assert(lockFiles(dir).isEmpty)
+    assert(new FileRemoteLockManager(conf, dir).acquireLock("r").isDefined)
+  }
+
   test("two concurrent runs over the same topics: exactly-once output, merged state") {
     // same fixture as RestructureSpec: 2 avro files, 4 records, 1 duplicate
     val (dir, base) = RestructureFixture.setup()

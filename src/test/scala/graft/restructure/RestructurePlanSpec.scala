@@ -1,0 +1,110 @@
+package graft.restructure
+
+import graft.SparkSpec
+import org.apache.avro.Schema
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.spark.ListenerBuses
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, WriteFilesExec}
+import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import java.io.File
+import scala.collection.mutable
+
+/** The write job's executed plan: a restructure batch is partitioned by
+  * output file `(_project, _user, _bin)` once, and the dedup window's
+  * sort is the only sort the write needs. */
+class RestructurePlanSpec extends SparkSpec {
+
+  /** Every node of `plan`, through AQE's final plan and its query stages. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec        => s +: nodes(s.plan)
+    case p                        => p +: p.children.flatMap(nodes)
+  }
+
+  /** The `WriteFilesExec` nodes of the jobs `body` runs that write under
+    * `outputDir`, as executed. */
+  private def writes(outputDir: String)(body: => Unit): Seq[SparkPlan] = {
+    val found = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val all = nodes(qe.executedPlan)
+        val ours = all.exists {
+          case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) =>
+            i.outputPath.toString.contains(outputDir)
+          case _ => false
+        }
+        if (ours) found.synchronized { found ++= all.collect { case w: WriteFilesExec => w } }
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBuses.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    found.toSeq
+  }
+
+  private def exchanges(plan: SparkPlan) = nodes(plan).collect { case e: ShuffleExchangeExec => e }
+
+  test("a dedup-enabled batch shuffles once and sorts once below WriteFiles") {
+    val (_, cfg) = RestructureFixture.setup()
+    val plans = writes(cfg.outputDir)(new Restructure(spark, cfg).run())
+    assert(plans.size == 1)
+    val plan = plans.head
+    assert(exchanges(plan).size == 1, plan.treeString)
+    assert(exchanges(plan).forall(e =>
+      e.shuffleOrigin != REBALANCE_PARTITIONS_BY_COL && e.shuffleOrigin != REBALANCE_PARTITIONS_BY_NONE))
+    assert(nodes(plan).count(_.isInstanceOf[SortExec]) == 1, plan.treeString)
+  }
+
+  test("a key without projectId shuffles once: the constant _project stays out of the hash") {
+    val schema = new Schema.Parser().parse(
+      """{"type":"record","name":"Envelope","fields":[
+        | {"name":"key","type":{"type":"record","name":"Key","fields":[
+        |   {"name":"userId","type":"string"},
+        |   {"name":"sourceId","type":"string"}]}},
+        | {"name":"value","type":{"type":"record","name":"Value","fields":[
+        |   {"name":"time","type":"double"},
+        |   {"name":"status","type":"string"}]}}
+        |]}""".stripMargin)
+    def rec(time: Double): GenericRecord = {
+      val key = new GenericData.Record(schema.getField("key").schema())
+      key.put("userId", "user1"); key.put("sourceId", "source1")
+      val value = new GenericData.Record(schema.getField("value").schema())
+      value.put("time", time); value.put("status", "OK")
+      val r = new GenericData.Record(schema)
+      r.put("key", key); r.put("value", value)
+      r
+    }
+    val (dir, base) = RestructureFixture.setup()
+    val file = new File(dir, "in2/keyless/partition=0/keyless+0+0000000000.avro")
+    file.getParentFile.mkdirs()
+    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+    w.create(schema, file)
+    Seq(RestructureFixture.t1, RestructureFixture.t1, RestructureFixture.t2).map(rec).foreach(w.append)
+    w.close()
+    val cfg = base.copy(inputDir = new File(dir, "in2").toString)
+    val job = new Restructure(spark, cfg)
+    val plans = writes(cfg.outputDir)(assert(job.run().records == 2))
+    assert(plans.size == 1)
+    // one exchange; the writer still sorts its partition on the literal
+    // column, an ordering no plan node below reports
+    assert(exchanges(plans.head).size == 1, plans.head.treeString)
+    assert(new File(cfg.outputDir, "keyless/_project=unknown-project/_user=user1").isDirectory)
+  }
+
+  test("a dedup-disabled batch shuffles once below WriteFiles") {
+    val (_, base) = RestructureFixture.setup()
+    val cfg = base.copy(dedupDefault = DedupConfig())
+    val plans = writes(cfg.outputDir)(new Restructure(spark, cfg).run())
+    assert(plans.size == 1)
+    assert(exchanges(plans.head).size == 1, plans.head.treeString)
+  }
+}

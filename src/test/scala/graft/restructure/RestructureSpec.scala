@@ -329,6 +329,57 @@ class RestructureSpec extends SparkSpec {
       .select("`value.serverStatus`").collect().map(_.getString(0)).toSeq == Seq("FROM_P1"))
   }
 
+  /** A config over `dir/in` with the given dedup settings. */
+  private def configAt(dir: File, dedup: DedupConfig) = RestructureConfig(
+    inputDir = new File(dir, "in").toString,
+    outputDir = new File(dir, "out").toString,
+    stateFile = new File(dir, "state/offsets.json").toString,
+    compression = None,
+    minimumFileAgeMs = 0L,
+    dedupDefault = dedup)
+
+  private def recordOf(user: String, time: Double, status: String): GenericRecord = {
+    val r = record(time, status)
+    r.get("key").asInstanceOf[GenericRecord].put("userId", user)
+    r
+  }
+
+  test("distinctFields dedup within one output file, never across users") {
+    // the reference dedups the lines of one project/user/topic/hour file:
+    // equal value.time for two users is two files, so both rows survive
+    val dir = Files.createTempDirectory("graft-dedup-scope").toFile
+    val in = new File(dir, "in/application_server_status")
+    writeAvro(new File(in, "partition=0/application_server_status+0+0000000000.avro"),
+      Seq(recordOf("userA", t1, "FROM_A")))
+    writeAvro(new File(in, "partition=1/application_server_status+1+0000000000.avro"),
+      Seq(recordOf("userB", t1, "FROM_B")))
+    val cfg = configAt(dir, DedupConfig(enable = true, distinctFields = Seq("value.time")))
+    val job = new Restructure(spark, cfg)
+    assert(job.run().records == 2)
+    assert(job.readOutput("application_server_status")
+      .select("`value.serverStatus`").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("FROM_A", "FROM_B"))
+    // so the cleaner verifies every record of both source files
+    val unmatched = new Cleaner(spark, cfg)
+      .unmatchedCounts("application_server_status", job.listFiles("application_server_status"))
+    assert(unmatched.size == 2)
+    assert(unmatched.values.forall(_._1 == 0L), unmatched)
+  }
+
+  test("a dotted ignoreFields name leaves that leaf out of the dedup key") {
+    val dir = Files.createTempDirectory("graft-dedup-ignore").toFile
+    writeAvro(
+      new File(dir, "in/application_server_status/partition=1/application_server_status+1+0000000010+0000000011.avro"),
+      Seq(record(t1, "CONNECTED"), record(t1, "DISCONNECTED")))
+    val job = new Restructure(spark,
+      configAt(dir, DedupConfig(enable = true, ignoreFields = Seq("value.serverStatus"))))
+    assert(job.run().records == 1)
+    // the two records differ only in the ignored leaf: the last one by
+    // (offset, partition) is kept
+    assert(job.readOutput("application_server_status", dedup = false)
+      .select("`value.serverStatus`").collect().map(_.getString(0)).toSeq == Seq("DISCONNECTED"))
+  }
+
   test("keep-last dedup with default keys on a payload holding a map") {
     // default keys are the whole payload, here a value struct holding an
     // Avro map (the questionnaire-answer shape): Spark cannot sort maps, so
@@ -385,6 +436,7 @@ class RestructureSpec extends SparkSpec {
     // keep their metadata. The same entries in another insertion order are
     // the same key; per key the last by (offset, partition) wins.
     import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types._
     val flatSchema = StructType(Seq(
       StructField("value", StructType(Seq(
@@ -400,7 +452,8 @@ class RestructureSpec extends SparkSpec {
       flat(7, 0, "a" -> "1", "b" -> "2"),
       flat(5, 1, "a" -> "3"),
       flat(8, 0, "a" -> "3")), flatSchema)
-    val kept = job.dedup("questionnaire", records)
+    val kept = job.dedup("questionnaire", records
+        .withColumn("_project", lit("p")).withColumn("_user", lit("u")).withColumn("_bin", lit("b")))
       .select("_offset", "_partition").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(kept == Set((7L, 1), (8L, 0)))
   }

@@ -3,9 +3,21 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.restructure.Timers
+
 /** Warm steady-state benchmark: run each catalog query `reps` times in ONE
   * warm session and record the minimum and median, writing a committed
   * markdown table (BENCHMED.md).
+  *
+  * Every rep runs under [[graft.restructure.Timers.time]] with the query's
+  * name as the label, so the table also carries what the Spark tasks did,
+  * per rep: task time, stages, shuffle write and spill (averaged over
+  * reps), the largest single-task peak execution memory (max over reps),
+  * and the codegen compilations of rep 1 — a large rep-1 count that
+  * vanishes by rep 2 is janino/classloading cost, not the query. Queries
+  * that spill print their top spilling stages as `[spill-stage]` lines.
   *
   * Rationale: the driver's single-pass Bench runs every query once in a
   * cold JVM, which is ±4x noisy for sub-second queries (codegen + JIT
@@ -15,8 +27,9 @@ import java.nio.file.{Files, Paths}
   * against a committed steady-state baseline instead of re-litigated.
   *
   * Usage: runMain graft.BenchMed [out.md] [sfDir] [reps] [query...]
-  * (defaults: BENCHMED.md, /root/testdata/sf0.1, 4 reps, the slowest /
-  * previously-disputed queries).
+  * (defaults: BENCHMED.md, /root/testdata/sf0.1, 4 reps, the full
+  * catalog). One named query is the single-query feedback loop for plan
+  * iteration: `runMain graft.BenchMed /tmp/q.md /root/testdata/sf0.1 3 q`.
   */
 object BenchMed {
 
@@ -41,6 +54,9 @@ object BenchMed {
     * would vanish instead of erroring (BenchMedPriorSpec pins this). */
   private[graft] def fmt2(d: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
+
+  private def fmt1(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
 
   /** Parse the PRIOR committed record at `path` (the file this run will
     * overwrite): its provenance hash and each query's min. Returns None
@@ -76,6 +92,7 @@ object BenchMed {
 
     val spark = Sessions.build("graft-bench-med")
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+    Timers.enabled = true
 
     // Protocol (round 17): `reps` whole-catalog passes in ALTERNATING
     // order (a->z, z->a, ...) — session-phase effects (GC ramp, codegen
@@ -87,12 +104,17 @@ object BenchMed {
     // adjudication), so every round burned effort separating ambient
     // noise from regressions.
     val acc = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val rep1Compiles = scala.collection.mutable.Map.empty[String, Long]
     def pass(order: Seq[String]): Unit = order.foreach { name =>
       val fn = SparkEntry.queries(name)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      // noop sink materializes EVERY column (same rationale as BenchOne)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      // noop sink materializes EVERY column: count() would let the
+      // optimizer prune projection-only queries down to scan+count and the
+      // timing would no longer respond to the expressions under test
+      Timers.time(spark, name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       val sec = (System.nanoTime() - t0) / 1e9
+      rep1Compiles.getOrElseUpdate(name, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
       acc(name) = acc.getOrElse(name, Vector.empty) :+ sec
     }
     (0 until reps).foreach(p => pass(if (p % 2 == 0) names else names.reverse))
@@ -100,6 +122,11 @@ object BenchMed {
     (reps until math.max(reps, SubSecondReps))
       .foreach(p => pass(if (p % 2 == 0) cheap else cheap.reverse))
     val rows = names.map(n => (n, acc(n)))
+    Timers.settle()
+    val metrics = Timers.timings
+    rows.foreach { case (name, _) =>
+      metrics(name).spillStages.foreach(st => println(s"[spill-stage] $name $st"))
+    }
 
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted
@@ -140,9 +167,23 @@ object BenchMed {
     sb ++= "sub-second reps tighten exactly the rows that scatter ±50% at 4 reps.\n"
     sb ++= "The driver's single-pass BENCH additionally carries cold-JVM codegen/JIT\n"
     sb ++= "and is ±4x noisy below ~1 s.\n\n"
-    sb ++= "| query | min (s) | median (s) | reps (s) |\n|---|---|---|---|\n"
+    sb ++= "Per rep, from the Spark tasks of the query's jobs: `task` is task run\n"
+    sb ++= "time, `shuffle write` and `spill` (memory bytes spilled) are totals, all\n"
+    sb ++= "averaged over the reps; `peak task` is the largest single-task peak\n"
+    sb ++= "execution memory of any rep; `compiles` counts the janino compilations\n"
+    sb ++= "of rep 1.\n\n"
+    sb ++= "| query | min (s) | median (s) | task (s) | stages | shuffle write (MiB) " +
+      "| spill (MiB) | peak task (MiB) | compiles | reps (s) |\n"
+    sb ++= "|---|---|---|---|---|---|---|---|---|---|\n"
+    def mib(bytes: Double): String = fmt1(bytes / 1048576)
     rows.sortBy(-_._2.min).foreach { case (name, ts) =>
-      sb ++= s"| $name | ${f(ts.min)} | ${f(median(ts))} | ${ts.map(f).mkString(", ")} |\n"
+      val e = metrics(name)
+      val n = e.invocations.toDouble
+      val row = s"| $name | ${f(ts.min)} | ${f(median(ts))} | ${f(e.taskNanos / 1e9 / n)} " +
+        s"| ${fmt1(e.stages / n)} | ${mib(e.shuffleWriteBytes / n)} | ${mib(e.memSpilledBytes / n)} " +
+        s"| ${mib(e.peakTaskMemBytes.toDouble)} | ${rep1Compiles(name)} | ${ts.map(f).mkString(", ")} |"
+      println(row)
+      sb ++= row + "\n"
     }
 
     // Ambient adjudication footer (round-18 directive): three rounds

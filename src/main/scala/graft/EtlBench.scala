@@ -4,7 +4,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 
-import graft.restructure.{DedupConfig, Restructure, RestructureConfig}
+import graft.restructure.{DedupConfig, Restructure, RestructureConfig, Timers}
 
 import java.io.File
 import java.nio.file.Files
@@ -114,20 +114,25 @@ object EtlBench {
       dedupDefault = DedupConfig(enable = true),
       // GRAFT_ETL_MAX_PER_FILE caps records per output file (file rolling
       // inside hot bins — the production knob for splittable output)
-      maxRecordsPerFile = sys.env.get("GRAFT_ETL_MAX_PER_FILE").map(_.toLong))
+      maxRecordsPerFile = sys.env.get("GRAFT_ETL_MAX_PER_FILE").map(_.toLong),
+      // task-level memory/spill stats ride the measured pass, attributed to
+      // its phase labels — the 10x/scale rehearsal question is whether the
+      // dynamic-partition write (one file per project/user/topic/hour bin)
+      // stays in memory, not just how fast it goes
+      enableTimers = true)
     val job = new Restructure(spark, cfg)
-    // task-level memory/spill stats ride the measured pass — the 10x/
-    // scale rehearsal question is whether the dynamic-partition write
-    // (one file per project/user/topic/hour bin) stays in memory, not
-    // just how fast it goes
-    BenchSpill.drainBus(spark.sparkContext)
-    val acc = new BenchSpill.TaskMetricsAcc
-    spark.sparkContext.addSparkListener(acc)
     val start = System.nanoTime()
     val result = job.run()
     val sec = (System.nanoTime() - start) / 1e9
-    acc.settle()
-    spark.sparkContext.removeSparkListener(acc)
+    // the task metrics of every label whose name starts with `prefix`, as
+    // the JSON fields of a result line
+    def taskFields(prefix: String): String = {
+      Timers.settle()
+      val es = Timers.timings.collect { case (l, e) if l.startsWith(prefix) => e }
+      s""""tasks":${es.map(_.tasks).sum},"memSpilledMB":${es.map(_.memSpilledBytes).sum / 1048576},""" +
+        s""""diskSpilledMB":${es.map(_.diskSpilledBytes).sum / 1048576},""" +
+        s""""peakTaskMemMB":${es.map(_.peakTaskMemBytes).maxOption.getOrElse(0L) / 1048576}"""
+    }
     // result.records counts WRITTEN (post-dedup) records; with planted
     // duplicate mass (dupEvery > 1) the input rate is the throughput
     // number comparable across regimes, so both are printed
@@ -135,9 +140,7 @@ object EtlBench {
       s"""{"metric":"etl_records_per_sec","value":${(result.records / sec).toLong},""" +
         s""""inputRecords":$actualRecords,"inputRecPerSec":${(actualRecords / sec).toLong},""" +
         s""""records":${result.records},"files":${result.files},"sec":$sec,""" +
-        s""""tasks":${acc.tasks.get()},"memSpilledMB":${acc.memSpilled.get() / 1048576},""" +
-        s""""diskSpilledMB":${acc.diskSpilled.get() / 1048576},""" +
-        s""""peakTaskMemMB":${acc.peakTask.get() / 1048576}}""")
+        taskFields("restructure.") + "}")
 
     // GRAFT_ETL_CLEAN=1 appends a cleaner leg over the freshly
     // restructured topic — the scale question the write path's rows
@@ -173,9 +176,6 @@ object EtlBench {
       def inputFiles() =
         ls(inTopic).flatMap(ls).count(_.getName.endsWith(".avro"))
       val before = inputFiles()
-      BenchSpill.drainBus(spark.sparkContext)
-      val cacc = new BenchSpill.TaskMetricsAcc
-      spark.sparkContext.addSparkListener(cacc)
       val c0 = System.nanoTime()
       // negative age: every file is old enough, so candidacy is decided
       // by state coverage plus the end-less-name P9 guard (this
@@ -183,18 +183,14 @@ object EtlBench {
       // newest file is excluded from candidacy outright — the state
       // check alone would degenerate to [start, start+1] and admit it)
       val cleaner = new graft.restructure.Cleaner(spark, cfg, ageMs = -60000L)
-      val (cleanDeleted, cleanReprocess) = cleaner.run()
+      val (cleanDeleted, cleanReprocess) = Timers.time(spark, "cleaner")(cleaner.run())
       val cleanSec = (System.nanoTime() - c0) / 1e9
-      cacc.settle()
-      spark.sparkContext.removeSparkListener(cacc)
       val after = inputFiles()
       println(
         s"""{"metric":"etl_cleaner_sec","value":$cleanSec,""" +
           s""""deleted":${cleanDeleted.size},"reprocess":${cleanReprocess.size},""" +
           s""""plantedBin":"${planted.getName}","filesBefore":$before,"filesAfter":$after,""" +
-          s""""tasks":${cacc.tasks.get()},"memSpilledMB":${cacc.memSpilled.get() / 1048576},""" +
-          s""""diskSpilledMB":${cacc.diskSpilled.get() / 1048576},""" +
-          s""""peakTaskMemMB":${cacc.peakTask.get() / 1048576}}""")
+          taskFields("cleaner") + "}")
       require(cleanDeleted.nonEmpty, "cleaner verified nothing for deletion")
       require(cleanReprocess.nonEmpty,
         "planted missing bin produced no surviving reprocess files")

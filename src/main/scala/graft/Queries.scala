@@ -904,7 +904,7 @@ object Queries {
     // ids stay packed as one array per WORD through the doc-keyed
     // exchange (the only corpus-sized shuffle here): ~4x fewer rows than
     // exploding to token granularity, same bytes — measured 23.8 -> 9.8 s
-    // at the 100x corpus (BenchOne warm min). Intra-word order rides the array, word order
+    // at the 100x corpus (BenchMed warm min). Intra-word order rides the array, word order
     // the (wpos) sort; flatten reassembles the exact token sequence.
     enc.select(col("doc_id"), col("wpos"),
         transform(col("syms"), sym =>

@@ -91,8 +91,9 @@ object Sessions {
     * its own wall-clock. The per-plan generated code still compiles per
     * plan — this warms the machinery, which is the dominant first-use
     * term now that the PSL rules live in a kernel instead of ~200 KB of
-    * InSet literals (graft.catalyst.PslKernels). Measured: BenchOne
-    * rep-1 on url_dedup drops from ~5 s toward its warm steady state.
+    * InSet literals (graft.catalyst.PslKernels). Measured: single-query
+    * BenchMed rep-1 on url_dedup drops from ~5 s toward its warm steady
+    * state.
     * Cost: well under a second, ONCE PER JVM (the codegen caches being
     * warmed are process-global, so re-running on every build() — e.g.
     * when getOrCreate() returns an already-warm session — buys
@@ -130,7 +131,7 @@ object Sessions {
       // warm-ups above compile DIFFERENT whole-stage classes than the
       // catalog's parquet-scan plans, so a fresh JVM's first real query
       // still paid ~16 janino compilations (~2 s on url_dedup, measured
-      // via BenchOne's compile-count column). Running the actual headline
+      // via BenchMed's rep-1 compile-count column). Running the actual headline
       // queries over 1-ROW parquet twins — schemas matching the real
       // tables' nullability so the generated null-check shapes line up —
       // populates Spark's generated-class cache with the file-scan

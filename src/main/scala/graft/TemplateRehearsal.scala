@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.restructure.Timers
+
 /** Scale rehearsal for the set-identity collapse ([[graft.dedup.Jaccard
   * .collapse]]): plant TEMPLATE FAMILIES — m byte-identical copies of
   * every document, the shape template pages / boilerplate docs /
   * mirrored dumps produce in real crawls — and run exact prefix-filtered
-  * Jaccard with the collapse ON vs OFF under the BenchSpill task-metric
-  * listener.
+  * Jaccard with the collapse ON vs OFF, each leg under its own
+  * [[graft.restructure.Timers]] label so its task metrics are its own.
   *
   * Without the collapse, every m-family turns into C(m,2) candidate
   * pairs whose verification joins carry two full shingle arrays each
@@ -34,6 +36,7 @@ object TemplateRehearsal {
       s"family must be jaccard or subsets, got '$family'")
     require(copies >= 2, "copies must be >= 2")
     val spark = Sessions.build("graft-template-rehearsal")
+    Timers.enabled = true
 
     val idStride = 1000000L
     val docs = spark.read.parquet(s"$src/documents.parquet")
@@ -55,23 +58,22 @@ object TemplateRehearsal {
       // row CONTENT, not just cardinality (for the per-doc best-container
       // output a count alone cannot see a wrong-container divergence)
       def run(label: String)(query: => org.apache.spark.sql.DataFrame): (Long, Long) = {
-        BenchSpill.drainBus(spark.sparkContext)
-        val acc = new BenchSpill.TaskMetricsAcc
-        spark.sparkContext.addSparkListener(acc)
         val t0 = System.nanoTime()
-        val q = query
-        val row = q.select(xxhash64(struct(q.columns.map(col): _*)).as("__h"))
-          .agg(count(lit(1)), expr("bit_xor(__h)")).head()
+        val row = Timers.time(spark, s"template.$label") {
+          val q = query
+          q.select(xxhash64(struct(q.columns.map(col): _*)).as("__h"))
+            .agg(count(lit(1)), expr("bit_xor(__h)")).head()
+        }
         val n = row.getLong(0)
         val chk = if (row.isNullAt(1)) 0L else row.getLong(1)
         val wall = (System.nanoTime() - t0) / 1e9
-        acc.settle()
-        spark.sparkContext.removeSparkListener(acc)
-        acc.topSpillStages(3).foreach(s => println(s"[spill-stage] $label $s"))
+        Timers.settle()
+        val e = Timers.timings(s"template.$label")
+        e.spillStages.foreach(s => println(s"[spill-stage] $label $s"))
         println(f"[template] $label%-14s rows=$n%d wall=$wall%.1fs " +
-          f"memSpill=${acc.memSpilled.get() / 1048576}%d MiB " +
-          f"diskSpill=${acc.diskSpilled.get() / 1048576}%d MiB " +
-          f"peakTask=${acc.peakTask.get() / 1048576}%d MiB")
+          f"memSpill=${e.memSpilledBytes / 1048576}%d MiB " +
+          f"diskSpill=${e.diskSpilledBytes / 1048576}%d MiB " +
+          f"peakTask=${e.peakTaskMemBytes / 1048576}%d MiB")
         (n, chk)
       }
 

@@ -84,20 +84,9 @@ final class Cleaner(spark: SparkSession, config: RestructureConfig, ageMs: Long 
     * value.timeReceived, ...). Both sides pass through timestamp_seconds so
     * they compare at the same (microsecond) precision. */
   def extractedTimes(topic: String): DataFrame = {
-    val dir = s"${config.outputDir}/$topic"
-    // pathGlobFilter: skip the schema sidecar; partition dirs still resolve
-    val reader = spark.read
-      .option("header", "true")
-      .option("pathGlobFilter", "part-*")
     val df =
-      try {
-        config.format match {
-          case "csv"     => reader.csv(dir)
-          case "json"    => reader.json(dir)
-          case "parquet" => reader.parquet(dir)
-          case other  => throw new IllegalArgumentException(s"unknown format: $other")
-        }
-      } catch {
+      try job.readOutput(topic, dedup = false)
+      catch {
         case _: org.apache.spark.sql.AnalysisException =>
           // missing/empty output: nothing is extracted
           return spark.emptyDataFrame

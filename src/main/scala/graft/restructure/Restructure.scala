@@ -40,12 +40,6 @@ final case class RestructureConfig(
     minimumFileAgeMs: Long = 60000L,
     dedup: Map[String, DedupConfig] = Map.empty,
     dedupDefault: DedupConfig = DedupConfig(),
-    // data-dependent CSV headers for map/array payloads: per-key and
-    // per-index columns measured from the batch (the reference's
-    // first-record-derived header, format/RecordConverterFactory.kt:115-127,
-    // as a per-topic schema union). Off -> maps/arrays JSON-encode into one
-    // column.
-    csvDataHeaders: Boolean = true,
     // when set, concurrent app instances coordinate through per-topic locks
     // and merge-commit the shared state file under a state lock
     // (accounting/RedisRemoteLockManager.kt:18-44 semantics, file-backed)
@@ -242,15 +236,8 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         })
         .toDF("_file", "_partition", "_start_offset", "_mtime")
       val withMeta = df.join(broadcast(meta), "_file")
-      val time = Times.eventTime(withMeta)
-      val derived = withMeta
-        .withColumn("_topic", lit(topic))
-        .withColumn("_offset", col("_start_offset") + col("_row_index"))
-        .withColumn("_project", sanitized(withMeta, "key.projectId", "unknown-project"))
-        .withColumn("_user", sanitized(withMeta, "key.userId", "unknown-user"))
-        .withColumn("_source", sanitized(withMeta, "key.sourceId", "unknown-source"))
-        .withColumn("_time", time)
-        .withColumn("_bin", Times.timeBin(col("_time"), config.timeBinFormat))
+      val derived = derive(topic, withMeta,
+        "_offset" -> (col("_start_offset") + col("_row_index")))
         .drop("_start_offset")
       TopicBatch(topic, derived, paths.map(byPath), rowsRead)
     }
@@ -264,15 +251,24 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * exactly-once here). */
   def deriveStream(topic: String, df: DataFrame): DataFrame = {
     val fname = element_at(split(col("_file"), "/"), -1)
-    val time = Times.eventTime(df)
-    df.withColumn("_topic", lit(topic))
-      .withColumn("_partition", Strings.filenamePartition(fname))
-      .withColumn("_offset", Strings.filenameStartOffset(fname) + col("_row_index"))
-      .withColumn("_mtime", current_timestamp())
+    derive(topic, df,
+      "_partition" -> Strings.filenamePartition(fname),
+      "_offset" -> (Strings.filenameStartOffset(fname) + col("_row_index")),
+      "_mtime" -> current_timestamp())
+  }
+
+  /** The derived columns both read paths add, in one order: `_topic`, the
+    * caller's `located` columns, then `_project _user _source _time _bin`
+    * from the record's key and event time. */
+  private def derive(topic: String, df: DataFrame, located: (String, Column)*): DataFrame = {
+    val withLocation = located.foldLeft(df.withColumn("_topic", lit(topic))) {
+      case (d, (name, c)) => d.withColumn(name, c)
+    }
+    withLocation
       .withColumn("_project", sanitized(df, "key.projectId", "unknown-project"))
       .withColumn("_user", sanitized(df, "key.userId", "unknown-user"))
       .withColumn("_source", sanitized(df, "key.sourceId", "unknown-source"))
-      .withColumn("_time", time)
+      .withColumn("_time", Times.eventTime(df))
       .withColumn("_bin", Times.timeBin(col("_time"), config.timeBinFormat))
   }
 
@@ -308,6 +304,12 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * by its leaves). Per key the last record by `(_offset, _partition)`
     * survives.
     *
+    * The JSON format dedups whole lines instead (D2,
+    * format/RecordConverterFactory.kt:62-84): the fields are every payload
+    * column and `distinctFields`/`ignoreFields` do not apply. Rows equal
+    * in every field write identical lines, so keeping the last is keeping
+    * the first.
+    *
     * The frame is partitioned by output file ([[byOutputFile]]) before the
     * window, so that one exchange serves both the window and [[write]]. */
   def dedup(topic: String, df: DataFrame): DataFrame = {
@@ -321,8 +323,9 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     // deterministically.
     val ordered = byOutputFile(df).withColumn("__ord", struct(col("_offset"), col("_partition")))
     val fields =
-      if (cfg.distinctFields.nonEmpty) cfg.distinctFields
-      else Dedup.keysIgnoring(ordered, cfg.ignoreFields ++ metaCols :+ "__ord", "__ord")
+      if (config.format == "json") Dedup.keysIgnoring(ordered, metaCols, "__ord")
+      else if (cfg.distinctFields.nonEmpty) cfg.distinctFields
+      else Dedup.keysIgnoring(ordered, cfg.ignoreFields ++ metaCols, "__ord")
     Dedup.keepLast(ordered, outputFileCols ++ fields, "__ord").drop("__ord")
   }
 
@@ -371,12 +374,12 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     val payload = df.schema.fields.map(_.name).filterNot(metaCols.contains)
     val payloadStruct = StructType(df.schema.fields.filter(f => payload.contains(f.name)))
     val flatCols =
-      if (config.format == "csv" && config.csvDataHeaders &&
-          Flatten.needsCsvLayout(payloadStruct)) {
+      if (config.format == "csv" && Flatten.needsCsvLayout(payloadStruct)) {
         // two-pass data-dependent header: measure map keys (first-seen by
         // offset) and array lengths over the batch, then expand in place —
         // every bin file of the topic gets the same header (per-topic
-        // schema union of the reference's per-file first-record header)
+        // schema union of the reference's per-file first-record header,
+        // format/RecordConverterFactory.kt:115-127)
         val layout = Flatten.csvLayout(
           df.select((payload.map(n => col(s"`$n`")) :+ col("_offset")).toSeq: _*),
           Some("_offset"))
@@ -451,6 +454,7 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * equivalent is a whole-row distinct). */
   def readOutput(topic: String, dedup: Boolean = true): DataFrame = {
     val dir = s"${config.outputDir}/$topic"
+    // pathGlobFilter: skip the schema sidecar; partition dirs still resolve
     val reader = spark.read
       .option("header", "true")
       .option("pathGlobFilter", "part-*")
@@ -542,7 +546,11 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
         case None    => process()
       }
     }
-    if (config.enableTimers) println(Timers.report)
+    if (config.enableTimers) {
+      // the bus is asynchronous: the last write's task events may still be queued
+      Timers.settle()
+      println(Timers.report)
+    }
     RestructureResult(topics.size, filesProcessed, recordsWritten)
   }
 

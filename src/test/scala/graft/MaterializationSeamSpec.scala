@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mechanical pin of the one materialization seam: every query-path
@@ -14,8 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * must not follow the `-Dgraft.truncate=off` escape hatch). */
 class MaterializationSeamSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
-
   private val allowed = Set(
     "graft/Lineage.scala",
     "graft/text/BPE.scala",
@@ -24,22 +17,8 @@ class MaterializationSeamSpec extends AnyFunSuite {
     "graft/operators/PageRank.scala",
     "graft/operators/ConnectedComponents.scala")
 
-  /** (relative path, 1-based line number, line) of every line matching. */
-  private def matching(pattern: String): Seq[(String, Int, String)] = {
-    val re = pattern.r
-    Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap { p: Path =>
-        val rel = root.relativize(p).toString.replace('\\', '/')
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          .split("\n", -1).zipWithIndex.collect {
-            case (line, i) if re.findFirstIn(line).isDefined => (rel, i + 1, line.trim)
-          }
-      }
-  }
-
   test("checkpoint calls appear only in Lineage and the iterative loops") {
-    val calls = matching("""\.(localCheckpoint|checkpoint)\(""")
+    val calls = MainSources.matching("""\.(localCheckpoint|checkpoint)\(""")
     assert(calls.exists(_._1 == "graft/Lineage.scala"), "the scan must see the seam itself")
     val stray = calls.filterNot { case (rel, _, _) => allowed(rel) }
     assert(stray.isEmpty,
@@ -48,7 +27,7 @@ class MaterializationSeamSpec extends AnyFunSuite {
   }
 
   test("no second truncation knob") {
-    val knob = matching("""graft\.reuse""")
+    val knob = MainSources.matching("""graft\.reuse""")
     assert(knob.isEmpty, knob.mkString("\n"))
   }
 }

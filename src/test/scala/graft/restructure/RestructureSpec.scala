@@ -380,6 +380,23 @@ class RestructureSpec extends SparkSpec {
       .select("`value.serverStatus`").collect().map(_.getString(0)).toSeq == Seq("DISCONNECTED"))
   }
 
+  test("JSON output dedups whole lines; distinctFields do not apply") {
+    // the reference's JSON format dedups by whole line, keeping the first
+    // (D2): two records equal only in the distinctFields leaf are two
+    // lines, both written; two identical records are one line
+    val dir = Files.createTempDirectory("graft-dedup-json").toFile
+    writeAvro(
+      new File(dir, "in/application_server_status/partition=1/application_server_status+1+0000000010+0000000012.avro"),
+      Seq(record(t1, "CONNECTED"), record(t1, "DISCONNECTED"), record(t1, "DISCONNECTED")))
+    val job = new Restructure(spark,
+      configAt(dir, DedupConfig(enable = true, distinctFields = Seq("value.time")))
+        .copy(format = "json"))
+    assert(job.run().records == 2)
+    assert(job.readOutput("application_server_status", dedup = false)
+      .select("`value.serverStatus`").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("CONNECTED", "DISCONNECTED"))
+  }
+
   test("keep-last dedup with default keys on a payload holding a map") {
     // default keys are the whole payload, here a value struct holding an
     // Avro map (the questionnaire-answer shape): Spark cannot sort maps, so
@@ -424,13 +441,14 @@ class RestructureSpec extends SparkSpec {
       stateFile = new File(dir, "state/offsets.json").toString,
       compression = None,
       minimumFileAgeMs = 0L,
-      csvDataHeaders = false, // one JSON-encoded map column
       dedupDefault = DedupConfig(enable = true))
     val job = new Restructure(spark, cfg)
     assert(job.run().records == 2)
+    // the CSV header expands the map into one column per key
     assert(job.readOutput("questionnaire", dedup = false)
-      .select("`value.answers`").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("""{"a":"1","b":"2"}""", """{"a":"3"}"""))
+      .select("`value.answers.a`", "`value.answers.b`").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))).sorted.toSeq ==
+      Seq(("1", Some("2")), ("3", None)))
 
     // which record survives: the dedup step itself over flat records that
     // keep their metadata. The same entries in another insertion order are

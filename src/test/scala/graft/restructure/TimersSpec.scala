@@ -1,10 +1,12 @@
 package graft.restructure
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** A4 — labeled phase timers: disabled-by-default bookkeeping, wall-time
   * accumulation, nested-label restore, and listener attribution of executor
-  * task counts/time to the enclosing phase.
+  * task counts/time and task metrics to the enclosing phase.
   */
 class TimersSpec extends SparkSpec {
 
@@ -60,6 +62,23 @@ class TimersSpec extends SparkSpec {
       val e = awaitTasks("restructure.write")
       assert(e.tasks > 0)
       assert(Timers.report.contains("restructure.plan"))
+    } finally Timers.enabled = false
+  }
+
+  test("a labelled shuffle job carries its stage, shuffle and memory metrics") {
+    Timers.reset()
+    Timers.enabled = true
+    try {
+      Timers.time(spark, "spec.shuffle") {
+        spark.range(0, 200000, 1, 4).groupBy(col("id") % 100).count().collect()
+      }
+      Timers.settle()
+      val e = Timers.timings("spec.shuffle")
+      assert(e.stages >= 2, e)
+      assert(e.shuffleWriteBytes > 0, e)
+      assert(e.shuffleReadBytes > 0, e)
+      assert(e.peakTaskMemBytes > 0, e)
+      assert(Timers.report.contains("spec.shuffle"))
     } finally Timers.enabled = false
   }
 

@@ -51,6 +51,17 @@ object Sessions {
     // nanos type — read as long, Tables.load converts to micros
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
+  /** The Hadoop settings of every graft session, as Spark confs — one
+    * owner, applied by [[build]] and by the test session. `file://` runs on
+    * [[graft.fs.NioLocalFileSystem]]: stock Hadoop without its native
+    * library starts a `chmod` process per created file and dir and an
+    * `ls -ld` process per listed file, which was most of a restructure
+    * pass's write stage. Hadoop's `FileSystem` cache does not key on the
+    * conf, so the first `file://` lookup in a JVM fixes the class: build
+    * the session before any such lookup. */
+  val hadoopConf: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName)
+
   /** `build` with the core count pinned by the CALLER instead of the
     * environment — for mains whose OUTPUT is a committed artifact that
     * must not vary with the box it was produced on (Plans: partition
@@ -63,8 +74,9 @@ object Sessions {
       .master(s"local[$pinnedCpus]")
       // native codegen'd text-hash expressions (graft_minhash_sig, ...)
       .withExtensions(new graft.catalyst.GraftExtensions)
-    // the plan-shaping SQLConfs (rationale on [[planConf]])
-    val spark = planConf(pinnedCpus)
+    // the plan-shaping SQLConfs and the Hadoop settings (rationale on
+    // [[planConf]] and [[hadoopConf]])
+    val spark = (planConf(pinnedCpus) ++ hadoopConf)
       .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
       // reliable-checkpoint janitor: when a graft-owned session has a
       // checkpoint dir (Lineage.truncate's reliable mode, e.g. curate's

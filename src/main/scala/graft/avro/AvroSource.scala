@@ -101,16 +101,23 @@ object AvroSource {
     * (the failure mode the reference's corrupt-file handling covers,
     * worker/FileCache.kt:172-201). A file rewritten between stat and read
     * shows up as a length mismatch and simply retries against the new
-    * stat. */
+    * stat. The read is sized by that stat: one `readFully` into a buffer
+    * of the file's length, then one probe that the stream ends there. */
   private[graft] def readFullyVerified(fs: org.apache.hadoop.fs.FileSystem,
       hp: org.apache.hadoop.fs.Path): Array[Byte] = {
     val len = fs.getFileStatus(hp).getLen
+    if (len > Int.MaxValue - 8)
+      throw new java.io.IOException(s"$len bytes do not fit one array: $hp")
     val in = fs.open(hp)
     try {
-      val buf = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      if (buf.length != len)
-        throw new java.io.IOException(
-          s"stream delivered ${buf.length} of $len bytes: $hp")
+      val buf = new Array[Byte](len.toInt)
+      try in.readFully(buf)
+      catch {
+        case e: java.io.EOFException =>
+          throw new java.io.IOException(s"stream ended short of $len bytes: $hp", e)
+      }
+      if (in.read() != -1)
+        throw new java.io.IOException(s"stream delivered more than $len bytes: $hp")
       buf
     } finally in.close()
   }

@@ -84,17 +84,16 @@ final class Cleaner(spark: SparkSession, config: RestructureConfig, ageMs: Long 
     * value.timeReceived, ...). Both sides pass through timestamp_seconds so
     * they compare at the same (microsecond) precision. */
   def extractedTimes(topic: String): DataFrame = {
-    val df =
-      try job.readOutput(topic, dedup = false)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          // missing/empty output: nothing is extracted
-          return spark.emptyDataFrame
-            .withColumn("p", lit(null).cast("string"))
-            .withColumn("u", lit(null).cast("string"))
-            .withColumn("b", lit(null).cast("string"))
-            .withColumn("t", lit(null).cast("double"))
-      }
+    // missing/empty output: nothing is extracted. Checked on the
+    // filesystem, not by a failed read, whose analysis error every query
+    // execution listener of the session would receive
+    if (!job.hasOutput(topic))
+      return spark.emptyDataFrame
+        .withColumn("p", lit(null).cast("string"))
+        .withColumn("u", lit(null).cast("string"))
+        .withColumn("b", lit(null).cast("string"))
+        .withColumn("t", lit(null).cast("double"))
+    val df = job.readOutput(topic, dedup = false)
     df.select(
       col("_project").as("p"), col("_user").as("u"), col("_bin").as("b"),
       graft.functions.Times.eventTimeFlat(df).cast("double").as("t"))

@@ -467,6 +467,15 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     if (dedup) df.distinct() else df
   }
 
+  /** Whether the topic's output holds a part file, checked with one glob
+    * over the `(_project, _user, _bin)` layout: [[readOutput]] on a topic
+    * without one fails analysis (no schema to infer). */
+  private[restructure] def hasOutput(topic: String): Boolean = {
+    val glob = new Path((Seq(s"${config.outputDir}/$topic") ++
+      outputFileCols.map(c => s"$c=*") :+ "part-*").mkString("/"))
+    Option(fsOf(glob).globStatus(glob)).exists(_.nonEmpty)
+  }
+
   /** Schema sidecar (S9): Spark schema JSON written once per topic dir. */
   def writeSidecar(topic: String, df: DataFrame): Unit = {
     val p = new Path(s"${config.outputDir}/$topic", s"schema-$topic.json")

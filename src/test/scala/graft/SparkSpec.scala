@@ -5,7 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (small core count: unit-test data is
-  * tiny and session startup dominates).
+  * tiny and session startup dominates). It carries the production Hadoop
+  * settings ([[Sessions.hadoopConf]]), so specs run on the same `file://`
+  * filesystem as the mains.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,7 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val builder = SparkSession.builder()
       .appName("graft-test")
       .master("local[4]")
       .withExtensions(new graft.catalyst.GraftExtensions)
@@ -25,6 +27,8 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+    val s = Sessions.hadoopConf
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -110,6 +110,33 @@ class FaultToleranceSpec extends SparkSpec {
       () => new java.io.FileInputStream(f), expectedLen = full))
   }
 
+  test("readFullyVerified: exact length round-trips; a short or long stream is a retried IOException") {
+    val dir = Files.createTempDirectory("graft-readfully").toFile
+    val f = new File(dir, "t+0+0000000000+0000000099.avro")
+    RestructureFixture.writeAvro(f,
+      (0 until 100).map(i => RestructureFixture.record(1.0 + i, s"S$i")))
+    val p = new Path(f.getAbsolutePath)
+    def misstated(delta: Long) = {
+      val fs = new MisstatedLengthFileSystem(delta)
+      fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      fs
+    }
+    assert(AvroSource.readFullyVerified(misstated(0L), p).sameElements(Files.readAllBytes(f.toPath)))
+    // the stat says 10 bytes more than the stream delivers (it ends short),
+    // then 10 bytes fewer (it runs past): both are transient, retried
+    for ((delta, words) <- Seq(10L -> "short of", -10L -> "more than")) {
+      var calls = 0
+      val e = intercept[java.io.IOException] {
+        AvroSource.faultTolerant(backoffMs = 1L) { _ =>
+          calls += 1
+          AvroSource.readFullyVerified(misstated(delta), p)
+        }
+      }
+      assert(e.getMessage.contains(words), e.getMessage)
+      assert(calls == 3)
+    }
+  }
+
   test("quarantine picks the first free .corrupted suffix") {
     val dir = Files.createTempDirectory("graft-quarantine").toFile
     val f = new File(dir, "t+0+0000000000.avro")
@@ -164,4 +191,15 @@ class FlakyOpenFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("flaky:///")
   override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
     throw new java.io.IOException("connection reset by peer (simulated)")
+}
+
+/** Test-only local filesystem whose statuses misstate every file's length
+  * by `delta` bytes, so a stream read against the stat ends short of it
+  * (delta > 0) or runs past it (delta < 0). */
+class MisstatedLengthFileSystem(delta: Long) extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus = {
+    val st = super.getFileStatus(p)
+    new org.apache.hadoop.fs.FileStatus(st.getLen + delta, st.isDirectory, st.getReplication,
+      st.getBlockSize, st.getModificationTime, st.getPath)
+  }
 }

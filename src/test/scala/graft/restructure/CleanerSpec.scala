@@ -265,6 +265,42 @@ class CleanerSpec extends SparkSpec {
     assert(r.files == 1)
   }
 
+  test("a topic without output is probed on the filesystem, not by a failed query") {
+    // the empty-output probe used to be a read that failed analysis; each
+    // such failure reached every query execution listener of the session
+    // (logged as an ERROR with a stack trace once a pass had registered
+    // Spark's Observation listener)
+    val dir = Files.createTempDirectory("graft-cleaner-nooutput").toFile
+    val cfg = RestructureConfig(
+      inputDir = new File(dir, "in").toString,
+      outputDir = new File(dir, "out").toString,
+      stateFile = new File(dir, "state/offsets.json").toString,
+      compression = None,
+      minimumFileAgeMs = 0L)
+    new File(cfg.outputDir, "phone_light").mkdirs() // a topic dir with no part file
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "cleaner_spec_sentinel")) sentinelSeen.countDown()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        failures.add(s"$funcName: ${exception.getMessage}")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val cleaner = new Cleaner(spark, cfg, ageMs = 0L)
+      assert(cleaner.extractedTimes("phone_light").count() == 0)
+      assert(cleaner.extractedTimes("never_written").count() == 0)
+      // listener events arrive in order: once a later query's success is
+      // seen, any failure the probes posted has been seen too
+      spark.range(1).toDF("cleaner_spec_sentinel").collect()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(failures.isEmpty, failures)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("parquet output verifies and cleans like csv/json") {
     // the columnar sink is a supported format end to end
     // (Restructure.write/readOutput) — the cleaner's verification read

@@ -41,6 +41,12 @@ object AvroSource {
   final class CorruptContainerException(msg: String)
       extends java.io.IOException(msg)
 
+  /** A file too large for one byte array. Not corruption (the file is
+    * not quarantined) and not transient (no retry makes it fit): it
+    * propagates at once and fails the task. */
+  final class FileTooLargeException(msg: String)
+      extends java.io.IOException(msg)
+
   /** IMPORTANT: AvroRuntimeException is NOT corruption evidence —
     * DataFileStream wraps transient IOExceptions from the underlying
     * stream in AvroRuntimeException (hasNext/next), so treating it as
@@ -56,9 +62,9 @@ object AvroSource {
 
   /** Bounded retry with linear backoff, the reference's storage fault
     * tolerance (source/S3SourceStorage.kt:110-136): 3 attempts, sleep
-    * (attempt+1)*backoff between them. FileNotFound (a raced deletion) and
-    * deterministic corruption short-circuit — neither gets better by
-    * waiting. */
+    * (attempt+1)*backoff between them. FileNotFound (a raced deletion), a
+    * file too large to buffer and deterministic corruption short-circuit —
+    * none gets better by waiting. */
   def faultTolerant[T](attempts: Int = 3, backoffMs: Long = 1000L)(f: Int => T): T = {
     var last: Exception = null
     var i = 0
@@ -66,6 +72,7 @@ object AvroSource {
       try return f(i)
       catch {
         case fnf: java.io.FileNotFoundException => throw fnf
+        case big: FileTooLargeException => throw big
         case e: Exception if isCorruption(e) => throw e
         case e: Exception =>
           last = e
@@ -107,7 +114,7 @@ object AvroSource {
       hp: org.apache.hadoop.fs.Path): Array[Byte] = {
     val len = fs.getFileStatus(hp).getLen
     if (len > Int.MaxValue - 8)
-      throw new java.io.IOException(s"$len bytes do not fit one array: $hp")
+      throw new FileTooLargeException(s"$len bytes do not fit one array: $hp")
     val in = fs.open(hp)
     try {
       val buf = new Array[Byte](len.toInt)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSyst
 import org.apache.hadoop.fs.permission.FsPermission
 
 import java.nio.file.{FileSystems, Files}
-import java.nio.file.attribute.{GroupPrincipal, PosixFilePermission, UserPrincipal}
+import java.nio.file.attribute.{GroupPrincipal, UserPrincipal}
 
 /** The `file://` filesystem of every graft session ([[graft.Sessions.hadoopConf]]):
   * Hadoop's checksummed `LocalFileSystem` over [[NioRawLocalFileSystem]].
@@ -19,42 +19,30 @@ final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem
   * every status whose permission, owner or group is read (`listFiles`
   * reads all three for each listed file). Here both are `java.nio` calls
   * with the same result: Hadoop applies the umask before `setPermission`,
-  * so the 9 mode bits it passes are the bits `chmod` would set, and a
-  * status reads what stock's `ls -ld` of the canonical path shows (a
-  * link's target, sticky bit kept) on first use. Modes outside 0777
-  * (sticky, setuid) and platforms without the `unix` attribute view keep
-  * the stock calls. */
+  * and the `unix:mode` attribute hands every bit of the mode (sticky
+  * included) to chmod(2), as the `chmod` process would; a status reads
+  * what stock's `ls -ld` of the canonical path shows (a link's target,
+  * sticky bit kept) on first use. Platforms without the `unix` attribute
+  * view keep the stock calls. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   import NioRawLocalFileSystem._
 
-  override def setPermission(p: Path, permission: FsPermission): Unit = {
-    val mode = permission.toShort.toInt
-    if (!unixView || (mode & ~0x1ff) != 0) super.setPermission(p, permission)
-    else Files.setPosixFilePermissions(pathToFile(p).toPath, posixBits(mode))
-  }
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (!unixView) super.setPermission(p, permission)
+    else Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort.toInt))
 
   override def getFileStatus(f: Path): FileStatus = lazyPermission(super.getFileStatus(f))
 
   override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(lazyPermission)
 
   private def lazyPermission(st: FileStatus): FileStatus = st match {
-    case s if !unixView || s.isSymlink || s.isInstanceOf[NioFileStatus] => s
+    case s if !unixView || s.isSymlink => s
     case s => new NioFileStatus(s)
   }
 }
 
 private object NioRawLocalFileSystem {
   val unixView: Boolean = FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
-
-  /** `PosixFilePermission.values` runs OWNER_READ .. OTHERS_EXECUTE, the
-    * mode bits 0400 .. 0001 in order. */
-  def posixBits(mode: Int): java.util.Set[PosixFilePermission] = {
-    val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    PosixFilePermission.values.iterator.zipWithIndex.foreach { case (p, i) =>
-      if ((mode & (0x100 >> i)) != 0) set.add(p)
-    }
-    set
-  }
 
   /** A status whose permission, owner and group load on first use, as the
     * stock status does; an empty owner means "not loaded yet". */

@@ -135,6 +135,15 @@ class FaultToleranceSpec extends SparkSpec {
       assert(e.getMessage.contains(words), e.getMessage)
       assert(calls == 3)
     }
+    // a stat past what one array holds is neither: it fails on the first try
+    var calls = 0
+    intercept[AvroSource.FileTooLargeException] {
+      AvroSource.faultTolerant(backoffMs = 1L) { _ =>
+        calls += 1
+        AvroSource.readFullyVerified(misstated(Int.MaxValue.toLong), p)
+      }
+    }
+    assert(calls == 1)
   }
 
   test("quarantine picks the first free .corrupted suffix") {

@@ -68,7 +68,7 @@ class LocalFsSpec extends AnyFunSuite {
       }
     }
 
-  test("setPermission outside 0777 keeps the stock call (sticky bit)") {
+  test("setPermission keeps bits outside 0777 as stock does (sticky bit)") {
     withBoth("022") { (nio, stock) =>
       val tmp = Files.createTempDirectory("graft-localfs-sticky")
       val sticky = new FsPermission(Integer.parseInt("1777", 8).toShort)

@@ -58,9 +58,12 @@ object Sessions {
     * `ls -ld` process per listed file, which was most of a restructure
     * pass's write stage. Hadoop's `FileSystem` cache does not key on the
     * conf, so the first `file://` lookup in a JVM fixes the class: build
-    * the session before any such lookup. */
+    * the session before any such lookup. `FileContext` (streaming
+    * checkpoints) binds `file://` to [[graft.fs.NioLocalFs]], the same
+    * filesystem under Hadoop's other API. */
   val hadoopConf: Seq[(String, String)] = Seq(
-    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName)
 
   /** `build` with the core count pinned by the CALLER instead of the
     * environment — for mains whose OUTPUT is a committed artifact that

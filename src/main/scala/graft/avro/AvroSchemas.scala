@@ -1,10 +1,13 @@
 package graft.avro
 
-import org.apache.avro.{Schema, LogicalTypes}
-import org.apache.avro.generic.{GenericEnumSymbol, GenericFixed, GenericRecord}
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericData, GenericFixed, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.ByteBuffer
 import scala.jdk.CollectionConverters._
@@ -51,94 +54,126 @@ object AvroSchemas {
     case _                 => false
   }
 
-  /** Avro datum -> Spark external row value (for Row-based createDataFrame). */
-  def toSparkValue(datum: Any, schema: Schema): Any = {
-    if (datum == null) return null
-    schema.getType match {
-      case Schema.Type.RECORD =>
-        val rec = datum.asInstanceOf[GenericRecord]
-        Row.fromSeq(schema.getFields.asScala.map { f =>
-          toSparkValue(rec.get(f.pos()), f.schema())
-        }.toSeq)
-      case Schema.Type.MAP =>
-        // ListMap keeps the datum's encounter order: data-dependent CSV
-        // headers (format/RecordConverterFactory.kt:115-127) name map-key
-        // columns in the order the first record yields them, so the Spark
-        // map value must iterate the same way the reference's converter does
-        scala.collection.immutable.ListMap(
-          datum.asInstanceOf[java.util.Map[Any, Any]].asScala.toSeq.map { case (k, v) =>
-            k.toString -> toSparkValue(v, schema.getValueType)
-          }: _*)
-      case Schema.Type.ARRAY =>
-        datum.asInstanceOf[java.util.Collection[Any]].asScala
-          .map(toSparkValue(_, schema.getElementType)).toSeq
-      case Schema.Type.UNION =>
-        val branches = schema.getTypes.asScala.filter(_.getType != Schema.Type.NULL)
-        if (branches.size == 1) toSparkValue(datum, branches.head)
-        else String.valueOf(resolveUnionValue(datum))
-      case Schema.Type.BYTES =>
-        val bb = datum.asInstanceOf[ByteBuffer]
-        val out = new Array[Byte](bb.remaining())
-        bb.duplicate().get(out)
-        out
-      case Schema.Type.FIXED =>
-        datum.asInstanceOf[GenericFixed].bytes().clone()
-      case Schema.Type.ENUM | Schema.Type.STRING => datum.toString
-      case Schema.Type.INT     => datum.asInstanceOf[Number].intValue()
-      case Schema.Type.LONG    => datum.asInstanceOf[Number].longValue()
-      case Schema.Type.FLOAT   => datum.asInstanceOf[Number].floatValue()
-      case Schema.Type.DOUBLE  => datum.asInstanceOf[Number].doubleValue()
-      case Schema.Type.BOOLEAN => datum.asInstanceOf[Boolean]
-      case Schema.Type.NULL    => null
+  /** The one Avro → Catalyst converter: built once per (writer schema,
+    * target struct), it writes Catalyst values — `UTF8String`,
+    * `GenericInternalRow`, `GenericArrayData`, `ArrayBasedMapData` —
+    * straight from a `GenericRecord`, one step per field. Records resolve
+    * BY NAME onto the target: a target field the writer lacks reads as
+    * null and a writer field the target lacks is dropped, so a reader
+    * pinned to one schema consumes files whose writer schema drifted
+    * additively (the stream reader's situation; the batch path groups
+    * files by fingerprint and passes the writer's own struct). A
+    * multi-branch union becomes its datum's string rendering when the
+    * target is a string, and otherwise resolves the datum's branch and
+    * keeps projecting (a union widened after the read schema was pinned).
+    * Incompatible drift (same name, new type) fails loudly on the first
+    * datum that hits it. */
+  def converter(writer: Schema, target: StructType): RecordConverter =
+    new RecordConverter(writer, target)
+
+  final class RecordConverter private[AvroSchemas] (writer: Schema, target: StructType) {
+    require(writer.getType == Schema.Type.RECORD, s"not an Avro record: $writer")
+    private val positions = target.fields.map(f => Option(writer.getField(f.name)).fold(-1)(_.pos))
+    private val fields: Array[Any => Any] = target.fields.zip(positions).map {
+      case (f, p) => if (p < 0) null else value(writer.getFields.get(p).schema(), f.dataType)
+    }
+
+    /** Write `rec`'s target fields into `out` from index `at`. */
+    def write(rec: GenericRecord, out: Array[Any], at: Int): Unit = {
+      var i = 0
+      while (i < positions.length) {
+        val p = positions(i)
+        out(at + i) =
+          if (p < 0) null
+          else {
+            val d = rec.get(p)
+            if (d == null) null else fields(i)(d)
+          }
+        i += 1
+      }
+    }
+
+    def apply(rec: GenericRecord): InternalRow = {
+      val out = new Array[Any](positions.length)
+      write(rec, out, 0)
+      new GenericInternalRow(out)
     }
   }
 
-  /** Avro datum -> Spark value PROJECTED onto a target Spark type: record
-    * fields resolve by NAME — a field missing from the writer schema reads
-    * as null, an extra one is dropped — so a reader pinned to one schema
-    * can consume files whose writer schema drifted additively (the stream
-    * reader's situation; the batch path instead groups files by
-    * fingerprint). Incompatible scalar drift (same name, new type) still
-    * fails loudly at the Catalyst conversion, by design. */
-  def toSparkValueAs(datum: Any, schema: Schema, target: DataType): Any = {
-    if (datum == null) return null
-    (target, schema.getType) match {
-      case (t, Schema.Type.UNION) =>
+  /** Converter of one non-null datum of `schema` to a Catalyst value of
+    * `target`. */
+  private def value(schema: Schema, target: DataType): Any => Any =
+    (schema.getType, target) match {
+      case (Schema.Type.UNION, t) =>
         val branches = schema.getTypes.asScala.filter(_.getType != Schema.Type.NULL)
-        if (branches.size == 1) toSparkValueAs(datum, branches.head, t)
-        else if (t == StringType) toSparkValue(datum, schema)
+        if (branches.size == 1) value(branches.head, t)
+        else if (t == StringType) utf8
         else {
-          // additively WIDENED union (read schema expects one branch, the
-          // writer added more): resolve the datum's actual branch and keep
-          // projecting onto the target instead of string-rendering it
-          val idx = org.apache.avro.generic.GenericData.get().resolveUnion(schema, datum)
-          toSparkValueAs(datum, schema.getTypes.get(idx), t)
+          val byBranch = schema.getTypes.asScala.map(b =>
+            if (b.getType == Schema.Type.NULL) null else value(b, t)).toArray
+          d => byBranch(GenericData.get().resolveUnion(schema, d))(d)
         }
-      case (st: StructType, Schema.Type.RECORD) =>
-        val rec = datum.asInstanceOf[GenericRecord]
-        Row.fromSeq(st.fields.toSeq.map { f =>
-          val af = schema.getField(f.name)
-          if (af == null) null
-          else toSparkValueAs(rec.get(af.pos()), af.schema(), f.dataType)
-        })
-      case (at: ArrayType, Schema.Type.ARRAY) =>
-        datum.asInstanceOf[java.util.Collection[Any]].asScala
-          .map(toSparkValueAs(_, schema.getElementType, at.elementType)).toSeq
-      case (mt: MapType, Schema.Type.MAP) =>
-        scala.collection.immutable.ListMap(
-          datum.asInstanceOf[java.util.Map[Any, Any]].asScala.toSeq.map { case (k, v) =>
-            k.toString -> toSparkValueAs(v, schema.getValueType, mt.valueType)
-          }: _*)
-      case _ => toSparkValue(datum, schema)
+      case (Schema.Type.RECORD, st: StructType) =>
+        val rc = new RecordConverter(schema, st)
+        d => rc(d.asInstanceOf[GenericRecord])
+      case (Schema.Type.MAP, mt: MapType) =>
+        val v = value(schema.getValueType, mt.valueType)
+        d => {
+          // the map's own iteration order is kept: data-dependent CSV
+          // headers (format/RecordConverterFactory.kt:115-127) name
+          // map-key columns in the order the first record yields them
+          val m = d.asInstanceOf[java.util.Map[Any, Any]]
+          val keys = new Array[Any](m.size)
+          val values = new Array[Any](m.size)
+          var i = 0
+          val it = m.entrySet.iterator
+          while (it.hasNext) {
+            val e = it.next()
+            keys(i) = utf8(e.getKey)
+            values(i) = if (e.getValue == null) null else v(e.getValue)
+            i += 1
+          }
+          new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
+        }
+      case (Schema.Type.ARRAY, at: ArrayType) =>
+        val el = value(schema.getElementType, at.elementType)
+        d => {
+          val c = d.asInstanceOf[java.util.Collection[Any]]
+          val out = new Array[Any](c.size)
+          var i = 0
+          val it = c.iterator
+          while (it.hasNext) {
+            val x = it.next()
+            out(i) = if (x == null) null else el(x)
+            i += 1
+          }
+          new GenericArrayData(out)
+        }
+      case (Schema.Type.STRING | Schema.Type.ENUM, StringType) => utf8
+      case (Schema.Type.BYTES, BinaryType) =>
+        d => {
+          val bb = d.asInstanceOf[ByteBuffer]
+          val out = new Array[Byte](bb.remaining())
+          bb.duplicate().get(out)
+          out
+        }
+      case (Schema.Type.FIXED, BinaryType) => d => d.asInstanceOf[GenericFixed].bytes().clone()
+      // the decoder's boxed datum is already the Catalyst value
+      case (Schema.Type.INT, IntegerType) | (Schema.Type.LONG, LongType) |
+           (Schema.Type.FLOAT, FloatType) | (Schema.Type.DOUBLE, DoubleType) |
+           (Schema.Type.BOOLEAN, BooleanType) => identity
+      case (Schema.Type.NULL, _) => _ => null
+      case (t, other) =>
+        _ => throw new IllegalArgumentException(
+          s"cannot read an Avro $t datum as ${other.simpleString} (${schema.getFullName})")
     }
-  }
 
-  /** Render a heterogeneous-union datum: recurse into the obvious scalar
-    * cases; anything structured falls back to toString. */
-  private def resolveUnionValue(datum: Any): Any = datum match {
-    case u: Utf8       => u.toString
-    case e: GenericEnumSymbol[_] => e.toString
-    case other         => other
+  /** A string-like datum as a `UTF8String`: an Avro `Utf8` is wrapped
+    * from its bytes, anything else (enum symbol, `String`, a union branch
+    * rendered as text) goes through `toString`. */
+  private val utf8: Any => Any = {
+    case u: Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+    case other   => UTF8String.fromString(other.toString)
   }
 
   /** 64-bit schema fingerprint for grouping files by schema shape (the

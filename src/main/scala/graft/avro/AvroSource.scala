@@ -3,8 +3,11 @@ package graft.avro
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
 
 import scala.jdk.CollectionConverters._
@@ -190,7 +193,9 @@ object AvroSource {
           throw new java.io.IOException(
             s"stream ended after ${in.count} of $expectedLen bytes", e)
         false // EOF at the file's real end inside a block: truncated
-      case e: org.apache.avro.AvroRuntimeException =>
+      // UnsupportedOperationException: a block or metadata count larger
+      // than any Java array, which Avro refuses before reading further
+      case e @ (_: org.apache.avro.AvroRuntimeException | _: UnsupportedOperationException) =>
         if (shortStream())
           throw new java.io.IOException(
             s"stream ended after ${in.count} of $expectedLen bytes", e)
@@ -290,7 +295,20 @@ object AvroSource {
     * streams. */
   def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
            tolerant: Boolean = false, backoffMs: Long = 1000L): DataFrame =
-    read(spark, paths, avroSchema, tolerant, backoffMs, None)
+    read(spark, paths, avroSchema, tolerant, backoffMs, None, None)
+
+  /** Per-file constants a restructure scan appends to every row of a
+    * file, as `_partition`, `_start_offset` and `_mtime` (epoch millis,
+    * emitted as a timestamp): the task that owns the file emits them, so
+    * no join attaches them. */
+  private[graft] final case class FileConstants(partition: Int, startOffset: Long, mtimeMs: Long)
+
+  /** The columns [[FileConstants]] become, after the payload. `_mtime` is
+    * nullable as the `java.sql.Timestamp` it stands for. */
+  private val ConstantFields: Seq[StructField] = Seq(
+    StructField("_partition", IntegerType, nullable = false),
+    StructField("_start_offset", LongType, nullable = false),
+    StructField("_mtime", TimestampType, nullable = true))
 
   /** [[read]] that also reports `(path, rows emitted)` into `rowsEmitted`
     * once per file a task reads to the end: the buffered row count on the
@@ -298,35 +316,52 @@ object AvroSource {
     * from the task-completion close, which also runs after an early stop).
     * Quarantined, vanished and zero-length files report nothing. Rows carry
     * `_row_index` 0..n-1, so a reported n is exactly the rows the file
-    * contributed to the job that read it. */
+    * contributed to the job that read it. With `constants` (one entry per
+    * path) every row also carries its file's [[ConstantFields]].
+    *
+    * Records decode straight to Catalyst rows through
+    * [[AvroSchemas.converter]] and the frame is built over them as is,
+    * so each field is converted once. */
   private[graft] def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
       tolerant: Boolean, backoffMs: Long,
-      rowsEmitted: Option[CollectionAccumulator[(String, Long)]]): DataFrame = {
+      rowsEmitted: Option[CollectionAccumulator[(String, Long)]],
+      constants: Option[Map[String, FileConstants]]): DataFrame = {
     val sparkType = AvroSchemas.toSparkType(avroSchema).asInstanceOf[StructType]
     val fullSchema = StructType(
       StructField("_file", StringType, nullable = false) +:
         StructField("_row_index", LongType, nullable = false) +:
-        sparkType.fields)
+        (sparkType.fields.toSeq ++ constants.fold(Seq.empty[StructField])(_ => ConstantFields)))
+    val width = fullSchema.size
     val schemaJson = avroSchema.toString
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     // one task per file: the file is the reference's unit of offset
-    // accounting AND bounded in size by the upstream sink's flush policy
+    // accounting AND bounded in size by the upstream sink's flush policy;
+    // each task ships only its own file's constants
+    val files = paths.map(p => (p, constants.map(_(p))))
     val rdd = spark.sparkContext
-      .parallelize(paths, math.max(paths.size, 1))
-      .flatMap { path =>
+      .parallelize(files, math.max(paths.size, 1))
+      .flatMap { case (path, consts) =>
         val schema = new Schema.Parser().parse(schemaJson)
+        val convert = AvroSchemas.converter(schema, sparkType)
         val hp = new org.apache.hadoop.fs.Path(path)
         val fs = hp.getFileSystem(serConf.value)
         def report(n: Long): Unit = rowsEmitted.foreach(_.add((path, n)))
-        def rows(stream: DataFileStream[GenericRecord]): Iterator[Row] = {
+        val file = UTF8String.fromString(path)
+        def rows(stream: DataFileStream[GenericRecord]): Iterator[InternalRow] = {
           var i = -1L
           stream.iterator.asScala.map { rec =>
             i += 1
-            Row.fromSeq(
-              path +: i +: sparkType.fields.indices.map { f =>
-                AvroSchemas.toSparkValue(rec.get(f), avroFieldSchema(schema, f))
-              })
+            val out = new Array[Any](width)
+            out(0) = file
+            out(1) = i
+            convert.write(rec, out, 2)
+            consts.foreach { c =>
+              out(width - 3) = c.partition
+              out(width - 2) = c.startOffset
+              out(width - 1) = c.mtimeMs * 1000L
+            }
+            new GenericInternalRow(out): InternalRow
           }
         }
         // zero-length guard (P8); in tolerant mode a vanished file (races
@@ -396,16 +431,13 @@ object AvroSource {
           }
         }
       }
-    spark.createDataFrame(rdd, fullSchema)
+    GraftBridge.createDataFrame(spark, rdd, fullSchema)
   }
-
-  private def avroFieldSchema(schema: Schema, pos: Int): Schema =
-    schema.getFields.get(pos).schema()
 
   /** Iterator that closes its resource when exhausted, then hands the
     * number of rows it emitted to `onEnd`. */
-  private final class AutoCloseIterator(it: Iterator[Row], close: () => Unit,
-      onEnd: Long => Unit) extends Iterator[Row] {
+  private final class AutoCloseIterator(it: Iterator[InternalRow], close: () => Unit,
+      onEnd: Long => Unit) extends Iterator[InternalRow] {
     private var closed = false
     private var emitted = 0L
     override def hasNext: Boolean = {
@@ -413,6 +445,6 @@ object AvroSource {
       if (!h && !closed) { closed = true; close(); onEnd(emitted) }
       h
     }
-    override def next(): Row = { val r = it.next(); emitted += 1; r }
+    override def next(): InternalRow = { val r = it.next(); emitted += 1; r }
   }
 }

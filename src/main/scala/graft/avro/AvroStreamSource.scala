@@ -4,8 +4,8 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import java.util
@@ -246,7 +247,7 @@ case class AvroFileReaderFactory(schema: StructType, conf: SerializableConfigura
 
 /** Streams one container file; payload columns resolve against the file's
   * OWN writer schema BY NAME, projected onto the stream's read schema
-  * ([[AvroSchemas.toSparkValueAs]]) — a topic whose writer schema drifted
+  * ([[AvroSchemas.converter]]) — a topic whose writer schema drifted
   * additively mid-stream reads cleanly (new fields dropped, absent fields
   * null), instead of misaligning positional lookups. */
 final class AvroFilePartitionReader(
@@ -258,11 +259,8 @@ final class AvroFilePartitionReader(
   private val hp = new Path(path)
   private val in = hp.getFileSystem(conf.value).open(hp)
   private val stream = new DataFileStream(in, new GenericDatumReader[GenericRecord]())
-  private val avroSchema = stream.getSchema
-  private val payloadFields = schema.fields.drop(2)
-  // per-field resolution against THIS file's writer schema, by name
-  private val resolved = payloadFields.map(f => (f, Option(avroSchema.getField(f.name))))
-  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+  private val convert = AvroSchemas.converter(stream.getSchema, StructType(schema.fields.drop(2)))
+  private val file = UTF8String.fromString(path)
   private var i = -1L
   private var current: InternalRow = _
 
@@ -270,12 +268,11 @@ final class AvroFilePartitionReader(
     if (stream.hasNext) {
       val rec = stream.next()
       i += 1
-      val values = path +: i +: resolved.map {
-        case (f, Some(af)) => AvroSchemas.toSparkValueAs(rec.get(af.pos()), af.schema(), f.dataType)
-        case (_, None)     => null
-      }.toSeq
-      current = toCatalyst(org.apache.spark.sql.Row.fromSeq(values))
-        .asInstanceOf[InternalRow]
+      val out = new Array[Any](schema.size)
+      out(0) = file
+      out(1) = i
+      convert.write(rec, out, 2)
+      current = new GenericInternalRow(out)
       true
     } else false
 

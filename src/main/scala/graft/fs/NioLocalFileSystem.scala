@@ -1,6 +1,9 @@
 package graft.fs
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 import java.nio.file.{FileSystems, Files}
@@ -11,6 +14,27 @@ import java.nio.file.attribute.{GroupPrincipal, UserPrincipal}
   * `.crc` sidecars are still written and verified, and callers that match
   * on `LocalFileSystem` (or cast `FileSystem.getLocal`) still see one. */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** The `FileContext` binding of `file://` in every graft session
+  * (`fs.AbstractFileSystem.file.impl`), as Hadoop's `LocalFs` is: a
+  * checksummed `ChecksumFs` over [[NioRawLocalFs]]. Spark's streaming
+  * checkpoints write through `FileContext`, so with this binding they too
+  * set modes in-process instead of starting a `chmod` per file. Hadoop
+  * instantiates it through this `(URI, Configuration)` constructor; like
+  * `LocalFs` it always serves `file:///`. */
+final class NioLocalFs(uri: java.net.URI, conf: Configuration)
+    extends ChecksumFs(new NioRawLocalFs(FsConstants.LOCAL_FS_URI, conf))
+
+/** Hadoop's `RawLocalFs` over [[NioRawLocalFileSystem]]. */
+final class NioRawLocalFs(uri: java.net.URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new NioRawLocalFileSystem, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1 // no default port for file:///
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+  @deprecated("as the overridden method", "Hadoop 2.7")
+  override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+  override def isValidName(src: String): Boolean = true
+}
 
 /** `RawLocalFileSystem` whose permission calls run in-process. Without the
   * `libhadoop` native library, stock Hadoop starts a `chmod` process on

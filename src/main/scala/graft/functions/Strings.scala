@@ -1,19 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.catalyst.SanitizeId
+
 /** Scalar string/byte helpers mirroring the reference's derived-column
-  * surface (SURVEY §2.3), expressed with codegen'd built-ins only.
+  * surface (SURVEY §2.3), expressed with codegen'd expressions only.
   */
 object Strings {
 
   /** ID sanitization (reference: path/RecordPathFactory.kt:120,126-129):
-    * strip everything but `[a-zA-Z0-9_-]`, and substitute `default` when the
-    * input is null or sanitizes to empty. */
+    * strip everything but `[a-zA-Z0-9_-]` (the [[SanitizeId]] byte loop),
+    * and substitute `default` when the input is null or sanitizes to
+    * empty. */
   def sanitizeId(c: Column, default: String): Column = {
-    val cleaned = regexp_replace(coalesce(c, lit("")), "[^a-zA-Z0-9_-]+", "")
+    val cleaned = GraftBridge.column(
+      SanitizeId(GraftBridge.expression(coalesce(c.cast(StringType), lit("")))))
     when(cleaned === "", lit(default)).otherwise(cleaned)
   }
 

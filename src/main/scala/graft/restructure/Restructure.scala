@@ -224,19 +224,15 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * scan reports — what [[run]] builds the offset ledger from. */
   private[graft] def readBatches(topic: String, files: Seq[TopicFile]): Seq[TopicBatch] = {
     val byPath = files.map(f => f.path -> f).toMap
+    val constants = files.map(f =>
+      f.path -> AvroSource.FileConstants(f.partition, f.startOffset, f.lastModified)).toMap
     AvroSource.schemaGroups(spark, files.map(_.path),
       tolerant = config.faultTolerance, backoffMs = config.retryBackoffMs).map { case (schema, paths) =>
       val rowsRead = spark.sparkContext.collectionAccumulator[(String, Long)]
+      // each file's task emits `_partition _start_offset _mtime` itself
       val df = AvroSource.read(spark, paths, schema,
-        config.faultTolerance, config.retryBackoffMs, Some(rowsRead))
-      val meta = spark.createDataFrame(
-        paths.map { p =>
-          val f = byPath(p)
-          (p, f.partition, f.startOffset, new java.sql.Timestamp(f.lastModified))
-        })
-        .toDF("_file", "_partition", "_start_offset", "_mtime")
-      val withMeta = df.join(broadcast(meta), "_file")
-      val derived = derive(topic, withMeta,
+        config.faultTolerance, config.retryBackoffMs, Some(rowsRead), Some(constants))
+      val derived = derive(topic, df,
         "_offset" -> (col("_start_offset") + col("_row_index")))
         .drop("_start_offset")
       TopicBatch(topic, derived, paths.map(byPath), rowsRead)

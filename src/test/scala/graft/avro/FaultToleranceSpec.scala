@@ -110,6 +110,25 @@ class FaultToleranceSpec extends SparkSpec {
       () => new java.io.FileInputStream(f), expectedLen = full))
   }
 
+  test("a header whose metadata count no array can hold is corruption: validator false, header scan quarantines") {
+    val dir = Files.createTempDirectory("graft-validate-count").toFile
+    val good = new File(dir, "good.avro")
+    RestructureFixture.writeAvro(good, Seq(RestructureFixture.record(1.0, "S")))
+    val bytes = Files.readAllBytes(good.toPath)
+    // the metadata map's block count (byte 4, after the magic) replaced by
+    // 2^40, zigzag varint-encoded: Avro refuses it before reading an entry
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
+    enc.writeLong(1L << 40); enc.flush()
+    val damaged = bytes.take(4) ++ out.toByteArray ++ bytes.drop(5)
+    assert(!AvroSource.validateContainer(
+      () => new java.io.ByteArrayInputStream(damaged), damaged.length.toLong))
+    val f = new File(dir, "t+0+0000000000.avro")
+    Files.write(f.toPath, damaged)
+    assert(AvroSource.schemaGroups(spark, Seq(f.toString), tolerant = true, backoffMs = 1L).isEmpty)
+    assert(!f.exists() && new File(dir, "t+0+0000000000.avro.corrupted").exists())
+  }
+
   test("readFullyVerified: exact length round-trips; a short or long stream is a retried IOException") {
     val dir = Files.createTempDirectory("graft-readfully").toFile
     val f = new File(dir, "t+0+0000000000+0000000099.avro")

@@ -2,7 +2,8 @@ package graft.fs
 
 import graft.{Sessions, SparkSpec}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileStatus, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumException, CreateFlag, FileContext, FileStatus,
+  FileSystem, LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -140,6 +141,41 @@ class LocalFsSpec extends AnyFunSuite {
     }
   }
 
+  /** A FileContext on `file://` bound to `impl`, under `umask`. */
+  private def fileContext(impl: Option[Class[_]], umask: String): FileContext = {
+    val conf = new Configuration(base)
+    impl.foreach(c => conf.set("fs.AbstractFileSystem.file.impl", c.getName))
+    conf.set("fs.permissions.umask-mode", umask)
+    FileContext.getFileContext(new URI("file:///"), conf)
+  }
+
+  /** The tree of [[writeTree]], through `FileContext` as a streaming
+    * checkpoint writes it. */
+  private def writeTree(fc: FileContext, root: java.nio.file.Path): Unit = {
+    val bin = new Path(root.toUri.toString, "offsets/sub")
+    fc.mkdir(bin, FsPermission.getDirDefault, true)
+    val out = fc.create(new Path(bin, "0"), java.util.EnumSet.of(CreateFlag.CREATE),
+      Options.CreateOpts.createParent())
+    try out.write("v1\n{}\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  for ((umask, dirMode, fileMode) <- Seq(
+      ("022", "rwxr-xr-x", "rw-r--r--"), ("077", "rwx------", "rw-------")))
+    test(s"FileContext create and mkdir give the stock modes and a .crc under umask $umask") {
+      val nio = fileContext(Some(classOf[NioLocalFs]), umask)
+      val stock = fileContext(None, umask)
+      assert(nio.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+      assert(stock.getDefaultFileSystem.getClass.getName == "org.apache.hadoop.fs.local.LocalFs")
+      val tmp = Files.createTempDirectory("graft-localfs-fc")
+      writeTree(nio, tmp.resolve("nio"))
+      writeTree(stock, tmp.resolve("stock"))
+      val got = modes(tmp.resolve("nio"))
+      assert(got == modes(tmp.resolve("stock")))
+      assert(got.count(_.endsWith(dirMode)) == 3)
+      assert(got.count(_.endsWith(fileMode)) == 2)
+      assert(got.exists(_.contains("/offsets/sub/.0.crc ")))
+    }
+
   test("graft sessions run file:// on the graft filesystem") {
     assert(Sessions.hadoopConf.contains(
       "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName))
@@ -147,5 +183,10 @@ class LocalFsSpec extends AnyFunSuite {
     assert(conf.get("fs.file.impl") == classOf[NioLocalFileSystem].getName)
     // the cached instance every spec's file:// lookup resolves to
     assert(new Path("file:///").getFileSystem(conf).isInstanceOf[NioLocalFileSystem])
+    // and the FileContext binding
+    assert(Sessions.hadoopConf.contains(
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName))
+    assert(AbstractFileSystem.get(new URI("file:///"), conf).isInstanceOf[NioLocalFs])
+    assert(FileContext.getFileContext(new URI("file:///"), conf).getDefaultFileSystem.isInstanceOf[NioLocalFs])
   }
 }

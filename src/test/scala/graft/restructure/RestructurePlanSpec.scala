@@ -5,19 +5,23 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.ListenerBuses
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, WriteFilesExec}
-import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.io.File
 import scala.collection.mutable
 
 /** The write job's executed plan: a restructure batch is partitioned by
-  * output file `(_project, _user, _bin)` once, and the dedup window's
-  * sort is the only sort the write needs. */
+  * output file `(_project, _user, _bin)` once, the dedup window's sort is
+  * the only sort the write needs, and the scan carries each file's
+  * constants itself (no broadcast join). */
 class RestructurePlanSpec extends SparkSpec {
 
   /** Every node of `plan`, through AQE's final plan and its query stages. */
@@ -62,6 +66,36 @@ class RestructurePlanSpec extends SparkSpec {
     assert(exchanges(plan).forall(e =>
       e.shuffleOrigin != REBALANCE_PARTITIONS_BY_COL && e.shuffleOrigin != REBALANCE_PARTITIONS_BY_NONE))
     assert(nodes(plan).count(_.isInstanceOf[SortExec]) == 1, plan.treeString)
+    // per-file constants come from the scan, ids from the byte-loop kernel
+    val all = nodes(plan)
+    assert(!all.exists(n => n.isInstanceOf[BroadcastHashJoinExec] || n.isInstanceOf[BroadcastExchangeExec]),
+      plan.treeString)
+    assert(!all.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[RegExpReplace])), plan.treeString)
+    assert(all.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[graft.catalyst.SanitizeId])))
+  }
+
+  /** Spark jobs of the job group `body` runs in. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      ListenerBuses.drain(sc)
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a one-batch run() starts two jobs: the write's shuffle stage and the write") {
+    val (_, cfg) = RestructureFixture.setup()
+    assert(jobs(assert(new Restructure(spark, cfg).run().files == 2)) == 2)
   }
 
   test("a key without projectId shuffles once: the constant _project stays out of the hash") {

@@ -333,8 +333,10 @@ object AvroSource {
         (sparkType.fields.toSeq ++ constants.fold(Seq.empty[StructField])(_ => ConstantFields)))
     val width = fullSchema.size
     val schemaJson = avroSchema.toString
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    // broadcast, as Spark's own file scans do: an executor fetches and
+    // deserializes the conf once, and each task's closure carries a handle
+    val conf = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     // one task per file: the file is the reference's unit of offset
     // accounting AND bounded in size by the upstream sink's flush policy;
     // each task ships only its own file's constants
@@ -345,7 +347,7 @@ object AvroSource {
         val schema = new Schema.Parser().parse(schemaJson)
         val convert = AvroSchemas.converter(schema, sparkType)
         val hp = new org.apache.hadoop.fs.Path(path)
-        val fs = hp.getFileSystem(serConf.value)
+        val fs = hp.getFileSystem(conf.value.value)
         def report(n: Long): Unit = rowsEmitted.foreach(_.add((path, n)))
         val file = UTF8String.fromString(path)
         def rows(stream: DataFileStream[GenericRecord]): Iterator[InternalRow] = {

@@ -3,7 +3,9 @@ package graft.avro
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -226,10 +228,12 @@ final class AvroMicroBatchStream(
       .toArray
   }
 
+  // broadcast, as Spark's own file scans do: each task of the batch
+  // deserializes a handle, not the whole conf
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    AvroFileReaderFactory(schema, conf)
+    val spark = SparkSession.active
+    AvroFileReaderFactory(schema,
+      spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
   }
 
   override def commit(end: Offset): Unit = ()
@@ -238,11 +242,11 @@ final class AvroMicroBatchStream(
 
 case class AvroFilePartition(path: String) extends InputPartition
 
-case class AvroFileReaderFactory(schema: StructType, conf: SerializableConfiguration)
+case class AvroFileReaderFactory(schema: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new AvroFilePartitionReader(
-      partition.asInstanceOf[AvroFilePartition].path, schema, conf)
+      partition.asInstanceOf[AvroFilePartition].path, schema, conf.value.value)
 }
 
 /** Streams one container file; payload columns resolve against the file's
@@ -253,11 +257,11 @@ case class AvroFileReaderFactory(schema: StructType, conf: SerializableConfigura
 final class AvroFilePartitionReader(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration)
+    conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val hp = new Path(path)
-  private val in = hp.getFileSystem(conf.value).open(hp)
+  private val in = hp.getFileSystem(conf).open(hp)
   private val stream = new DataFileStream(in, new GenericDatumReader[GenericRecord]())
   private val convert = AvroSchemas.converter(stream.getSchema, StructType(schema.fields.drop(2)))
   private val file = UTF8String.fromString(path)

@@ -95,22 +95,24 @@ object LayoutExport {
     final case class Bin(project: String, user: String, bin: String, parts: Seq[String])
     val bins = scala.collection.mutable.ArrayBuffer.empty[Bin]
     val it = fs.listFiles(topicDir, true)
+    val binPath = ".*/_project=([^/]+)/_user=([^/]+)/_bin=([^/]+)/[^/]+$".r
     val grouped = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), scala.collection.mutable.ArrayBuffer[String]]
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       if (st.isFile && name.startsWith("part-")) {
         val rel = st.getPath.toString
-        val re = ".*/_project=([^/]+)/_user=([^/]+)/_bin=([^/]+)/[^/]+$".r
         rel match {
-          case re(p, u, b) => grouped.getOrElseUpdate((p, u, b), scala.collection.mutable.ArrayBuffer.empty) += rel
-          case _           =>
+          case binPath(p, u, b) => grouped.getOrElseUpdate((p, u, b), scala.collection.mutable.ArrayBuffer.empty) += rel
+          case _                =>
         }
       }
     }
     grouped.foreach { case ((p, u, b), parts) => bins += Bin(p, u, b, parts.sorted.toSeq) }
 
-    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    // one task per bin: broadcast, so each executor deserializes the conf once
+    val serConf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val ext = outComp match {
       case "gzip" => ".csv.gz"
       case "zip"  => ".csv.zip"
@@ -119,7 +121,7 @@ object LayoutExport {
     spark.sparkContext
       .parallelize(bins.toSeq.map(b => (b.project, b.user, b.bin, b.parts)), math.max(bins.size, 1))
       .map { case (project, user, bin, parts) =>
-        val conf = serConf.value
+        val conf = serConf.value.value
         def open(p: String): BufferedReader = {
           val f = new Path(p)
           val raw = f.getFileSystem(conf).open(f)

@@ -334,14 +334,21 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * so a batch shuffles once. A constant column (a key schema without
     * `projectId` makes `_project` a literal) is left out of the hash: the
     * optimizer drops it from the window's keys, and a hash that kept it
-    * would satisfy neither the window nor the write. */
+    * would satisfy neither the window nor the write.
+    *
+    * The partition count is explicit, the session's
+    * `spark.sql.shuffle.partitions` (one per core, [[graft.Sessions.planConf]]):
+    * AQE coalesces a repartition by columns alone to its 1 MB minimum
+    * partition size, so a batch of a few MB would write on fewer tasks than
+    * cores; a repartition by number it leaves as it is. Both applications
+    * carry the same count, so the second is still redundant. */
   private def byOutputFile(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.analyzed
     val constant = plan.flatMap(_.expressions).collect {
       case a: Alias if a.child.foldable => a.exprId
     }.toSet
     val hashed = outputFileCols.filterNot(c => plan.output.exists(a => a.name == c && constant(a.exprId)))
-    df.repartition(hashed.map(col): _*)
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, hashed.map(col): _*)
   }
 
   private val metaCols = Seq(

@@ -5,8 +5,10 @@ import graft.operators.Flatten
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
+import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -141,6 +143,23 @@ class AvroSourceSpec extends SparkSpec {
     val p3 = write("t+0+0000000002.avro", s1, _.put("x", 3))
     val groups = AvroSource.schemaGroups(spark, Seq(p1, p2, p3))
     assert(groups.map(_._2.size) == Seq(2, 1)) // s1 files grouped, s2 alone
+  }
+
+  test("the scan's task closure carries a handle to the Hadoop conf, not the conf") {
+    val file = fixture()
+    val groups = AvroSource.schemaGroups(spark, Seq(file.toString))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "graft.test.closure-ballast"
+    val ballast = 256 * 1024
+    conf.set(key, "x" * ballast)
+    try {
+      val df = AvroSource.read(spark, Seq(file.toString), groups.head._1)
+      val rdds = df.queryExecution.sparkPlan.collect { case s: RDDScanExec => s.rdd }
+      assert(rdds.size == 1)
+      val size = SparkEnv.get.closureSerializer.newInstance().serialize(rdds.head).limit()
+      assert(size < ballast / 16, s"the scan RDD serializes to $size bytes")
+      assert(df.count() == 1)
+    } finally conf.unset(key)
   }
 
   test("the converter keeps projecting through an additively widened union") {

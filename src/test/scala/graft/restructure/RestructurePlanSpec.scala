@@ -5,7 +5,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.ListenerBuses
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -74,28 +74,44 @@ class RestructurePlanSpec extends SparkSpec {
     assert(all.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[graft.catalyst.SanitizeId])))
   }
 
-  /** Spark jobs of the job group `body` runs in. */
-  private def jobs(body: => Unit): Int = {
+  /** Spark jobs started, and the task count of each stage submitted (in
+    * submission order), in the job group `body` runs in. */
+  private def scheduled(body: => Unit): (Int, Seq[Int]) = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
+    def ours(p: java.util.Properties) = Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
     val started = new java.util.concurrent.atomic.AtomicInteger
+    val stageTasks = mutable.ArrayBuffer.empty[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
+        if (ours(e.properties)) started.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stageTasks.synchronized { stageTasks += e.stageInfo.numTasks }
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "jobs", interruptOnCancel = false)
       try body finally sc.clearJobGroup()
       ListenerBuses.drain(sc)
-      started.get
+      (started.get, stageTasks.synchronized(stageTasks.toSeq))
     } finally sc.removeSparkListener(listener)
   }
 
   test("a one-batch run() starts two jobs: the write's shuffle stage and the write") {
     val (_, cfg) = RestructureFixture.setup()
-    assert(jobs(assert(new Restructure(spark, cfg).run().files == 2)) == 2)
+    assert(scheduled(assert(new Restructure(spark, cfg).run().files == 2))._1 == 2)
+  }
+
+  test("the write stage runs one task per shuffle partition, however small the batch") {
+    // a few KB, far below AQE's minimum partition size: a coalesced
+    // exchange would leave the write on fewer tasks than cores
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    for (dedup <- Seq(true, false)) {
+      val (_, base) = RestructureFixture.setup()
+      val cfg = if (dedup) base else base.copy(dedupDefault = DedupConfig())
+      val (_, stageTasks) = scheduled(assert(new Restructure(spark, cfg).run().files == 2))
+      assert(stageTasks.lastOption.contains(partitions), s"dedup $dedup: $stageTasks")
+    }
   }
 
   test("a key without projectId shuffles once: the constant _project stays out of the hash") {

@@ -187,9 +187,12 @@ case class PslLabels(child: Expression) extends TextHashUnary {
   * Containment, Incremental, Winnow, SpanDedup, ChunkDedup, Similarity,
   * BQ, PQ and the PSL lookups all need a session built with this
   * extension. In any other session they fail at analysis with an
-  * unresolved-function error. */
+  * unresolved-function error. The extension also plans [[KeepFirst]],
+  * the node under `Dedup.keepLast` and `Dedup.keepFirstDistinct`; without
+  * it those fail at planning. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => KeepFirstStrategy)
     def register(name: String, build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),

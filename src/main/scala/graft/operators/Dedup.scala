@@ -1,45 +1,63 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Descending, SortDirection, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
+import graft.catalyst.KeepFirst
+
 /** Deduplication operators (SURVEY §2.5).
   *
-  * The reference dedups the lines of one output file when it closes. Each
-  * operator here is a distributed window over an arbitrary DataFrame; a
-  * caller scopes it by putting the scope's columns first in the key, as
+  * The reference dedups the lines of one output file when it closes. The
+  * keep-last and keep-first operators here run over an arbitrary
+  * DataFrame as one [[graft.catalyst.KeepFirst]]: a hash exchange on the
+  * key (none when the input is already clustered on a subset of it), a
+  * sort of every partition by key then order, and one streaming pass that
+  * keeps the first row of each key. A caller scopes them by putting the
+  * scope's columns first in the key, as
   * [[graft.restructure.Restructure.dedup]] does with the output file
-  * `(_project, _user, _bin)`. The window formulations are single-shuffle
-  * (hash exchange on the key, no sort of the full data), so they scale
-  * with the number of distinct keys rather than file sizes.
+  * `(_project, _user, _bin)`. They need a session with
+  * [[graft.catalyst.GraftExtensions]], which plans the node.
   */
 object Dedup {
 
-  /** D1 — keep-LAST occurrence per key, output in original order
+  /** D1 — keep-LAST occurrence per key
     * (reference: format/CsvAvroConverterFactory.kt:22-56). `orderCol` stands
     * in for the original line number: the row with the greatest `orderCol`
-    * per key survives.
+    * per key survives. Rows do not come out in `orderCol` order.
     *
-    * Note `dropDuplicates` keeps an arbitrary FIRST row and does not
-    * preserve order, so it is not semantics-equivalent.
+    * Note `dropDuplicates` keeps an arbitrary FIRST row, so it is not
+    * semantics-equivalent.
     *
-    * A key whose type contains a map (an Avro map field, or a payload
-    * struct holding one) is partitioned on its [[orderable]] form: the
-    * window sorts on its partition keys and Spark cannot order maps.
-    * Map-free keys pass through unchanged.
+    * Keys compare as grouping compares them: a float NaN equals NaN,
+    * -0.0 equals 0.0, and null equals null. A key whose type contains a map
+    * (an Avro map field, or a payload struct holding one) compares on its
+    * [[orderable]] form, since Spark can neither sort nor hash maps, so two
+    * maps holding the same entries are equal. Map-free keys pass through
+    * unchanged.
     */
-  def keepLast(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(orderableKeys(df, keys): _*).orderBy(col(orderCol).desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+  def keepLast(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame =
+    keepFirst(df, keys, orderCol, Descending)
+
+  /** The first row per `keys` by `orderCol` in `direction` (nulls last
+    * when descending, first when ascending), as one [[KeepFirst]] node. */
+  private def keepFirst(df: DataFrame, keys: Seq[String], orderCol: String,
+      direction: SortDirection): DataFrame = {
+    val child = df.queryExecution.analyzed
+    val resolved = df.select(orderableKeys(df, keys) :+ col(orderCol): _*).queryExecution.analyzed match {
+      case Project(list, _) => list.map { case a: Alias => a.child; case e => e }
+      case other => throw new IllegalStateException(s"unexpected key projection: $other")
+    }
+    val order = SortOrder(resolved.last, direction)
+    GraftBridge.ofRows(df.sparkSession,
+      KeepFirst(resolved.init.map(GraftBridge.normalizeFloats), Seq(order), child))
   }
 
-  /** The window partition columns for `keys`: each in its [[orderable]]
-    * form, so a map-free key is the bare column. */
-  private def orderableKeys(df: DataFrame, keys: Seq[String]): Seq[Column] = {
+  /** The key columns for `keys`: each in its [[orderable]] form, so a
+    * map-free key is the bare column. */
+  private[graft] def orderableKeys(df: DataFrame, keys: Seq[String]): Seq[Column] = {
     val types = df.select(keys.map(col): _*).schema.map(_.dataType)
     keys.zip(types).map { case (k, t) => orderable(col(k), t) }
   }
@@ -94,18 +112,12 @@ object Dedup {
   def keepLastIgnoring(df: DataFrame, ignore: Seq[String], orderCol: String): DataFrame =
     keepLast(df, keysIgnoring(df, ignore, orderCol), orderCol)
 
-  /** D2 — keep-FIRST whole-row distinct, preserving first-occurrence order
+  /** D2 — keep-FIRST whole-row distinct
     * (reference: format/RecordConverterFactory.kt:62-84; JSON format).
     * Key = all columns except `orderCol`; the row with the least `orderCol`
-    * per distinct content survives. Map-bearing keys partition on their
-    * [[orderable]] form, as in [[keepLast]]. */
-  def keepFirstDistinct(df: DataFrame, orderCol: String): DataFrame = {
-    val keys = df.columns.filterNot(_ == orderCol).toSeq
-    val w = Window.partitionBy(orderableKeys(df, keys): _*).orderBy(col(orderCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+    * per distinct content survives. Keys compare as in [[keepLast]]. */
+  def keepFirstDistinct(df: DataFrame, orderCol: String): DataFrame =
+    keepFirst(df, df.columns.filterNot(_ == orderCol).toSeq, orderCol, Ascending)
 
   /** Exact whole-row dedup at scale: groupBy the content hash first so the
     * shuffle carries (hash, min-order) pairs instead of full rows when the
@@ -117,16 +129,17 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
   /** Skew-tolerant keep-last: same result as [[keepLast]] via a two-phase
-    * max_by aggregation instead of a window. Phase 1 reduces per
+    * max_by aggregation instead of a sort. Phase 1 reduces per
     * (key, salt) with map-side partial aggregation, phase 2 reduces the
     * per-salt winners — a hot key's rows spread over `saltBuckets`
     * reducers instead of landing on one. Column order of the output matches
     * the input; `orderCol` must be unique per key (it is a row index).
     *
     * Use when a dedup key is pathologically hot (boilerplate documents,
-    * null-ish keys). The window formulation is one shuffle + sort; this is
-    * two light shuffles with partial aggregation and no sort. On the
-    * restructure pass it lost to [[keepLast]] in both measured regimes
+    * null-ish keys). [[keepLast]] is one shuffle and a sort of every
+    * partition; this is two light shuffles with partial aggregation and no
+    * sort. On the restructure pass it lost to [[keepLast]] (then a window
+    * over the same shuffle and sort) in both measured regimes
     * (all-unique and 75% duplicate keys, BENCHSCALE.md), so that pass
     * uses [[keepLast]].
     */

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * output=s3a://bucket/out
   * state=s3a://bucket/state/offsets.json
   * format=csv
-  * compression=gzip            # gzip | none | <codec class>
+  * compression=gzip            # gzip | zip | none | <codec class>
   * timeBinFormat=yyyyMMdd_HH'00'
   * excludeTopics=t1,t2
   * maxFilesPerTopic=100

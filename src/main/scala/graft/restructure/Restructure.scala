@@ -306,8 +306,12 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * in every field write identical lines, so keeping the last is keeping
     * the first.
     *
-    * The frame is partitioned by output file ([[byOutputFile]]) before the
-    * window, so that one exchange serves both the window and [[write]]. */
+    * The frame is partitioned by output file ([[byOutputFile]]) before
+    * [[Dedup.keepLast]], so that one exchange serves both the dedup and
+    * [[write]]. Each write task sorts its rows once, by the key then
+    * newest first, and keeps the first row of each key in one pass over
+    * the sorted rows ([[graft.catalyst.KeepFirst]]); that sort, led by
+    * `(_project, _user, _bin)`, is also the order the writer needs. */
   def dedup(topic: String, df: DataFrame): DataFrame = {
     val cfg = config.dedup.getOrElse(topic, config.dedupDefault)
     if (!cfg.enable) return df
@@ -333,8 +337,8 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * dedup already did, Spark drops the write's repartition as redundant,
     * so a batch shuffles once. A constant column (a key schema without
     * `projectId` makes `_project` a literal) is left out of the hash: the
-    * optimizer drops it from the window's keys, and a hash that kept it
-    * would satisfy neither the window nor the write.
+    * optimizer folds it into a literal there, and a hash on a literal
+    * satisfies neither the dedup nor the write.
     *
     * The partition count is explicit, the session's
     * `spark.sql.shuffle.partitions` (one per core, [[graft.Sessions.planConf]]):
@@ -357,6 +361,11 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
 
   /** S7/S9 — write one topic batch: flatten the payload, partition by
     * (project, user, bin), CSV-with-header or JSON lines, optional gzip.
+    * CSV and JSON go through [[LineFileFormat]], which encodes each row
+    * straight to the bytes Spark's CSV/JSON writers would produce; a gzip
+    * or zip part (`compression: zip` is [[graft.compression.ZipCodec]])
+    * checks its own content and gets no `.crc` sidecar. Parquet stays on
+    * Spark's writer.
     *
     * The rows are first partitioned by output file ([[byOutputFile]]), so
     * each `(project, user, bin)` dir is written by one task holding one
@@ -366,8 +375,8 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * tasks: the per-file [[dedup]] needs all of a file's rows in one
     * place, and the reference too writes each file from one writer.
     * `maxRecordsPerFile` still caps the size of each part file. After a
-    * dedup the rows already arrive partitioned this way, and the write
-    * adds no exchange and no sort of its own.
+    * dedup the rows already arrive partitioned and sorted this way, and the
+    * write adds no exchange and no sort of its own: one open file per bin.
     */
   def write(topic: String, df: DataFrame): Unit = write(topic, df, () => ())
 
@@ -407,8 +416,9 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     }
     beforeJob()
     config.format match {
-      case "csv"  => withCompression.option("header", "true").csv(dir)
-      case "json" => withCompression.json(dir)
+      case "csv" | "json" =>
+        withCompression.format(classOf[LineFileFormat].getName)
+          .option("format", config.format).option("header", "true").save(dir)
       // Beyond the reference's csv/json (format/FormatFactory.kt): a
       // columnar sink for lakehouse consumers, with the same flattened
       // record shape and (project, user, bin) layout. `compression: none`

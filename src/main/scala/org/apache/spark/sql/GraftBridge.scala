@@ -3,12 +3,15 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** The package-private Spark calls the engine needs, in one place: a
-  * `Column` over a Catalyst expression no session registered, and a
-  * DataFrame over rows that are already Catalyst rows (no `Row` →
-  * `InternalRow` encoder step). */
+  * `Column` over a Catalyst expression no session registered, a DataFrame
+  * over rows that are already Catalyst rows (no `Row` → `InternalRow`
+  * encoder step), a DataFrame over a logical plan the engine built
+  * itself, and the float normalization grouping applies to its keys. */
 object GraftBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -17,4 +20,9 @@ object GraftBridge {
 
   def createDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

@@ -232,6 +232,41 @@ class CleanerSpec extends SparkSpec {
     assert(reprocess.isEmpty)
   }
 
+  test("a flipped byte inside a gzip part fails the read and the cleaner: its CRC-32 stands in for the .crc") {
+    val dir = Files.createTempDirectory("graft-gzip-flip").toFile
+    val topicDir = new File(dir, "in/phone_light/partition=0")
+    val f1 = new File(topicDir, "phone_light+0+0000000000+0000000049.avro")
+    val f2 = new File(topicDir, "phone_light+0+0000000050.avro")
+    // one hour bin, one part file of 51 lines
+    writeAvro(f1, (0 until 50).map(i => record(1580219940.0 + i, i.toFloat)))
+    writeAvro(f2, Seq(record(1580219999.0, 0f)))
+    val cfg = RestructureConfig(
+      inputDir = new File(dir, "in").toString,
+      outputDir = new File(dir, "out").toString,
+      stateFile = new File(dir, "state/offsets.json").toString,
+      minimumFileAgeMs = 0L)
+    val job = new Restructure(spark, cfg)
+    job.run()
+    val bin = new File(cfg.outputDir, "phone_light/_project=p/_user=u/_bin=20200128_1300")
+    val part = bin.listFiles().filter(_.getName.startsWith("part-")).toSeq match {
+      case Seq(p) => p
+      case ps     => fail(s"one part file expected: $ps")
+    }
+    assert(part.getName.endsWith(".csv.gz"))
+    assert(!bin.listFiles().exists(_.getName.endsWith(".crc")))
+    assert(job.readOutput("phone_light").count() == 51)
+
+    val bytes = Files.readAllBytes(part.toPath)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+    Files.write(part.toPath, bytes)
+    val state = job.loadState().toJson
+    intercept[Exception](job.readOutput("phone_light").count())
+    intercept[Exception](new Cleaner(spark, cfg, ageMs = 0L).run(now = System.currentTimeMillis + 60000))
+    // nothing verified, nothing deleted, nothing readmitted
+    assert(f1.exists() && f2.exists())
+    assert(job.loadState().toJson == state)
+  }
+
   test("cleaner reprocesses when output is missing records") {
     val dir = Files.createTempDirectory("graft-cleaner2").toFile
     val topicDir = new File(dir, "in/phone_light/partition=0")

@@ -1,6 +1,7 @@
 package graft.restructure
 
 import graft.SparkSpec
+import graft.catalyst.KeepFirstExec
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -13,15 +14,16 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, WriteFilesExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.io.File
 import scala.collection.mutable
 
 /** The write job's executed plan: a restructure batch is partitioned by
-  * output file `(_project, _user, _bin)` once, the dedup window's sort is
-  * the only sort the write needs, and the scan carries each file's
-  * constants itself (no broadcast join). */
+  * output file `(_project, _user, _bin)` once, the keep-first dedup's
+  * sort is the only sort the write needs, and the scan carries each
+  * file's constants itself (no broadcast join). */
 class RestructurePlanSpec extends SparkSpec {
 
   /** Every node of `plan`, through AQE's final plan and its query stages. */
@@ -66,6 +68,10 @@ class RestructurePlanSpec extends SparkSpec {
     assert(exchanges(plan).forall(e =>
       e.shuffleOrigin != REBALANCE_PARTITIONS_BY_COL && e.shuffleOrigin != REBALANCE_PARTITIONS_BY_NONE))
     assert(nodes(plan).count(_.isInstanceOf[SortExec]) == 1, plan.treeString)
+    // the dedup streams over the sorted rows: no window copies them again
+    assert(nodes(plan).count(_.isInstanceOf[KeepFirstExec]) == 1, plan.treeString)
+    assert(!nodes(plan).exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[WindowGroupLimitExec]),
+      plan.treeString)
     // per-file constants come from the scan, ids from the byte-loop kernel
     val all = nodes(plan)
     assert(!all.exists(n => n.isInstanceOf[BroadcastHashJoinExec] || n.isInstanceOf[BroadcastExchangeExec]),
@@ -144,9 +150,10 @@ class RestructurePlanSpec extends SparkSpec {
     val job = new Restructure(spark, cfg)
     val plans = writes(cfg.outputDir)(assert(job.run().records == 2))
     assert(plans.size == 1)
-    // one exchange; the writer still sorts its partition on the literal
-    // column, an ordering no plan node below reports
+    // one exchange and one sort: the keep-first sort leads with the
+    // constant _project, so the write's (_project, _user, _bin) order holds
     assert(exchanges(plans.head).size == 1, plans.head.treeString)
+    assert(nodes(plans.head).count(_.isInstanceOf[SortExec]) == 1, plans.head.treeString)
     assert(new File(cfg.outputDir, "keyless/_project=unknown-project/_user=user1").isDirectory)
   }
 

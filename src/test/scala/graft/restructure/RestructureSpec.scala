@@ -476,6 +476,25 @@ class RestructureSpec extends SparkSpec {
     assert(kept == Set((7L, 1), (8L, 0)))
   }
 
+  test("compression zip writes single-entry .zip parts that read back, with no .crc") {
+    for (format <- Seq("csv", "json")) {
+      val (_, base) = setup()
+      val cfg = base.copy(format = format, compression = Some("zip"))
+      val job = new Restructure(spark, cfg)
+      assert(job.run().records == 3)
+      val bin13 = new File(cfg.outputDir,
+        "application_server_status/_project=STAGING_PROJECT/_user=user1/_bin=20200128_1300")
+      val names = bin13.listFiles().map(_.getName)
+      assert(names.exists(_.startsWith("part-")), names.toSeq)
+      assert(names.filter(_.startsWith("part-")).forall(_.endsWith(s".$format.zip")), names.toSeq)
+      assert(!names.exists(_.endsWith(".crc")), names.toSeq)
+      val back = job.readOutput("application_server_status")
+      assert(back.count() == 3, format)
+      assert(back.filter(
+        org.apache.spark.sql.functions.col("`value.serverStatus`") === "CONNECTED").count() == 2)
+    }
+  }
+
   test("restructure: parquet sink keeps the flattened layout and round-trips") {
     val (_, base) = setup()
     val cfg = base.copy(format = "parquet")

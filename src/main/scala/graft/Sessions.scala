@@ -60,13 +60,10 @@ object Sessions {
     * conf, so the first `file://` lookup in a JVM fixes the class: build
     * the session before any such lookup. `FileContext` (streaming
     * checkpoints) binds `file://` to [[graft.fs.NioLocalFs]], the same
-    * filesystem under Hadoop's other API. [[graft.compression.ZipCodec]]
-    * is registered beside the codecs Hadoop finds itself, so `.zip`
-    * output reads back by its extension. */
+    * filesystem under Hadoop's other API. */
   val hadoopConf: Seq[(String, String)] = Seq(
     "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName,
-    "spark.hadoop.io.compression.codecs" -> classOf[graft.compression.ZipCodec].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName)
 
   /** `build` with the core count pinned by the CALLER instead of the
     * environment — for mains whose OUTPUT is a committed artifact that

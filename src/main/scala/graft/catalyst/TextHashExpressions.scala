@@ -193,6 +193,7 @@ case class PslLabels(child: Expression) extends TextHashUnary {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => KeepFirstStrategy)
+    ext.injectQueryPostPlannerStrategyRule(_ => RemoveRedundantPartialKeepFirst)
     def register(name: String, build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),

@@ -11,9 +11,10 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
   * level 7, entry named after the stream). Zip is an archive format, not a
   * split-friendly codec — same caveat as the reference: one file, one entry.
   *
-  * Use as `option("compression", classOf[ZipCodec].getName)` on a writer, or
-  * register under `io.compression.codecs` to make `.zip` readable by
-  * extension.
+  * Use as `option("compression", classOf[ZipCodec].getName)` on a writer
+  * (the restructure job's `compression: zip`). Hadoop's codec factory
+  * finds it through `META-INF/services`, so `.zip` files read back by
+  * their extension.
   */
 final class ZipCodec extends CompressionCodec with Configurable {
   private var conf: Configuration = new Configuration(false)

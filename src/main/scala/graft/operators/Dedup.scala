@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Descending, SortDirection, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortDirection, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -12,14 +11,15 @@ import graft.catalyst.KeepFirst
   *
   * The reference dedups the lines of one output file when it closes. The
   * keep-last and keep-first operators here run over an arbitrary
-  * DataFrame as one [[graft.catalyst.KeepFirst]]: a hash exchange on the
-  * key (none when the input is already clustered on a subset of it), a
-  * sort of every partition by key then order, and one streaming pass that
-  * keeps the first row of each key. A caller scopes them by putting the
-  * scope's columns first in the key, as
-  * [[graft.restructure.Restructure.dedup]] does with the output file
-  * `(_project, _user, _bin)`. They need a session with
-  * [[graft.catalyst.GraftExtensions]], which plans the node.
+  * DataFrame as one [[graft.catalyst.KeepFirst]]: each partition is
+  * sorted by key then order and one streaming pass keeps the first row of
+  * each key, once before a hash exchange on the key (so the exchange
+  * carries one row per key and partition) and once after it. An input
+  * already clustered on a subset of the key gets neither the exchange nor
+  * the first sort and pass. A caller scopes them by putting the scope's
+  * columns first in the key, as [[graft.restructure.Restructure.dedup]]
+  * does with the output file `(_project, _user, _bin)`. They need a
+  * session with [[graft.catalyst.GraftExtensions]], which plans the node.
   */
 object Dedup {
 
@@ -42,17 +42,14 @@ object Dedup {
     keepFirst(df, keys, orderCol, Descending)
 
   /** The first row per `keys` by `orderCol` in `direction` (nulls last
-    * when descending, first when ascending), as one [[KeepFirst]] node. */
+    * when descending, first when ascending), as one [[KeepFirst]] node
+    * whose key and order columns the analyzer resolves against `df`. */
   private def keepFirst(df: DataFrame, keys: Seq[String], orderCol: String,
       direction: SortDirection): DataFrame = {
-    val child = df.queryExecution.analyzed
-    val resolved = df.select(orderableKeys(df, keys) :+ col(orderCol): _*).queryExecution.analyzed match {
-      case Project(list, _) => list.map { case a: Alias => a.child; case e => e }
-      case other => throw new IllegalStateException(s"unexpected key projection: $other")
-    }
-    val order = SortOrder(resolved.last, direction)
-    GraftBridge.ofRows(df.sparkSession,
-      KeepFirst(resolved.init.map(GraftBridge.normalizeFloats), Seq(order), child))
+    def expression(c: Column) = GraftBridge.expression(df.sparkSession, c)
+    val order = SortOrder(expression(col(orderCol)), direction)
+    GraftBridge.ofRows(df.sparkSession, KeepFirst(
+      orderableKeys(df, keys).map(expression), Seq(order), df.queryExecution.analyzed))
   }
 
   /** The key columns for `keys`: each in its [[orderable]] form, so a

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.avro.AvroSource
+import graft.compression.ZipCodec
 import graft.functions.{Strings, Times}
 import graft.operators.{Dedup, Flatten, Intervals}
 import graft.state.{OffsetRangeSet, TopicPartition}
@@ -361,11 +362,10 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
 
   /** S7/S9 — write one topic batch: flatten the payload, partition by
     * (project, user, bin), CSV-with-header or JSON lines, optional gzip.
-    * CSV and JSON go through [[LineFileFormat]], which encodes each row
-    * straight to the bytes Spark's CSV/JSON writers would produce; a gzip
-    * or zip part (`compression: zip` is [[graft.compression.ZipCodec]])
-    * checks its own content and gets no `.crc` sidecar. Parquet stays on
-    * Spark's writer.
+    * CSV goes through [[CsvPartFormat]], Spark's CSV writer over a stream
+    * it opens itself: a gzip or zip CSV part checks its own content and
+    * gets no `.crc` sidecar. JSON and parquet stay on Spark's writers.
+    * `compression: zip` is [[graft.compression.ZipCodec]].
     *
     * The rows are first partitioned by output file ([[byOutputFile]]), so
     * each `(project, user, bin)` dir is written by one task holding one
@@ -411,14 +411,14 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     val writer = config.maxRecordsPerFile
       .fold(writer0)(n => writer0.option("maxRecordsPerFile", n))
     val withCompression = config.compression match {
+      case Some("zip") => writer.option("compression", classOf[ZipCodec].getName)
       case Some(c) => writer.option("compression", c)
       case None    => writer
     }
     beforeJob()
     config.format match {
-      case "csv" | "json" =>
-        withCompression.format(classOf[LineFileFormat].getName)
-          .option("format", config.format).option("header", "true").save(dir)
+      case "csv"  => withCompression.format(classOf[CsvPartFormat].getName).option("header", "true").save(dir)
+      case "json" => withCompression.json(dir)
       // Beyond the reference's csv/json (format/FormatFactory.kt): a
       // columnar sink for lakehouse consumers, with the same flattened
       // record shape and (project, user, bin) layout. `compression: none`

@@ -11,12 +11,18 @@ import org.apache.spark.sql.types.StructType
   * `Column` over a Catalyst expression no session registered, a DataFrame
   * over rows that are already Catalyst rows (no `Row` → `InternalRow`
   * encoder step), a DataFrame over a logical plan the engine built
-  * itself, and the float normalization grouping applies to its keys. */
+  * itself and the columns of such a plan, and the float normalization
+  * grouping applies to its keys. */
 object GraftBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `c` converted as `spark`'s Dataset API converts a column, for a
+    * logical node the engine builds itself. */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
 
   def createDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
@@ -24,5 +30,6 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `NormalizeFloatingNumbers.normalize` is `private[sql]`. */
   def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

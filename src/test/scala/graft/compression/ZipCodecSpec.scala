@@ -1,6 +1,9 @@
 package graft.compression
 
 import graft.SparkSpec
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 
 import java.io.File
 import java.nio.file.Files
@@ -40,5 +43,11 @@ class ZipCodecSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(out)
     assert(back.count() == 3)
     assert(back.columns.toSeq == Seq("id", "v"))
+  }
+
+  test("Hadoop's codec factory finds ZipCodec by extension with no io.compression.codecs entry") {
+    val factory = new CompressionCodecFactory(new Configuration(false))
+    assert(factory.getCodec(new Path("part-00000.csv.zip")).isInstanceOf[ZipCodec])
+    assert(factory.getCodec(new Path("part-00000.csv.gz")) != null)
   }
 }

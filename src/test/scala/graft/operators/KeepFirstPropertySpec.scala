@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.catalyst.KeepFirstExec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -10,7 +13,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * subtle: float NaN and -0.0 (equal to NaN and 0.0), nulls, a float
   * inside a struct, and maps holding the same entries in a different
   * insertion order. */
-class KeepFirstPropertySpec extends SparkSpec {
+class KeepFirstPropertySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val schema = StructType(Seq(
     StructField("d", DoubleType), StructField("s", StringType),
@@ -84,5 +87,17 @@ class KeepFirstPropertySpec extends SparkSpec {
     val df = (0 until 200).map(i => ((i * 37) % 50, i.toLong)).toDF("k", "ord").repartition(4)
     val keys = Dedup.keepLast(df, Seq("k"), "ord").orderBy("k").collect().map(_.getInt(0)).toSeq
     assert(keys == (0 until 50))
+  }
+
+  test("a partial pass runs before the exchange unless the input is already clustered on the keys") {
+    import spark.implicits._
+    val df = (0 until 200).map(i => (i % 10, i.toLong)).toDF("k", "ord")
+    def partial(out: DataFrame): Seq[Boolean] = {
+      out.collect()
+      collect(out.queryExecution.executedPlan) { case k: KeepFirstExec => k.partial }.sorted
+    }
+    assert(partial(Dedup.keepLast(df.repartition(4), Seq("k"), "ord")) == Seq(false, true))
+    assert(partial(Dedup.keepLast(df.repartition(4, col("k")), Seq("k"), "ord")) == Seq(false))
+    assert(kept(Dedup.keepLast(df.repartition(4), Seq("k"), "ord")) == (190L until 200L))
   }
 }

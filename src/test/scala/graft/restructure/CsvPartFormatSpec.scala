@@ -3,23 +3,19 @@ package graft.restructure
 import graft.SparkSpec
 import graft.operators.Flatten
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
-import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import java.io.{ByteArrayOutputStream, File, FileInputStream, InputStream, StringWriter}
+import java.io.{File, FileInputStream, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.zip.{GZIPInputStream, ZipInputStream}
 import scala.util.Random
 
-/** [[LineFileFormat]] writes the bytes Spark's own CSV and JSON writers
-  * write: row by row against Spark's generators over fuzzed values, and
-  * file by file against `DataFrameWriter.csv`/`.json` for each codec. */
-class LineFileFormatParitySpec extends SparkSpec {
+/** [[CsvPartFormat]] writes the files Spark's own CSV writer writes, file
+  * by file against `DataFrameWriter.csv` over fuzzed values for each
+  * codec, with no `.crc` beside a gzip or zip part. */
+class CsvPartFormatSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
     StructField("s", StringType), StructField("i", IntegerType), StructField("l", LongType),
@@ -53,75 +49,6 @@ class LineFileFormatParitySpec extends SparkSpec {
       maybe(string(rnd)))
   }
 
-  private def internal(r: Row): InternalRow = InternalRow.fromSeq(r.toSeq.map {
-    case s: String => UTF8String.fromString(s)
-    case v => v
-  })
-
-  private def encoded(encoder: LineEncoder, rows: Seq[InternalRow]): String = {
-    val bytes = new ByteArrayOutputStream
-    val sink = new ByteSink(bytes)
-    encoder.header(sink)
-    rows.foreach(encoder.row(_, sink))
-    sink.close()
-    new String(bytes.toByteArray, UTF_8)
-  }
-
-  test("CSV rows and header encode as Spark's univocity generator writes them") {
-    for (seed <- 1 to 20) {
-      val rnd = new Random(seed)
-      // fuzzed header names too (empty ones included): the first column's
-      // name is a value in column 0
-      val names = schema.fields.map(f => rnd.nextInt(8) match {
-        case 0 => f.copy(name = "")
-        case n if n < 4 => f.copy(name = string(rnd) + f.name)
-        case _ => f
-      })
-      val fuzzed = StructType(names)
-      val rows = Seq.fill(300)(internal(row(rnd)))
-      val options = new CSVOptions(Map("header" -> "true"), false, "UTC")
-      val spark = new StringWriter
-      val gen = new UnivocityGenerator(fuzzed, spark, options)
-      gen.writeHeaders()
-      rows.foreach(gen.write)
-      gen.flush()
-      val ours = encoded(new CsvEncoder(fuzzed, options), rows)
-      val theirs = spark.toString
-      if (ours != theirs) {
-        val (o, t) = (ours.linesIterator.toSeq, theirs.linesIterator.toSeq)
-        val at = o.zip(t).indexWhere { case (a, b) => a != b }
-        fail(s"seed $seed line $at:\nours   ${o.lift(at).map(escape)}\ntheirs ${t.lift(at).map(escape)}")
-      }
-    }
-  }
-
-  test("JSON rows encode as Spark's Jackson generator writes them") {
-    for (seed <- 1 to 20; ignoreNulls <- Seq("true", "false")) {
-      val rnd = new Random(seed)
-      val names = StructType(schema.fields.map(f => if (rnd.nextBoolean()) f else f.copy(name = string(rnd) + f.name)))
-      val rows = Seq.fill(300)(internal(row(rnd)))
-      val options = new JSONOptions(Map("ignoreNullFields" -> ignoreNulls), "UTC", "")
-      val spark = new StringWriter
-      val gen = new JacksonGenerator(names, spark, options)
-      rows.foreach { r => gen.write(r); gen.writeLineEnding() }
-      gen.flush()
-      val ours = encoded(new JsonEncoder(names, options), rows)
-      val theirs = spark.toString
-      if (ours != theirs) {
-        val (o, t) = (ours.linesIterator.toSeq, theirs.linesIterator.toSeq)
-        val at = o.zip(t).indexWhere { case (a, b) => a != b }
-        fail(s"seed $seed line $at:\nours   ${o.lift(at).map(escape)}\ntheirs ${t.lift(at).map(escape)}")
-      }
-    }
-  }
-
-  private def escape(s: String): String = s.flatMap {
-    case c if c < ' ' || c == 0x7f => f"<${c.toInt}%02x>"
-    case c => c.toString
-  }
-
-  // ------------------------------------------------------------ files
-
   private def open(f: File): InputStream = {
     val in = new FileInputStream(f)
     if (f.getName.endsWith(".gz")) new GZIPInputStream(in)
@@ -143,25 +70,21 @@ class LineFileFormatParitySpec extends SparkSpec {
     }
   }
 
-  /** `df` written by Spark's writer and by [[LineFileFormat]], partitioned
+  /** `df` written by Spark's writer and by [[CsvPartFormat]], partitioned
     * on `p` as a restructure batch is: the same decompressed bytes in
     * every partition dir, and no `.crc` beside a self-checking codec. */
-  private def assertSameFiles(df: DataFrame, format: String, compression: String): Unit = {
-    val dir = Files.createTempDirectory("graft-lines").toFile
+  private def assertSameFiles(df: DataFrame, compression: String): Unit = {
+    val dir = Files.createTempDirectory("graft-csv-parts").toFile
     val (theirs, ours) = (new File(dir, "spark"), new File(dir, "ours"))
+    val codec = if (compression == "zip") classOf[graft.compression.ZipCodec].getName else compression
     def writer = df.repartition(2, col("p")).write.partitionBy("p").option("header", "true")
-      .option("compression", if (compression == "zip") classOf[graft.compression.ZipCodec].getName else compression)
-    format match {
-      case "csv"  => writer.csv(theirs.toString)
-      case "json" => writer.json(theirs.toString)
-    }
-    df.repartition(2, col("p")).write.partitionBy("p").option("header", "true")
-      .option("compression", compression).option("format", format)
-      .format(classOf[LineFileFormat].getName).save(ours.toString)
-    val ext = "." + format + Map("none" -> "", "gzip" -> ".gz", "zip" -> ".zip")(compression)
+      .option("compression", codec)
+    writer.csv(theirs.toString)
+    writer.format(classOf[CsvPartFormat].getName).save(ours.toString)
+    val ext = ".csv" + Map("none" -> "", "gzip" -> ".gz", "zip" -> ".zip")(compression)
     val (a, b) = (contents(theirs, ext), contents(ours, ext))
     assert(a.keySet == b.keySet)
-    for (k <- a.keys) assert(a(k) == b(k), s"$format/$compression $k")
+    for (k <- a.keys) assert(a(k) == b(k), s"$compression $k")
     def crcs(d: File): Seq[File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) crcs(f) else Seq(f).filter(_.getName.endsWith(".crc")))
     val dataCrcs = crcs(ours).filter(_.getName.startsWith(".part-"))
@@ -174,9 +97,9 @@ class LineFileFormatParitySpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema.add("p", StringType))
   }
 
-  for (format <- Seq("csv", "json"); compression <- Seq("none", "gzip", "zip"))
-    test(s"$format files with compression $compression match Spark's writer") {
-      assertSameFiles(fuzzedFrame, format, compression)
+  for (compression <- Seq("none", "gzip", "zip"))
+    test(s"csv files with compression $compression match Spark's writer") {
+      assertSameFiles(fuzzedFrame, compression)
     }
 
   test("map and array payloads: JSON-encoded, CSV layout expansion and its empty fallback") {
@@ -194,7 +117,6 @@ class LineFileFormatParitySpec extends SparkSpec {
     assert(expanded.columns.toSeq == Seq("p", "m.x", "m.y,z", "a.0", "a.1", "a.2"))
     assert(Flatten.csvColumns(payload(empty), Flatten.csvLayout(empty.select("m", "a"))).isEmpty)
     val fallback = empty.select(col("p") +: Flatten.flattenColumns(payload(empty)): _*)
-    for (df <- Seq(jsonEncoded, expanded, fallback); format <- Seq("csv", "json"))
-      assertSameFiles(df, format, "gzip")
+    for (df <- Seq(jsonEncoded, expanded, fallback)) assertSameFiles(df, "gzip")
   }
 }

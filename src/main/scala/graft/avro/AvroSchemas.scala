@@ -61,8 +61,8 @@ object AvroSchemas {
     * BY NAME onto the target: a target field the writer lacks reads as
     * null and a writer field the target lacks is dropped, so a reader
     * pinned to one schema consumes files whose writer schema drifted
-    * additively (the stream reader's situation; the batch path groups
-    * files by fingerprint and passes the writer's own struct). A
+    * additively (a stream's situation; the batch path groups files by
+    * fingerprint, so its target is each file's own struct). A
     * multi-branch union becomes its datum's string rendering when the
     * target is a string, and otherwise resolves the datum's branch and
     * keeps projecting (a union widened after the read schema was pinned).

@@ -4,13 +4,9 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.CollectionAccumulator
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Distributed reader for Avro object-container files (the Kafka-Connect
   * sink output the reference restructures; SURVEY §2.1 S3).
@@ -18,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * spark-avro is not on this classpath, so this is a self-contained source:
   * the unit of parallelism is the FILE (matching the reference's model where
   * a file is one contiguous offset range of a topic-partition), each task
-  * streams one container file and attaches:
+  * reads one container file through the one DSv2 scan ([[AvroTable]],
+  * shared with the stream's [[AvroStreamSource]]) and attaches:
   *   - `_file`: the file path (for filename-metadata extraction, F6)
   *   - `_row_index`: the record's index within its file (deterministic under
   *     retries — file content defines it), which is exactly the reference's
@@ -56,7 +53,7 @@ object AvroSource {
     * deterministic would quarantine a healthy file on a connection reset.
     * Only the validator's own verdict (which is length-aware, see
     * validateContainer) and the unambiguous bad-magic signal qualify. */
-  private def isCorruption(e: Throwable): Boolean = e match {
+  private[avro] def isCorruption(e: Throwable): Boolean = e match {
     case _: CorruptContainerException => true
     case io: java.io.IOException => // DataFileStream's bad-magic signal
       Option(io.getMessage).exists(_.toLowerCase.contains("not an avro data file"))
@@ -279,7 +276,8 @@ object AvroSource {
     } catch { case _: java.io.FileNotFoundException => None }
 
   /** Read a set of same-schema container files into a DataFrame with
-    * `_file` and `_row_index` metadata columns prepended.
+    * `_file` and `_row_index` metadata columns prepended: one
+    * [[AvroTable]] scan, one task per file.
     *
     * `tolerant` turns on the reference's storage fault tolerance
     * (S3SourceStorage.kt:110-136 + FileCache.kt:172-201): each file is
@@ -295,7 +293,7 @@ object AvroSource {
     * streams. */
   def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
            tolerant: Boolean = false, backoffMs: Long = 1000L): DataFrame =
-    read(spark, paths, avroSchema, tolerant, backoffMs, None, None)
+    read(spark, avroSchema, paths.map(AvroFilePartition(_, None)), AvroReading(tolerant, backoffMs, None))
 
   /** Per-file constants a restructure scan appends to every row of a
     * file, as `_partition`, `_start_offset` and `_mtime` (epoch millis,
@@ -303,150 +301,30 @@ object AvroSource {
     * no join attaches them. */
   private[graft] final case class FileConstants(partition: Int, startOffset: Long, mtimeMs: Long)
 
-  /** The columns [[FileConstants]] become, after the payload. `_mtime` is
-    * nullable as the `java.sql.Timestamp` it stands for. */
-  private val ConstantFields: Seq[StructField] = Seq(
-    StructField("_partition", IntegerType, nullable = false),
-    StructField("_start_offset", LongType, nullable = false),
-    StructField("_mtime", TimestampType, nullable = true))
-
-  /** [[read]] that also reports `(path, rows emitted)` into `rowsEmitted`
-    * once per file a task reads to the end: the buffered row count on the
-    * tolerant path, the count at exhaustion on the streaming path (never
-    * from the task-completion close, which also runs after an early stop).
-    * Quarantined, vanished and zero-length files report nothing. Rows carry
-    * `_row_index` 0..n-1, so a reported n is exactly the rows the file
-    * contributed to the job that read it. With `constants` (one entry per
-    * path) every row also carries its file's [[ConstantFields]].
-    *
-    * Records decode straight to Catalyst rows through
-    * [[AvroSchemas.converter]] and the frame is built over them as is,
-    * so each field is converted once. */
-  private[graft] def read(spark: SparkSession, paths: Seq[String], avroSchema: Schema,
-      tolerant: Boolean, backoffMs: Long,
-      rowsEmitted: Option[CollectionAccumulator[(String, Long)]],
-      constants: Option[Map[String, FileConstants]]): DataFrame = {
-    val sparkType = AvroSchemas.toSparkType(avroSchema).asInstanceOf[StructType]
-    val fullSchema = StructType(
+  /** The columns of a scan: `_file`, `_row_index`, the payload, then,
+    * when its files carry [[FileConstants]], `_partition _start_offset
+    * _mtime` (`_mtime` nullable as the `java.sql.Timestamp` it stands
+    * for). */
+  private[graft] def scanSchema(payload: StructType, constants: Boolean): StructType =
+    StructType(
       StructField("_file", StringType, nullable = false) +:
         StructField("_row_index", LongType, nullable = false) +:
-        (sparkType.fields.toSeq ++ constants.fold(Seq.empty[StructField])(_ => ConstantFields)))
-    val width = fullSchema.size
-    val schemaJson = avroSchema.toString
-    // broadcast, as Spark's own file scans do: an executor fetches and
-    // deserializes the conf once, and each task's closure carries a handle
-    val conf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    // one task per file: the file is the reference's unit of offset
-    // accounting AND bounded in size by the upstream sink's flush policy;
-    // each task ships only its own file's constants
-    val files = paths.map(p => (p, constants.map(_(p))))
-    val rdd = spark.sparkContext
-      .parallelize(files, math.max(paths.size, 1))
-      .flatMap { case (path, consts) =>
-        val schema = new Schema.Parser().parse(schemaJson)
-        val convert = AvroSchemas.converter(schema, sparkType)
-        val hp = new org.apache.hadoop.fs.Path(path)
-        val fs = hp.getFileSystem(conf.value.value)
-        def report(n: Long): Unit = rowsEmitted.foreach(_.add((path, n)))
-        val file = UTF8String.fromString(path)
-        def rows(stream: DataFileStream[GenericRecord]): Iterator[InternalRow] = {
-          var i = -1L
-          stream.iterator.asScala.map { rec =>
-            i += 1
-            val out = new Array[Any](width)
-            out(0) = file
-            out(1) = i
-            convert.write(rec, out, 2)
-            consts.foreach { c =>
-              out(width - 3) = c.partition
-              out(width - 2) = c.startOffset
-              out(width - 1) = c.mtimeMs * 1000L
-            }
-            new GenericInternalRow(out): InternalRow
-          }
-        }
-        // zero-length guard (P8); in tolerant mode a vanished file (races
-        // with quarantine when the plan executes more than once) reads as
-        // empty rather than failing the stage
-        val len =
-          try fs.getFileStatus(hp).getLen
-          catch { case _: java.io.FileNotFoundException if tolerant => -1L }
-        if (len <= 0) Iterator.empty
-        else if (!tolerant) {
-          val in = fs.open(hp)
-          val stream = new DataFileStream(in, new GenericDatumReader[GenericRecord](schema))
-          val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-          val close = () =>
-            if (closed.compareAndSet(false, true)) { stream.close(); in.close() }
-          // close on task completion too: AutoCloseIterator only closes on
-          // exhaustion, so an early-terminating consumer (limit, failed or
-          // killed task) would otherwise leak the container stream and its
-          // storage connection — Spark's own file sources register the
-          // same listener
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ =>
-              try close() catch { case _: Exception => () }))
-          new AutoCloseIterator(rows(stream), close, report)
-        } else {
-          try {
-            // FETCH-then-decode: transient IO is confined to the byte
-            // fetch (length-verified, retried). Everything after operates
-            // on complete in-memory bytes, so any failure — structural
-            // invalidity (truncated container, bad sync) OR an
-            // undecodable datum inside a structurally valid block (the
-            // case a stream-based read could not tell apart from a
-            // connection reset) — is a deterministic property of the
-            // bytes and quarantines, the reference's posture
-            // (FileCache.kt:172-201). Buffering one file per task is the
-            // all-or-nothing contract this path already had.
-            val bytes = faultTolerant(backoffMs = backoffMs)(_ => readFullyVerified(fs, hp))
-            // structural check first: DataFileStream reads a truncated
-            // container as a clean short file, so corruption must be
-            // detected at the byte level to be distinguishable. It also
-            // bounds every declared block size by the real file length,
-            // so the decode below cannot be driven into huge allocations
-            if (!validateContainer(() => new java.io.ByteArrayInputStream(bytes), bytes.length))
-              throw new CorruptContainerException(s"invalid avro container: $path")
-            val buffered =
-              try {
-                val stream = new DataFileStream(new java.io.ByteArrayInputStream(bytes),
-                  new GenericDatumReader[GenericRecord](schema))
-                try rows(stream).toVector // all-or-nothing: buffer before emitting
-                finally stream.close()
-              } catch {
-                case e if isCorruption(e) => throw e
-                case scala.util.control.NonFatal(e) =>
-                  throw new CorruptContainerException(
-                    s"undecodable avro container: $path (${e.getMessage})")
-              }
-            report(buffered.size.toLong)
-            buffered.iterator
-          } catch {
-            case _: java.io.FileNotFoundException => Iterator.empty // raced deletion
-            case e if isCorruption(e) =>
-              quarantine(fs, hp) // corrupt container: set it aside, emit nothing
-              Iterator.empty
-            // anything else propagates: Spark retries the task, and a
-            // persistent storage outage fails the job instead of silently
-            // dropping a healthy file's records
-          }
-        }
-      }
-    GraftBridge.createDataFrame(spark, rdd, fullSchema)
-  }
+        (payload.fields.toSeq ++ (if (!constants) Nil else Seq(
+          StructField("_partition", IntegerType, nullable = false),
+          StructField("_start_offset", LongType, nullable = false),
+          StructField("_mtime", TimestampType, nullable = true)))))
 
-  /** Iterator that closes its resource when exhausted, then hands the
-    * number of rows it emitted to `onEnd`. */
-  private final class AutoCloseIterator(it: Iterator[InternalRow], close: () => Unit,
-      onEnd: Long => Unit) extends Iterator[InternalRow] {
-    private var closed = false
-    private var emitted = 0L
-    override def hasNext: Boolean = {
-      val h = it.hasNext
-      if (!h && !closed) { closed = true; close(); onEnd(emitted) }
-      h
-    }
-    override def next(): InternalRow = { val r = it.next(); emitted += 1; r }
+  /** [[read]] of planned files: each reports `(path, rows emitted)` into
+    * `reading.rowsEmitted` once it is read to the end (see
+    * [[AvroPartitionReader]]), and when they carry constants every row also
+    * carries its file's. Rows carry `_row_index`
+    * 0..n-1, so a reported n is exactly the rows the file contributed to
+    * the job that read it. Building the frame starts no Spark job. */
+  private[graft] def read(spark: SparkSession, avroSchema: Schema,
+      files: Seq[AvroFilePartition], reading: AvroReading): DataFrame = {
+    val payload = AvroSchemas.toSparkType(avroSchema).asInstanceOf[StructType]
+    val table = new AvroTable(scanSchema(payload, files.exists(_.constants.isDefined)), () => files, reading)
+    GraftBridge.ofRows(spark,
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()))
   }
 }

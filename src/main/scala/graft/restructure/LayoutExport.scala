@@ -87,28 +87,13 @@ object LayoutExport {
       s"layout export reads gzip or plain csv parts, not ${config.compression.getOrElse("")}")
     val outComp = exportCompression.getOrElse(config.compression).getOrElse("none")
     require(Seq("none", "gzip", "zip").contains(outComp), s"unknown compression: $outComp")
-    val topicDir = new Path(s"${config.outputDir}/$topic")
-    val fs = topicDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(topicDir)) return Seq.empty
-
     // driver: list (project, user, bin, partFiles) — metadata only
-    final case class Bin(project: String, user: String, bin: String, parts: Seq[String])
-    val bins = scala.collection.mutable.ArrayBuffer.empty[Bin]
-    val it = fs.listFiles(topicDir, true)
-    val binPath = ".*/_project=([^/]+)/_user=([^/]+)/_bin=([^/]+)/[^/]+$".r
-    val grouped = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), scala.collection.mutable.ArrayBuffer[String]]
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith("part-")) {
-        val rel = st.getPath.toString
-        rel match {
-          case binPath(p, u, b) => grouped.getOrElseUpdate((p, u, b), scala.collection.mutable.ArrayBuffer.empty) += rel
-          case _                =>
-        }
-      }
+    def value(dir: Path) = dir.getName.substring(dir.getName.indexOf('=') + 1)
+    val bins = new Restructure(spark, config).partFiles(topic).groupBy(_.getParent).toSeq.map {
+      case (bin, parts) =>
+        (value(bin.getParent.getParent), value(bin.getParent), value(bin), parts.map(_.toString))
     }
-    grouped.foreach { case ((p, u, b), parts) => bins += Bin(p, u, b, parts.sorted.toSeq) }
+    if (bins.isEmpty) return Seq.empty
 
     // one task per bin: broadcast, so each executor deserializes the conf once
     val serConf = spark.sparkContext.broadcast(
@@ -119,7 +104,7 @@ object LayoutExport {
       case _      => ".csv"
     }
     spark.sparkContext
-      .parallelize(bins.toSeq.map(b => (b.project, b.user, b.bin, b.parts)), math.max(bins.size, 1))
+      .parallelize(bins, bins.size)
       .map { case (project, user, bin, parts) =>
         val conf = serConf.value.value
         def open(p: String): BufferedReader = {

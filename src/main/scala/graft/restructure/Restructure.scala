@@ -1,12 +1,16 @@
 package graft.restructure
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.avro.AvroSource
+import graft.avro.{AvroFilePartition, AvroReading, AvroSource}
 import graft.compression.ZipCodec
 import graft.functions.{Strings, Times}
 import graft.operators.{Dedup, Flatten, Intervals}
@@ -83,6 +87,33 @@ final case class TopicFile(
     lastModified: Long,
     length: Long)
 
+object TopicFile {
+
+  /** Every sink file under `dir` (recursively), metadata parsed from its
+    * name (F6): the one listing of batch planning and the stream. An
+    * absent dir lists nothing. */
+  def list(fs: FileSystem, dir: Path, topic: String): Seq[TopicFile] = {
+    if (!fs.exists(dir)) return Seq.empty
+    val re = Strings.FilenameRegex.r
+    val out = scala.collection.mutable.ArrayBuffer.empty[TopicFile]
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val s: FileStatus = it.next()
+      if (s.isFile) re.findFirstMatchIn(s.getPath.getName).foreach { m =>
+        out += TopicFile(
+          topic = topic,
+          path = s.getPath.toString,
+          partition = m.group(2).toInt,
+          startOffset = m.group(3).toLong,
+          endOffset = Option(m.group(4)).map(_.toLong),
+          lastModified = s.getModificationTime,
+          length = s.getLen)
+      }
+    }
+    out.toSeq
+  }
+}
+
 /** One writer-schema group of a topic batch as [[Restructure.run]] reads
   * it: the derived frame, the planned files it reads, and the
   * `(path, rows emitted)` its Avro scan reports (see
@@ -138,34 +169,13 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
 
   /** S2 — file listing for one topic with filename metadata (F6), merged
     * across all input roots. */
-  def listFiles(topic: String): Seq[TopicFile] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[TopicFile]
-    val re = Strings.FilenameRegex.r
-    inputRoots.foreach { root =>
+  def listFiles(topic: String): Seq[TopicFile] =
+    inputRoots.flatMap { root =>
       val dir = new Path(root, topic)
       val rfs = fsOf(dir)
-      if (rfs.exists(dir)) {
-        val it = rfs.listFiles(dir, true)
-        while (it.hasNext) {
-          val s: FileStatus = it.next()
-          if (s.isFile && s.getPath.getName.endsWith(".avro")) {
-            re.findFirstMatchIn(s.getPath.getName).foreach { m =>
-              out += TopicFile(
-                topic = topic,
-                path = s.getPath.toString,
-                partition = m.group(2).toInt,
-                startOffset = m.group(3).toLong,
-                endOffset = metadataEndOffset(rfs, s.getPath)
-                  .orElse(Option(m.group(4)).map(_.toLong)),
-                lastModified = s.getModificationTime,
-                length = s.getLen)
-            }
-          }
-        }
-      }
+      TopicFile.list(rfs, dir, topic).map(f =>
+        metadataEndOffset(rfs, new Path(f.path)).fold(f)(e => f.copy(endOffset = Some(e))))
     }
-    out.toSeq
-  }
 
   /** endOffset from storage metadata (see RestructureConfig
     * .endOffsetFromMetadata): one extra metadata read per file, so it only
@@ -225,49 +235,31 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * scan reports — what [[run]] builds the offset ledger from. */
   private[graft] def readBatches(topic: String, files: Seq[TopicFile]): Seq[TopicBatch] = {
     val byPath = files.map(f => f.path -> f).toMap
-    val constants = files.map(f =>
-      f.path -> AvroSource.FileConstants(f.partition, f.startOffset, f.lastModified)).toMap
     AvroSource.schemaGroups(spark, files.map(_.path),
       tolerant = config.faultTolerance, backoffMs = config.retryBackoffMs).map { case (schema, paths) =>
+      val group = paths.map(byPath)
       val rowsRead = spark.sparkContext.collectionAccumulator[(String, Long)]
       // each file's task emits `_partition _start_offset _mtime` itself
-      val df = AvroSource.read(spark, paths, schema,
-        config.faultTolerance, config.retryBackoffMs, Some(rowsRead), Some(constants))
-      val derived = derive(topic, df,
-        "_offset" -> (col("_start_offset") + col("_row_index")))
-        .drop("_start_offset")
-      TopicBatch(topic, derived, paths.map(byPath), rowsRead)
+      val df = AvroSource.read(spark, schema, group.map(AvroFilePartition(_)),
+        AvroReading(config.faultTolerance, config.retryBackoffMs, Some(rowsRead)))
+      TopicBatch(topic, derive(topic, df), group, rowsRead)
     }
   }
 
-  /** Streaming twin of [[readTopic]]'s column derivation: the micro-batch
-    * arrives from [[graft.avro.AvroStreamSource]] with `_file`/`_row_index`
-    * already attached, so partition and offset come from the FILENAME (F6)
-    * instead of a planned-file join, and `_mtime` is the processing time
-    * (the stream's checkpoint, not the mtime state, provides incremental
-    * exactly-once here). */
-  def deriveStream(topic: String, df: DataFrame): DataFrame = {
-    val fname = element_at(split(col("_file"), "/"), -1)
-    derive(topic, df,
-      "_partition" -> Strings.filenamePartition(fname),
-      "_offset" -> (Strings.filenameStartOffset(fname) + col("_row_index")),
-      "_mtime" -> current_timestamp())
-  }
-
-  /** The derived columns both read paths add, in one order: `_topic`, the
-    * caller's `located` columns, then `_project _user _source _time _bin`
-    * from the record's key and event time. */
-  private def derive(topic: String, df: DataFrame, located: (String, Column)*): DataFrame = {
-    val withLocation = located.foldLeft(df.withColumn("_topic", lit(topic))) {
-      case (d, (name, c)) => d.withColumn(name, c)
-    }
-    withLocation
+  /** The derived columns of a topic's Avro scan, batch or stream (the scan
+    * emits each file's `_partition _start_offset _mtime`): `_topic`,
+    * `_offset` = `_start_offset + _row_index` (it replaces
+    * `_start_offset`), then `_project _user _source _time _bin` from the
+    * record's key and event time. */
+  private[graft] def derive(topic: String, df: DataFrame): DataFrame =
+    df.withColumn("_topic", lit(topic))
+      .withColumn("_offset", col("_start_offset") + col("_row_index"))
       .withColumn("_project", sanitized(df, "key.projectId", "unknown-project"))
       .withColumn("_user", sanitized(df, "key.userId", "unknown-user"))
       .withColumn("_source", sanitized(df, "key.sourceId", "unknown-source"))
       .withColumn("_time", Times.eventTime(df))
       .withColumn("_bin", Times.timeBin(col("_time"), config.timeBinFormat))
-  }
+      .drop("_start_offset")
 
   private def sanitized(df: DataFrame, path: String, default: String): Column = {
     val exists = {
@@ -464,7 +456,8 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     * deduplicating whole rows across parts (J4: duplicates can only exist
     * after state loss forces reprocessing — the reference removes them at
     * append time by re-running dedup over the merged file; the read-time
-    * equivalent is a whole-row distinct). */
+    * equivalent is a whole-row distinct). CSV parts are read by their own
+    * headers ([[readCsv]]); JSON and parquet resolve columns by name. */
   def readOutput(topic: String, dedup: Boolean = true): DataFrame = {
     val dir = s"${config.outputDir}/$topic"
     // pathGlobFilter: skip the schema sidecar; partition dirs still resolve
@@ -472,7 +465,7 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
       .option("header", "true")
       .option("pathGlobFilter", "part-*")
     val df = config.format match {
-      case "csv"     => reader.csv(dir)
+      case "csv"     => readCsv(reader, topic)
       case "json"    => reader.json(dir)
       case "parquet" => reader.parquet(dir)
       case other  => throw new IllegalArgumentException(s"unknown format: $other")
@@ -480,14 +473,49 @@ final class Restructure(spark: SparkSession, config: RestructureConfig) {
     if (dedup) df.distinct() else df
   }
 
-  /** Whether the topic's output holds a part file, checked with one glob
-    * over the `(_project, _user, _bin)` layout: [[readOutput]] on a topic
-    * without one fails analysis (no schema to infer). */
-  private[restructure] def hasOutput(topic: String): Boolean = {
+  /** A topic's CSV parts, each read through its own header: after a schema
+    * change the parts carry different headers, and Spark's CSV reader maps
+    * every file onto one header by position. One header reads the dir with
+    * it as a given all-string schema (no header-inference job); several
+    * read each header's files (with `basePath`, so `_project _user _bin`
+    * survive) and union them by name. The reference too checks each output
+    * file against its own header (cleaner/TimestampExtractionCheck.kt:22-78). */
+  private def readCsv(reader: DataFrameReader, topic: String): DataFrame = {
+    val dir = s"${config.outputDir}/$topic"
+    val codecs = new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration)
+    val headed = partFiles(topic).flatMap(p => firstLine(p, codecs).map(_ -> p.toString))
+    val csv = new CSVOptions(CaseInsensitiveMap(Map("header" -> "true")), false,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    def schema(header: String) =
+      StructType(new CsvParser(csv.asParserSettings).parseLine(header).map(StructField(_, StringType)))
+    headed.map(_._1).distinct match {
+      case Seq()       => reader.csv(dir)
+      case Seq(header) => reader.schema(schema(header)).csv(dir)
+      case headers =>
+        headers.map { h =>
+          reader.schema(schema(h)).option("basePath", dir).csv(headed.collect { case (`h`, p) => p }: _*)
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+  }
+
+  /** The first line of a (possibly compressed) part file, if it has one. */
+  private def firstLine(p: Path, codecs: CompressionCodecFactory): Option[String] = {
+    val raw = fsOf(p).open(p)
+    val in = Option(codecs.getCodec(p)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().nextOption() finally in.close()
+  }
+
+  /** The topic's part files in the `(_project, _user, _bin)` layout, by
+    * path, found with one glob. */
+  private[restructure] def partFiles(topic: String): Seq[Path] = {
     val glob = new Path((Seq(s"${config.outputDir}/$topic") ++
       outputFileCols.map(c => s"$c=*") :+ "part-*").mkString("/"))
-    Option(fsOf(glob).globStatus(glob)).exists(_.nonEmpty)
+    Option(fsOf(glob).globStatus(glob)).toSeq.flatten.map(_.getPath).sortBy(_.toString)
   }
+
+  /** Whether the topic's output holds a part file: [[readOutput]] on a
+    * topic without one fails analysis (no schema to infer). */
+  private[restructure] def hasOutput(topic: String): Boolean = partFiles(topic).nonEmpty
 
   /** Schema sidecar (S9): Spark schema JSON written once per topic dir. */
   def writeSidecar(topic: String, df: DataFrame): Unit = {

@@ -631,13 +631,26 @@ object Streaming {
       batchSeam: DataFrame => DataFrame = identity,
       afterWrite: Long => Unit = _ => ()): StreamingQuery = {
     val job = new graft.restructure.Restructure(spark, config)
-    spark.readStream
-      .format("graft.avro.AvroStreamSource")
-      .load(s"${config.inputDir}/$topic")
+    // one source per input root, in the config's order, unioned by name: a
+    // checkpoint keys each source's offsets by its position, so the sources
+    // stay the same when a root gains the topic later. A root without the
+    // topic's files yet reads as an empty source with another root's schema.
+    val dirs = (config.inputDir +: config.extraInputDirs).map(root => s"$root/$topic")
+    val schemas = dirs.map(graft.avro.AvroStreamSource.schemaOf)
+    val fallback = schemas.flatten.headOption.getOrElse(throw new IllegalArgumentException(
+      s"no avro sink files under ${dirs.mkString(", ")} to infer a schema from"))
+    dirs.zip(schemas)
+      .map { case (dir, schema) =>
+        spark.readStream
+          .format("graft.avro.AvroStreamSource")
+          .schema(schema.getOrElse(fallback))
+          .load(dir)
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val derived = job.deriveStream(topic, batchSeam(batch))
+          val derived = job.derive(topic, batchSeam(batch))
           job.writeSidecar(topic, derived)
           job.write(topic, job.dedup(topic, derived))
           afterWrite(batchId)

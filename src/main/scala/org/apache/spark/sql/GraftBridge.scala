@@ -1,18 +1,14 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
 
 /** The package-private Spark calls the engine needs, in one place: a
   * `Column` over a Catalyst expression no session registered, a DataFrame
-  * over rows that are already Catalyst rows (no `Row` → `InternalRow`
-  * encoder step), a DataFrame over a logical plan the engine built
-  * itself and the columns of such a plan, and the float normalization
-  * grouping applies to its keys. */
+  * over a logical plan the engine built itself (a logical node of its own,
+  * or the Avro scan's DSv2 relation) and the columns of such a plan, and
+  * the float normalization grouping applies to its keys. */
 object GraftBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -23,9 +19,6 @@ object GraftBridge {
     * logical node the engine builds itself. */
   def expression(spark: SparkSession, c: Column): Expression =
     spark.asInstanceOf[classic.SparkSession].expression(c)
-
-  def createDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

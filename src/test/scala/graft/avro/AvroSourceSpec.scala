@@ -8,7 +8,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
-import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -154,12 +154,23 @@ class AvroSourceSpec extends SparkSpec {
     conf.set(key, "x" * ballast)
     try {
       val df = AvroSource.read(spark, Seq(file.toString), groups.head._1)
-      val rdds = df.queryExecution.sparkPlan.collect { case s: RDDScanExec => s.rdd }
-      assert(rdds.size == 1)
-      val size = SparkEnv.get.closureSerializer.newInstance().serialize(rdds.head).limit()
-      assert(size < ballast / 16, s"the scan RDD serializes to $size bytes")
+      val factories = df.queryExecution.sparkPlan.collect { case s: BatchScanExec => s.readerFactory }
+      assert(factories.size == 1)
+      val size = SparkEnv.get.closureSerializer.newInstance().serialize(factories.head).limit()
+      assert(size < ballast / 16, s"the scan's reader factory serializes to $size bytes")
       assert(df.count() == 1)
     } finally conf.unset(key)
+  }
+
+  test("a batch read of the stream's table reads every sink file with its constants") {
+    val file = fixture()
+    val rows = spark.read.format("graft.avro.AvroStreamSource").load(file.getParent)
+      .select("_file", "_row_index", "a", "_partition", "_start_offset", "_mtime").collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getString(0).endsWith(file.getName) && r.getLong(1) == 0L && r.getString(2) == "hello")
+    assert(r.getInt(3) == 0 && r.getLong(4) == 0L)
+    assert(r.getTimestamp(5).getTime == file.lastModified())
   }
 
   test("the converter keeps projecting through an additively widened union") {

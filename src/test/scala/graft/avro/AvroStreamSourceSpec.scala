@@ -162,7 +162,11 @@ class AvroStreamSourceSpec extends SparkSpec {
     // field emit null for it — a non-nullable field Catalyst trusts would
     // carry injected nulls into codegen that skips the null checks
     val inferred = graft.avro.AvroStreamSource.schemaFor(s"$dir/t")
-    assert(inferred.fields.drop(2).forall(_.nullable),
+    assert(inferred.fields.drop(2).dropRight(3).forall(_.nullable),
       s"payload fields must be nullable: ${inferred.treeString}")
+    // the file constants the scan appends are never null
+    assert(inferred.fieldNames.takeRight(3).toSeq == Seq("_partition", "_start_offset", "_mtime"))
+    assert(spark.read.parquet(out).select("_partition", "_start_offset", "_mtime")
+      .collect().forall(r => !r.anyNull))
   }
 }

@@ -210,6 +210,42 @@ class FaultToleranceSpec extends SparkSpec {
     // the healthy file's 3 records (dedup off) are all in the output
     assert(job.readOutput("application_server_status", dedup = false).count() == 3)
   }
+
+  test("stream: a truncated file is quarantined, the query completes, the healthy file's rows land") {
+    val (dir, base) = RestructureFixture.setup()
+    val cfg = base.copy(dedupDefault = DedupConfig(enable = false))
+    val topic = "application_server_status"
+    // the same mid-block truncation of the offset-21 file as the batch case
+    val corrupt = new File(dir, s"in/$topic/partition=1/$topic+1+0000000021.avro")
+    RestructureFixture.writeAvro(corrupt,
+      (0 until 200).map(i => RestructureFixture.record(RestructureFixture.t2 + i, s"S$i")))
+    val ch = java.nio.channels.FileChannel.open(corrupt.toPath, StandardOpenOption.WRITE)
+    try ch.truncate(corrupt.length() * 2 / 3) finally ch.close()
+
+    val q = graft.streaming.Streaming.restructureStream(spark, cfg, topic, new File(dir, "cp").toString)
+    q.awaitTermination() // must not throw
+    assert(q.exception.isEmpty)
+    assert(!corrupt.exists())
+    assert(new File(corrupt.getParent, corrupt.getName + ".corrupted").exists())
+    // the healthy file's 3 records (dedup off) are all in the output
+    assert(new Restructure(spark, cfg).readOutput(topic, dedup = false).count() == 3)
+  }
+
+  test("stream: a first file with a damaged header is quarantined and the healthy file streams") {
+    val (dir, base) = RestructureFixture.setup()
+    val cfg = base.copy(dedupDefault = DedupConfig(enable = false))
+    val topic = "application_server_status"
+    // the file the stream would infer its schema from loses its magic
+    val damaged = new File(dir, s"in/$topic/partition=1/$topic+1+0000000018+0000000020.avro")
+    val bytes = Files.readAllBytes(damaged.toPath)
+    bytes(0) = 'X'.toByte
+    Files.write(damaged.toPath, bytes)
+
+    assert(graft.Main.runStream(spark, cfg) == 1)
+    assert(!damaged.exists())
+    assert(new File(damaged.getParent, damaged.getName + ".corrupted").exists())
+    assert(new Restructure(spark, cfg).readOutput(topic, dedup = false).count() == 1)
+  }
 }
 
 /** Test-only filesystem whose open() always throws a transient-looking

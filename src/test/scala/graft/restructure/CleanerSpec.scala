@@ -209,6 +209,55 @@ class CleanerSpec extends SparkSpec {
     assert(!f1.exists() && f2.exists())
   }
 
+  test("output parts of two headers verify through their own headers: both sources are deleted") {
+    // batch 2's writer schema adds value.status before time, so its part
+    // files carry another header than batch 1's in the same bin dirs
+    val statusSchema = new Schema.Parser().parse(
+      """{"type":"record","name":"Envelope","fields":[
+        | {"name":"key","type":{"type":"record","name":"ObservationKey","fields":[
+        |   {"name":"projectId","type":["null","string"],"default":null},
+        |   {"name":"userId","type":"string"},
+        |   {"name":"sourceId","type":"string"}]}},
+        | {"name":"value","type":{"type":"record","name":"Light","fields":[
+        |   {"name":"status","type":"string"},
+        |   {"name":"time","type":"double"},
+        |   {"name":"light","type":"float"}]}}
+        |]}""".stripMargin)
+    def statusRecord(time: Double, light: Float): GenericRecord = {
+      val key = new GenericData.Record(statusSchema.getField("key").schema())
+      key.put("projectId", "p"); key.put("userId", "u"); key.put("sourceId", "s")
+      val value = new GenericData.Record(statusSchema.getField("value").schema())
+      value.put("status", "OK"); value.put("time", time); value.put("light", light)
+      val rec = new GenericData.Record(statusSchema)
+      rec.put("key", key); rec.put("value", value)
+      rec
+    }
+    val dir = Files.createTempDirectory("graft-cleaner-headers").toFile
+    val topicDir = new File(dir, "in/phone_light/partition=0")
+    val f1 = new File(topicDir, "phone_light+0+0000000000+0000000001.avro")
+    val f2 = new File(topicDir, "phone_light+0+0000000002+0000000003.avro")
+    val f3 = new File(topicDir, "phone_light+0+0000000004.avro")
+    writeAvro(f1, Seq(record(1580219940.0, 1f), record(1580219941.0, 2f)))
+    f2.getParentFile.mkdirs()
+    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](statusSchema))
+    w.create(statusSchema, f2)
+    Seq(statusRecord(1580219950.0, 3f), statusRecord(1580219951.0, 4f)).foreach(w.append)
+    w.close()
+    writeAvro(f3, Seq(record(1580219960.0, 5f)))
+    val cfg = RestructureConfig(
+      inputDir = new File(dir, "in").toString,
+      outputDir = new File(dir, "out").toString,
+      stateFile = new File(dir, "state/offsets.json").toString,
+      compression = None,
+      minimumFileAgeMs = 0L)
+    new Restructure(spark, cfg).run()
+    val (deleted, reprocess) = new Cleaner(spark, cfg, ageMs = 0L)
+      .run(now = System.currentTimeMillis + 60000)
+    assert(deleted.map(_.stripPrefix("file:")).toSet == Set(f1.toString, f2.toString))
+    assert(reprocess.isEmpty)
+    assert(!f1.exists() && !f2.exists() && f3.exists())
+  }
+
   test("gzip output: restructure writes .csv.gz parts and cleaner verifies through them") {
     val dir = Files.createTempDirectory("graft-gzip").toFile
     val topicDir = new File(dir, "in/phone_light/partition=0")

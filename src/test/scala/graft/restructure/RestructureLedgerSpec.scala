@@ -174,8 +174,9 @@ class RestructureLedgerSpec extends SparkSpec {
     assert(entries(got) == Seq((0, 10L, 12L, Instant.ofEpochMilli(1000L))))
   }
 
-  /** Completed stages that decoded Avro source files — the stage's RDDs
-    * were built by AvroSource — among the jobs of one job group. */
+  /** Completed stages that decoded Avro source files — the stage reads a
+    * DSv2 scan, and the Avro scan is the only one these jobs run — among
+    * the jobs of one job group. */
   private final class SourceScans(group: String) extends SparkListener {
     private val stages = mutable.Set.empty[Int]
     val scans = mutable.Set.empty[Int]
@@ -185,7 +186,7 @@ class RestructureLedgerSpec extends SparkSpec {
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val s = e.stageInfo
-      if (stages(s.stageId) && s.numTasks > 0 && s.rddInfos.exists(_.callSite.contains("AvroSource")))
+      if (stages(s.stageId) && s.numTasks > 0 && s.rddInfos.exists(_.name == "DataSourceRDD"))
         scans += s.stageId
     }
   }

@@ -8,10 +8,11 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.ListenerBuses
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.catalyst.expressions.RegExpReplace
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, WriteFilesExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -74,6 +75,9 @@ class RestructurePlanSpec extends SparkSpec {
       plan.treeString)
     // per-file constants come from the scan, ids from the byte-loop kernel
     val all = nodes(plan)
+    // the scan is the graft Avro DSv2 scan, not an RDD of rows
+    assert(all.collect { case b: BatchScanExec => b.table.name() } == Seq("graft-avro"), plan.treeString)
+    assert(!all.exists(_.isInstanceOf[RDDScanExec]), plan.treeString)
     assert(!all.exists(n => n.isInstanceOf[BroadcastHashJoinExec] || n.isInstanceOf[BroadcastExchangeExec]),
       plan.treeString)
     assert(!all.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[RegExpReplace])), plan.treeString)
@@ -106,6 +110,16 @@ class RestructurePlanSpec extends SparkSpec {
   test("a one-batch run() starts two jobs: the write's shuffle stage and the write") {
     val (_, cfg) = RestructureFixture.setup()
     assert(scheduled(assert(new Restructure(spark, cfg).run().files == 2))._1 == 2)
+  }
+
+  test("building a batch's frame starts no Spark job") {
+    val (_, cfg) = RestructureFixture.setup()
+    val job = new Restructure(spark, cfg)
+    val files = job.plan("application_server_status", new graft.state.OffsetRangeSet)
+    assert(files.size == 2)
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    assert(scheduled { frames = job.readTopic("application_server_status", files) }._1 == 0)
+    assert(frames.map(_.count()) == Seq(4L))
   }
 
   test("the write stage runs one task per shuffle partition, however small the batch") {

@@ -264,6 +264,84 @@ class RestructureSpec extends SparkSpec {
     assert(r.topics == 2 && r.files == 4)
   }
 
+  test("streaming restructure reads every input root, and a root that gains a topic later") {
+    val (dir, base) = setup()
+    // the batch case's second root: another topic, plus more files for the existing one
+    val in2 = new File(dir, "in2")
+    writeAvro(
+      new File(in2, "application_server_status/partition=1/application_server_status+1+0000000022.avro"),
+      Seq(record(t2 + 60, "EXTRA")))
+    writeAvro(
+      new File(in2, "other_topic/partition=0/other_topic+0+0000000000.avro"),
+      Seq(record(t1, "OTHER")))
+    val cfg = base.copy(extraInputDirs = Seq(in2.toString))
+    val twin = cfg.copy(outputDir = new File(dir, "out-twin").toString,
+      stateFile = new File(dir, "state-twin/offsets.json").toString)
+    def rows(c: RestructureConfig, topic: String) = {
+      val df = new Restructure(spark, c).readOutput(topic, dedup = false)
+      df.select(df.columns.sorted.map(n => org.apache.spark.sql.functions.col(s"`$n`")): _*)
+        .collect().map(_.mkString("|")).sorted.toSeq
+    }
+    def same(): Unit = for (topic <- Seq("application_server_status", "other_topic")) {
+      val streamed = rows(cfg, topic)
+      assert(streamed.nonEmpty && streamed == rows(twin, topic), topic)
+    }
+    assert(graft.Main.runStream(spark, cfg) == 2)
+    assert(new Restructure(spark, twin).run().files == 4)
+    same()
+    assert(rows(cfg, "application_server_status").exists(_.contains("EXTRA")))
+
+    // the first root gains other_topic: its source, empty so far, streams it
+    for (root <- Seq("in", "in2")) writeAvro(
+      new File(dir, s"$root/other_topic/partition=0/other_topic+0+000000000${if (root == "in") 5 else 6}.avro"),
+      Seq(record(t2, s"LATER-$root")))
+    assert(graft.Main.runStream(spark, cfg) == 2)
+    assert(new Restructure(spark, twin).run().files == 2)
+    same()
+    assert(rows(cfg, "other_topic").size == 3)
+  }
+
+  test("CSV output of two writer schemas reads back by column name") {
+    val (dir, cfg) = setup()
+    // a drifted writer: value gains a leading field, which shifts the
+    // position of every later column in the batch's header
+    val drifted = new Schema.Parser().parse(
+      """{"type":"record","name":"Envelope","fields":[
+        | {"name":"key","type":{"type":"record","name":"ObservationKey","fields":[
+        |   {"name":"projectId","type":["null","string"],"default":null},
+        |   {"name":"userId","type":"string"},
+        |   {"name":"sourceId","type":"string"}]}},
+        | {"name":"value","type":{"type":"record","name":"ServerStatus","fields":[
+        |   {"name":"uptime","type":"long"},
+        |   {"name":"time","type":"double"},
+        |   {"name":"serverStatus","type":"string"},
+        |   {"name":"ipAddress","type":["null","string"],"default":null}]}}
+        |]}""".stripMargin)
+    val key = new GenericData.Record(drifted.getField("key").schema())
+    key.put("projectId", "STAGING_PROJECT"); key.put("userId", "user1"); key.put("sourceId", "source1")
+    val value = new GenericData.Record(drifted.getField("value").schema())
+    value.put("uptime", 99L); value.put("time", t2 + 30); value.put("serverStatus", "DRIFTED")
+    val rec = new GenericData.Record(drifted)
+    rec.put("key", key); rec.put("value", value)
+    val f = new File(dir, "in/application_server_status/partition=1/application_server_status+1+0000000022.avro")
+    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](drifted))
+    w.create(drifted, f)
+    w.append(rec)
+    w.close()
+
+    val job = new Restructure(spark, cfg)
+    assert(job.run().files == 3)
+    import spark.implicits._
+    val back = job.readOutput("application_server_status", dedup = false)
+      .select($"`value.serverStatus`", $"`value.time`", $"`value.uptime`", $"_bin")
+      .as[(String, String, String, String)].collect().sortBy(r => (r._2, r._1)).toSeq
+    assert(back == Seq(
+      ("CONNECTED", t1.toString, null, "20200128_1300"),
+      ("CONNECTED", t2.toString, null, "20200128_1400"),
+      ("DISCONNECTED", t2.toString, null, "20200128_1400"),
+      ("DRIFTED", (t2 + 30).toString, "99", "20200128_1400")))
+  }
+
   test("restructure: late file appends to an existing bin") {
     val (dir, cfg) = setup()
     val job = new Restructure(spark, cfg)

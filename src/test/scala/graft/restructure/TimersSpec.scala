@@ -65,6 +65,20 @@ class TimersSpec extends SparkSpec {
     } finally Timers.enabled = false
   }
 
+  test("the restructure write phase reports the records its Avro scan read") {
+    Timers.reset()
+    Timers.enabled = false
+    val (_, cfg) = RestructureFixture.setup()
+    try {
+      val job = new Restructure(spark, cfg.copy(enableTimers = true))
+      job.run()
+      val ledgered = job.loadState().entries.map { case (_, r) => r.to - r.from + 1 }.sum
+      assert(ledgered == 4)
+      // the scan's tasks count their input records, as Spark's own scans do
+      assert(Timers.timings("restructure.write").inputRecords == ledgered)
+    } finally Timers.enabled = false
+  }
+
   test("a labelled shuffle job carries its stage, shuffle and memory metrics") {
     Timers.reset()
     Timers.enabled = true
